@@ -39,10 +39,13 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     plan has fewer partitions — round-robin by default, hash-partitioned
     on ``key`` when given.
 
-    Pass ``key`` when the caller's next wide operator groups by ``key``
-    (or a superset of it): hash partitioning on a grouping-key subset
-    satisfies the aggregate's required distribution, so the groupBy reuses
-    THIS exchange instead of adding its own (guide §2.4 — one exchange
+    ``key`` must be near-unique (a row id): hash partitioning puts every
+    row of one key value in one partition, so a skewed or low-cardinality
+    key concentrates the rows this guard exists to spread. Pass it when
+    the caller's next wide operator groups by ``key`` (or a superset of
+    it): hash partitioning on a grouping-key subset satisfies the
+    aggregate's required distribution, so the groupBy reuses THIS
+    exchange instead of adding its own (guide §2.4 — one exchange
     where round-robin forced two). ``ivf_assign`` keys by the vector id
     (its argmin groupBy is on the id) and ``pq_subvectors`` likewise (the
     codeword argmin groups by (id, s), and the downstream ADC aggregate by

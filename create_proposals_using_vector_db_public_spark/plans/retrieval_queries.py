@@ -339,19 +339,15 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = d.select(
         "doc_id", F.explode(T.tokens("text")).alias("term")
     ).localCheckpoint(eager=False)
-    # Corpus statistics ONCE (round 14, guide §5 reuse / VERDICT r13
-    # item 2): the per-doc length table and its (avgdl, n_docs) summary
-    # are identical for the seed pass, the expansion mining, and the
-    # final pass — before this the dl aggregate ran three times over the
-    # checkpointed postings. dl is |docs| rows (bounded like the postings
-    # checkpoint below); the 1-row stats recompute from materialized dl
-    # per consumer, which is trivial.
-    # NOT checkpointed: the three dl consumers sit on identical canonical
-    # aggregate subtrees over the checkpointed postings, so exchange reuse
-    # collapses their shuffles, while a checkpoint here serializes a
-    # barrier AQE otherwise overlaps (measured: checkpointed dl 5.0 s vs
-    # shared-lazy dl — see OPTIMIZATION_r14.md; same trap as the rejected
-    # q_e2e_rag subtree checkpoints in round 13).
+    # Corpus statistics are built once: the per-doc length table and its
+    # (avgdl, n_docs) summary are shared by the seed pass, the expansion
+    # mining and the final pass. dl is |docs| rows (bounded like the
+    # postings checkpoint below); the 1-row stats recompute from dl per
+    # consumer, which is trivial.
+    # dl is NOT checkpointed: its three consumers plan the same aggregate
+    # subtree over the checkpointed postings, so exchange reuse runs its
+    # shuffle once. A checkpoint here would add a barrier job that AQE
+    # otherwise overlaps with the neighbouring stages, and measured slower.
     dl = terms.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     prf = (

@@ -12,35 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
 
 from ..functions.money import money_double
-from ..sources.tables import load_events
+from ..sources.tables import _parquet_schema, load_events
 from ..streaming import available_now_to_memory, stream_parquet, watermark_dedup
 from .registry import query
-
-
-def _events_schema(ts_type: str) -> StructType:
-    # ts arrives as raw bigint nanos on Spark ≤4.0 (nanosAsLong) and as
-    # TIMESTAMP_NTZ on 4.1+ — mirror whatever the batch reader produced.
-    ts_field = LongType() if ts_type == "bigint" else TimestampNTZType()
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_field),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,13 +52,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.lexists(link):
         os.symlink(target, link)
 
-    # Probe the batch reader once to learn this Spark's nanos mapping;
-    # load_events also pins the UTC session timezone + legacy conf.
+    # load_events pins the UTC session timezone + legacy nanos conf and
+    # stores the batch reader's inferred schema; the stream reads the file
+    # with that same schema, so `ts` arrives as raw bigint nanos on Spark
+    # ≤4.0 (nanosAsLong) and as TIMESTAMP_NTZ on 4.1+, like the batch read.
     load_events(spark, sf_dir)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = dict(batch.dtypes)["ts"]
-    raw = stream_parquet(spark, stage, _events_schema(ts_type))
-    if ts_type == "bigint":
+    schema = _parquet_schema(spark, target)
+    raw = stream_parquet(spark, stage, schema)
+    if schema["ts"].dataType.simpleString() == "bigint":
         # FLOOR division (pmod is non-negative) — same pre-epoch-safe
         # conversion as sources/tables.py load_events; bare `div`
         # truncates toward zero and diverges by 1µs for negative ts

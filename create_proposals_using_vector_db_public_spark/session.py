@@ -9,6 +9,10 @@ with cluster-scale behavior in mind:
 - Arrow on (pandas_udf paths transfer columnar batches, not pickled rows),
 - modest shuffle partitions locally; on a real cluster this would be
   ~2-3x total cores or left to AQE's coalescing.
+
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` size the local session; when
+unset, it takes the cores this process may run on and half of physical
+memory, at most 24 GB.
 """
 
 from __future__ import annotations
@@ -18,13 +22,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_mem() -> str:
+    """Half of physical memory, capped at 24 GB."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24 * 1024, total // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "create-proposals-spark",
     shuffle_partitions: int | None = None,
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -36,7 +46,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         # The hash-heavy operators (MinHash/SimHash/stub-embed) generate
         # large whole-stage-codegen classes; the JVM's default 240 MB code
         # cache fills over a long session and HotSpot silently falls back to

@@ -36,7 +36,9 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the engine is imported from this checkout, not from wherever it runs
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from create_proposals_using_vector_db_public_spark.plans import ORACLES, QUERIES
 from create_proposals_using_vector_db_public_spark.session import get_spark
@@ -197,6 +199,11 @@ def main() -> int:
             return 2
         names = list(QUERIES)[:prefix]
         print(f"checking the driver's {prefix}-entry registry prefix")
+    # the Spark JVM passes its PYTHONPATH on to the Python workers of UDF
+    # and pickle queries, so the root must be on it before the session starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(
         "parity", shuffle_partitions=partitions, extra_conf=extra_conf or None
     )
