@@ -105,7 +105,12 @@ def available_now_to_parquet(
     (``app_callapi.py:165-174``): run once, stop; run again later from the
     SAME checkpoint and only files that arrived in between are processed
     (the checkpointed file log replaces ``doc_hash.pkl``). Exactly-once per
-    file across runs."""
+    file across runs.
+
+    The query takes the session's ``spark.sql.shuffle.partitions`` as is:
+    the checkpoint fixes the state partition count for every later run, so
+    a cap sized to one host would bind all later runs (contrast
+    ``available_now_to_memory``)."""
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", out_path)
@@ -131,22 +136,49 @@ def available_now_to_memory(
     """Run a streaming DataFrame to completion with Trigger.AvailableNow
     into an in-memory table and return the batch result — the one-shot
     session-scan semantics of the reference (R28), used by tests and the
-    rows-only streaming queries."""
+    rows-only streaming queries.
+
+    The query runs with ``spark.sql.shuffle.partitions`` capped at the
+    session's ``defaultParallelism``. Streams turn AQE off, so every
+    stateful operator gets one state store per shuffle partition however
+    small the input, and each store costs a load, a delta-file write and a
+    task. The cap is safe only here: the checkpoint is temporary and
+    discarded, so the state partition count it fixes is never reused.
+    ``start()`` copies the session conf into the query's own session, and
+    the previous value is restored as soon as ``start()`` returns or
+    raises. A concurrent builder in the same session can read the capped
+    value during ``start()``; that cannot change its results, which do not
+    depend on the partition count (the ``tools/parity.py --partitions``
+    sweep checks this).
+
+    The memory sink's temp view is dropped once the result is resolved, so
+    calls leave no view behind in the session; the sink's rows live as
+    long as the returned DataFrame, which still reads them."""
+    spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    key = "spark.sql.shuffle.partitions"
+    previous = spark.conf.get(key)
+    spark.conf.set(
+        key, str(min(int(previous), spark.sparkContext.defaultParallelism))
     )
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, previous)
     if not q.awaitTermination(timeout_sec):
         q.stop()
         raise TimeoutError(
             f"available_now_to_memory did not finish within {timeout_sec}s"
         )
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # --- streaming upsert into a versioned parquet store -------------------------
@@ -276,7 +308,10 @@ def stream_upsert_to_versioned(
     table_dir is assumed, as in any file-pointer-committed store; the
     version read and the commit number derive from ONE pointer read so a
     violated assumption loses at most the slower writer's commit, never
-    a half-written snapshot."""
+    a half-written snapshot.
+
+    The query takes the session's ``spark.sql.shuffle.partitions`` as is,
+    for the reason ``available_now_to_parquet`` gives."""
     if keep_versions is not None and keep_versions < 1:
         # 0 would delete the snapshot just committed and brick the table
         raise ValueError("keep_versions must be >= 1 (or None to keep all)")

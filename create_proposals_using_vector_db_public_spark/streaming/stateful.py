@@ -98,7 +98,11 @@ def run_update_to_parquet(
     a batch retried after a sink-write-then-checkpoint-crash rewrites the
     same directory instead of appending duplicate rows — the idempotence
     contract foreachBatch file sinks need. Readers scan out_path and see
-    batch as a partition column."""
+    batch as a partition column.
+
+    The query takes the session's ``spark.sql.shuffle.partitions`` as is:
+    the checkpoint fixes the state partition count for every later run, so
+    a cap sized to one host would bind all later runs."""
     q = (
         stream_df.writeStream.foreachBatch(
             lambda df, bid: df.write.mode("overwrite").parquet(

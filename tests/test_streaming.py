@@ -24,6 +24,7 @@ SCHEMA = StructType(
         StructField("ts", TimestampType()),
     ]
 )
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
@@ -387,14 +388,164 @@ def test_events_stream_accepts_relative_sf_dir(spark):
     streaming query silently drains 0 rows. Caught at sf1: parity with
     `.localdata/sf1` returned spark=0 for all 7 streaming queries while
     the same data via an absolute path passed."""
-    sf_abs = "/root/testdata/sf0.001"
-    if not os.path.isdir(sf_abs):
+    if not os.path.isdir(SF):
         pytest.skip("driver testdata absent")
     from create_proposals_using_vector_db_public_spark.plans import QUERIES
 
     # relative to the session cwd (Spark's JVM resolves batch reads there,
     # so those worked all along; only the /tmp symlink target broke)
-    rel = os.path.relpath(sf_abs, os.getcwd())
+    rel = os.path.relpath(SF, os.getcwd())
     assert not os.path.isabs(rel)
     n = QUERIES["q_stream_dedup"](spark, rel).count()
     assert n > 0
+
+
+# --- one-shot memory runs: partition cap, view cleanup, oracle parity --------
+
+PARTS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture()
+def partitions(spark, request):
+    """Run the test with the session at ``request.param`` shuffle
+    partitions; the previous value is restored afterwards."""
+    before = spark.conf.get(PARTS)
+    spark.conf.set(PARTS, str(request.param))
+    yield request.param
+    spark.conf.set(PARTS, before)
+
+
+@pytest.fixture()
+def started(monkeypatch):
+    """Every StreamingQuery that ``DataStreamWriter.start`` returns."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    queries = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        queries.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return queries
+
+
+def _state_partitions(query) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def _events_stream_of(spark, d):
+    """A file stream over 12 events of 3 types, written to ``d``."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 0, 30, 0)
+    rows = [(f"f{i % 3}", "x", t0 + dt.timedelta(minutes=37 * i)) for i in range(12)]
+    df = (
+        spark.createDataFrame(rows, SCHEMA)
+        .withColumn("value", F.lit(1.0))
+        .withColumn("event_type", F.col("file_name"))
+    )
+    df.coalesce(1).write.parquet(d)
+    return spark.readStream.format("parquet").schema(df.schema).load(d)
+
+
+@pytest.mark.parametrize("partitions", [2, 9], indirect=True)
+def test_memory_run_caps_state_partitions_at_parallelism(
+    spark, watch_dir, partitions, started
+):
+    stream = _events_stream_of(spark, f"{watch_dir}/events")
+    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    out = S.available_now_to_memory(win, output_mode="complete")
+    assert sum(r["cnt"] for r in out.collect()) == 12
+    (q,) = started
+    cap = min(partitions, spark.sparkContext.defaultParallelism)
+    assert _state_partitions(q) == {cap}
+    assert spark.conf.get(PARTS) == str(partitions)
+
+
+@pytest.mark.parametrize("partitions", [2, 9], indirect=True)
+def test_memory_run_restores_partitions_when_start_raises(
+    spark, watch_dir, partitions
+):
+    from pyspark.errors import AnalysisException
+
+    stream = _events_stream_of(spark, f"{watch_dir}/events")
+    # append mode needs a watermark on a streaming aggregation
+    agg = stream.groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        S.available_now_to_memory(agg, output_mode="append")
+    assert spark.conf.get(PARTS) == str(partitions)
+
+
+@pytest.mark.parametrize("partitions", [9], indirect=True)
+def test_parquet_run_keeps_session_partitions(
+    spark, watch_dir, tmp_path, partitions, started
+):
+    """The persistent checkpoint fixes the state partition count for every
+    later run, so the parquet runner takes the session value uncapped."""
+    stream = _events_stream_of(spark, f"{watch_dir}/events")
+    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    flat = win.select(F.col("win.start").alias("w_start"), "event_type", "cnt")
+    S.available_now_to_parquet(
+        flat, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    (q,) = started
+    assert _state_partitions(q) == {9}
+
+
+def test_memory_run_leaves_no_temp_view(spark, watch_dir):
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    stream = _events_stream_of(spark, f"{watch_dir}/events")
+    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    out = S.available_now_to_memory(win, output_mode="complete")
+    assert temp_views() == before
+    # the frame still reads the sink's rows after the view is gone
+    assert out.count() > 0
+    assert out.agg(F.sum("cnt")).first()[0] == 12
+
+
+MEMORY_RUN_QUERIES = [
+    "q_stream_tumbling",
+    "q_stream_sliding",
+    "q_stream_session",
+    "q_stream_join",
+    "q_stream_dedup",
+    "q_stream_stream_join",
+    "q_stream_stateful",
+    "q_pickle_stream",
+]
+
+
+@pytest.fixture(scope="module")
+def duck():
+    if not os.path.isdir(SF):
+        pytest.skip("driver testdata absent")
+    from tools.parity import duck_connect
+
+    con = duck_connect(SF)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("partitions", [9], indirect=True)
+@pytest.mark.parametrize("name", MEMORY_RUN_QUERIES)
+def test_memory_run_queries_match_oracle(spark, duck, partitions, name):
+    """Every query that runs a stream into memory equals its DuckDB oracle
+    exactly with the session above its parallelism, so the cap is in
+    effect."""
+    from tools.parity import compare
+
+    from create_proposals_using_vector_db_public_spark.plans import ORACLES, QUERIES
+
+    got = QUERIES[name](spark, SF).toPandas()
+    assert len(got) > 0
+    assert compare(name, got, duck.sql(ORACLES[name]).df(), exact=True) == []
