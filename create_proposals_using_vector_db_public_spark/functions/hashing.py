@@ -50,13 +50,6 @@ def hash_mod(col: Column | str, m: int, seed: int | str | None = None) -> Column
     return h64(col, seed) % F.lit(m)
 
 
-def hash_bit(col: Column | str, bit: int, seed: int | str | None = None) -> Column:
-    """Pseudo-random bit b in [0, 32): high bit of the (b+1)-th hex nibble of
-    md5 — portable because hex chars order '0'-'9' < 'a'-'f' in both engines."""
-    nib = F.substring(md5_hex(col, seed), bit + 1, 1)
-    return (nib >= F.lit("8")).cast("int")
-
-
 # ---- DuckDB SQL mirrors (text generators for plans/*.py oracles) ----
 
 def d_seeded(col: str, seed: int | str | None) -> str:
@@ -75,6 +68,3 @@ def d_h64(col: str, seed: int | str | None = None,
 def d_hash_mod(col: str, m: int, seed: int | str | None = None) -> str:
     return f"({d_h64(col, seed)} % {m})"
 
-
-def d_hash_bit(col: str, bit: int, seed: int | str | None = None) -> str:
-    return f"CAST(substr({d_md5(col, seed)}, {bit + 1}, 1) >= '8' AS INTEGER)"

@@ -12,15 +12,13 @@ All helpers cast elements to double first: the source columns are
 ``array<float>`` and float-typed lambda arithmetic would accumulate float32
 rounding that diverges from any double-based oracle.
 
-Construction cost (round-13 measurement): every helper accepts either a
-``Column`` or a **SQL fragment string**. The Column path builds each lambda
-via ~40 py4j round-trips (measured 52 ms per ``l2_dist`` on this box — the
-dominant cost of whole queries that build distance expressions in loops);
-the string path assembles the identical expression as ONE ``F.expr`` parse
-(~1 ms). Both paths produce the same analyzed expression tree — same
-operations in the same order, so float results are bit-identical and the
-DuckDB oracles are untouched. Hot operators pass fragment strings; the
-Column path remains for arbitrary caller-built expressions.
+Each expression is built one way: an ``s_*`` function returns its SQL
+fragment text, and the Column helper of the same name is
+``F.expr(s_*(...))`` — one parse instead of a py4j round-trip per lambda
+node. Inputs are ``str``: a column name or another fragment, so fragments
+compose (``l2_dist(s_as_double_array("embedding"), s_vec_lit(q))``).
+The DuckDB oracles in ``plans.duck`` mirror these fragments operation for
+operation (same order, sequential reduction), so float results match.
 """
 
 from __future__ import annotations
@@ -29,11 +27,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# ---- SQL-fragment text generators (string fast path) ----
-#
-# Each s_* mirrors the Column form below TERM FOR TERM (same operations,
-# same order — float algebra must not drift between the two paths).
 
 
 def s_as_double_array(a: str) -> str:
@@ -84,69 +77,33 @@ def s_vec_lit(values: Sequence[float]) -> str:
     )
 
 
-def _both_sql(*cols: Column | str) -> bool:
-    return all(isinstance(c, str) for c in cols)
+def as_double_array(a: str) -> Column:
+    return F.expr(s_as_double_array(a))
 
 
-def as_double_array(col: Column | str, sql: bool = False) -> Column | str:
-    """``sql=True`` (with a string input) returns the FRAGMENT, for callers
-    composing larger string expressions; default returns a Column."""
-    if isinstance(col, str):
-        frag = s_as_double_array(col)
-        return frag if sql else F.expr(frag)
-    return F.transform(col, lambda x: x.cast("double"))
+def dot(a: str, b: str) -> Column:
+    return F.expr(s_dot(a, b))
 
 
-def vec_lit(values: Sequence[float]) -> Column:
-    """A literal vector as an array<double> Column (one expr parse)."""
-    return F.expr(s_vec_lit(values))
+def l2_norm(a: str) -> Column:
+    return F.expr(s_l2_norm(a))
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_dot(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def l2_dist_sq(a: str, b: str) -> Column:
+    return F.expr(s_l2_dist_sq(a, b))
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(s_l2_norm(a))
-    return F.sqrt(dot(a, a))
+def l2_dist(a: str, b: str) -> Column:
+    return F.expr(s_l2_dist(a, b))
 
 
-def l2_dist_sq(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_l2_dist_sq(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_dist(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_l2_dist(a, b))
-    return F.sqrt(l2_dist_sq(a, b))
-
-
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
+def cosine_sim(a: str, b: str) -> Column:
     """Cosine similarity; NULL when either norm is zero (the reference's
     zero-vector rows for empty text, ``app_callapi.py:112``, would otherwise
     divide by zero)."""
-    if _both_sql(a, b):
-        return F.expr(s_cosine_sim(a, b))
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0.0, dot(a, b) / denom)
+    return F.expr(s_cosine_sim(a, b))
 
 
-def normalize(a: Column | str) -> Column:
+def normalize(a: str) -> Column:
     """L2-normalize; zero vectors pass through unchanged."""
-    if isinstance(a, str):
-        return F.expr(s_normalize(a))
-    n = l2_norm(a)
-    return F.when(n != 0.0, F.transform(a, lambda x: x / n)).otherwise(a)
+    return F.expr(s_normalize(a))

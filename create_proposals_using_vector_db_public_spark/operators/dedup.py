@@ -29,6 +29,8 @@ by AQE skew-join splitting, and the signature pass is whole-stage codegen.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -190,12 +192,11 @@ def with_minhash_signature(
     return df.join(sigs, on=id_col, how="left")
 
 
-def band_key(sig_cols: list[Column | str], band: int, bands: int = MINHASH_BANDS) -> Column:
-    """LSH band bucket id: md5 of the band's signature slice."""
+def band_key(sig_cols: list[str], band: int, bands: int = MINHASH_BANDS) -> Column:
+    """LSH band bucket id: md5 of the band's signature-column slice."""
     r = len(sig_cols) // bands
-    cols = [F.col(c) if isinstance(c, str) else c for c in sig_cols]
-    parts = cols[band * r : (band + 1) * r]
-    return F.md5(F.concat_ws(":", *[p.cast("string") for p in parts]))
+    parts = sig_cols[band * r : (band + 1) * r]
+    return F.md5(F.concat_ws(":", *[F.col(c).cast("string") for c in parts]))
 
 
 def lsh_candidate_pairs(
@@ -514,48 +515,6 @@ SIMHASH_MIX = (
 )
 
 
-def simhash(
-    text_col: Column | str,
-    bits: int = 32,
-    shingle_words: int | None = 3,
-) -> Column:
-    """Unweighted SimHash: bit b is set when more than half the distinct
-    features hash to 1 at bit b. Row-local (no shuffle): each bit is a
-    filtered count over the feature array. Bits beyond 32 draw from
-    independently-seeded md5 hashes (seed = b div 32), so any width up to
-    63 (the positive range of one BIGINT) is honest — bit 40 is NOT a
-    copy of bit 8. Default stays 32: each extra bit duplicates the
-    feature expression (codegen cost), and the production path is the
-    aggregated :func:`simhash_signatures` anyway.
-
-    Features default to 3-word shingles rather than raw tokens: on corpora
-    with a small shared vocabulary (like the fixture docs) token SETS are
-    nearly identical across documents and token-SimHash degenerates — every
-    pair collides. Shingle sets stay diverse."""
-    if not 1 <= bits <= 63:
-        raise ValueError("row-local simhash packs into one BIGINT: 1..63 bits")
-    feats = (
-        T.word_shingles(text_col, shingle_words)
-        if shingle_words
-        else T.tokens(text_col)
-    )
-    toks = F.array_distinct(feats)
-    n = F.size(toks)
-
-    def bit_test(b: int):
-        # single-arg lambda on purpose — see _seeded_hasher
-        seed = (b // 32) or None  # None keeps bits 0-31 the historical draw
-        return lambda t: H.hash_bit(t, b % 32, seed=seed) == 1
-
-    bit_exprs = []
-    for b in range(bits):
-        ones = F.size(F.filter(toks, bit_test(b)))
-        bit_exprs.append(
-            F.when(ones * 2 > n, F.lit(1).cast("bigint") * (2 ** b)).otherwise(0)
-        )
-    return sum(bit_exprs).cast("bigint")
-
-
 def simhash_words(bits: int = SIMHASH_BITS) -> int:
     """Number of 32-bit words (sh0, sh1, ...) a signature packs into."""
     return (bits + 31) // 32
@@ -571,13 +530,11 @@ def simhash_signatures(
     """SimHash per document: integer shingle hashes (see
     :func:`shingle_hashes_exploded`) → distinct per doc → one affine mix
     per 31-bit draw → per-bit conditional counts in one partial+final
-    aggregation. The row-local :func:`simhash` column duplicates the
-    feature expression per bit (codegen blowup); this form hashes each
-    word exactly once at any supported width. Width is capped at
-    31 x len(SIMHASH_MIX) bits (155 with the published 5-draw family —
-    covering the 128-bit config); past the cap the function fails loudly
-    rather than silently correlating bits. To extend, follow the
-    EXTENSION RULE documented at SIMHASH_MIX.
+    aggregation. Each word is hashed exactly once at any supported
+    width. Width is capped at 31 x len(SIMHASH_MIX) bits (155 with the
+    published 5-draw family — covering the 128-bit config); past the cap
+    the function fails loudly rather than silently correlating bits. To
+    extend, follow the EXTENSION RULE documented at SIMHASH_MIX.
 
     Output: ``(id_col, sh0[, sh1, ...])`` — one non-negative 32-bit word
     per column (bit b lives in word b div 32). Packing into 32-bit words
@@ -585,13 +542,7 @@ def simhash_signatures(
     band extraction (div/mod) and Hamming (xor + bit_count) never touch a
     sign bit on either engine. Global bit b draws local bit (b mod 31) of
     draw (b div 31) — each draw an independent affine mix mod 2^31-1
-    (SIMHASH_MIX), which is what makes the advertised width honest.
-
-    NOT bit-compatible with the row-local :func:`simhash`: the two draw
-    feature bits from different hash families (md5 nibbles of shingle
-    strings vs affine mixes of integer shingle hashes), so signatures
-    from one form must never be Hamming-compared against the other —
-    pick one form per stored corpus."""
+    (SIMHASH_MIX), which is what makes the advertised width honest."""
     ndraws = (bits + SIMHASH_BITS_PER_DRAW - 1) // SIMHASH_BITS_PER_DRAW
     if ndraws > len(SIMHASH_MIX):
         raise ValueError(
@@ -795,98 +746,61 @@ def embedding_near_dup_pairs(
     return out.distinct()
 
 
+def _sign_bits(vec: str, predicates: Iterable[str]) -> Column:
+    """One sign character per plane, concatenated: '1' when the plane's
+    projection of ``vec`` is >= 0, else '0'. A plane's projection is the
+    left-to-right double sum of the elements, each taken as +x when the
+    plane's predicate on the element index ``i`` holds and -x otherwise.
+    ``vec`` is a column name or SQL fragment; the whole block is one
+    expression parse."""
+    signs = []
+    for pred in predicates:
+        proj = (
+            f"aggregate(zip_with({vec}, "
+            f"sequence(0, size({vec}) - 1), "
+            f"(x, i) -> CASE WHEN {pred} "
+            f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
+            f"0D, (acc, x) -> acc + x)"
+        )
+        signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
+    return F.expr("concat(" + ", ".join(signs) + ")")
+
+
 def hashed_hyperplane_bucket(
-    vec_col: Column | str, band: int, n_planes: int = 6
+    vec_col: str, band: int, n_planes: int = 6
 ) -> Column:
     """Pseudo-random-hyperplane LSH bucket for one band: sign bits of
     ``n_planes`` projections whose ±1 pattern per (global plane p,
-    element i) is the LCG bit ``(i*1103515245 + p*12345) // 65536 % 2``.
+    element i) is the LCG bit ``(i*1103515245 + p*12345) // 65536 % 2``
+    (+1 when it is 0), for p = band*n_planes .. band*n_planes+n_planes-1.
 
     Unlike random_hyperplane_block's parity patterns (degenerate for
     plane p when 2^p >= dim — every element gets the same sign), the
     hashed pattern is effective at ANY plane index, so bands can stack
     arbitrarily many informative bits. Deterministic and seed-free;
     mirrored in SQL by plans.duck.d_hashed_bucket (sequential reduction,
-    int64 arithmetic — bit-identical across engines).
-
-    A str ``vec_col`` (SQL fragment) takes the single-expr string path —
-    n_planes lambda constructions collapse to one parse; the fragment
-    mirrors the Column algebra term for term (functions.vectors
-    discipline)."""
-    if isinstance(vec_col, str):
-        signs = []
-        for j in range(n_planes):
-            p = band * n_planes + j
-            proj = (
-                f"aggregate(zip_with({vec_col}, "
-                f"sequence(0, size({vec_col}) - 1), "
-                f"(x, i) -> CASE WHEN CAST((CAST(i AS BIGINT) * 1103515245"
-                f" + {p * 12345}) / 65536 AS BIGINT) % 2 = 0 "
-                f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
-                f"0D, (acc, x) -> acc + x)"
-            )
-            signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-        return F.expr("concat(" + ", ".join(signs) + ")")
-    v = vec_col
-
-    def signed_term(p: int):
-        # exactly-two-arg lambda for zip_with; plane index bound via closure
-        return lambda x, i: F.when(
-            ((i.cast("long") * 1103515245 + p * 12345) / 65536).cast(
-                "bigint"
-            )
-            % 2
-            == 0,
-            x.cast("double"),
-        ).otherwise(-x.cast("double"))
-
-    signs = []
-    for j in range(n_planes):
-        p = band * n_planes + j
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), signed_term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*signs)
+    int64 arithmetic — bit-identical across engines). ``vec_col`` is a
+    column name or SQL fragment."""
+    return _sign_bits(
+        vec_col,
+        (
+            f"CAST((CAST(i AS BIGINT) * 1103515245 + {p * 12345}) / 65536 "
+            f"AS BIGINT) % 2 = 0"
+            for p in range(band * n_planes, (band + 1) * n_planes)
+        ),
+    )
 
 
-def random_hyperplane_block(vec_col: Column | str, n_planes: int = 8) -> Column:
+def random_hyperplane_block(vec_col: str, n_planes: int = 8) -> Column:
     """Sign-of-projection LSH block: concatenated signs of the vector's
-    first `n_planes` alternating-sum projections (deterministic, portable —
-    a fixed ±1 pattern per plane derived from element parity). A str
-    ``vec_col`` (SQL fragment) takes the one-parse string path (same
-    algebra — see hashed_hyperplane_bucket)."""
-    if isinstance(vec_col, str):
-        signs = []
-        for p in range(n_planes):
-            proj = (
-                f"aggregate(zip_with({vec_col}, "
-                f"sequence(0, size({vec_col}) - 1), "
-                f"(x, i) -> CASE WHEN CAST(i / {2 ** p} AS BIGINT) % 2 = 0 "
-                f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
-                f"0D, (acc, x) -> acc + x)"
-            )
-            signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-        return F.expr("concat(" + ", ".join(signs) + ")")
-    v = vec_col
-
-    def signed_term(p: int):
-        # exactly-two-arg lambda for zip_with; plane index bound via closure
-        return lambda x, i: F.when(
-            ((i / (2 ** p)).cast("bigint") % 2) == 0, x.cast("double")
-        ).otherwise(-x.cast("double"))
-
-    signs = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), signed_term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*signs)
+    first ``n_planes`` alternating-sum projections — plane p weighs
+    element i by +1 when ``(i // 2^p) % 2 == 0`` and by -1 otherwise
+    (deterministic, portable). ``vec_col`` is a column name or SQL
+    fragment."""
+    return _sign_bits(
+        vec_col,
+        (f"CAST(i / {2 ** p} AS BIGINT) % 2 = 0" for p in range(n_planes)),
+    )
 
 
 # --- SemDeDup: within-cluster semantic dedup ---------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 import logging
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -64,17 +64,15 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     corpus already has more splits than cores) and the shuffle it adds
     moves each row once.
 
-    Round 13 removed the old 4MB optimizer-size floor: bytes are the
-    wrong proxy for compute-dense work (the floor kept every sub-4MB
-    vector table — including the sf0.1 bench corpus — serialized on one
-    core; firing the guard there measured q_semdedup 3.28 s -> 2.94 s
-    while the added exchange on genuinely tiny inputs costs ~0.05 s).
-    Skipping the optimizer-stats probe also removes a per-invocation
-    driver-side optimization pass on the guarded subtree. The loops that
-    must not re-pay the exchange per iteration already pass
-    ``ensure=False`` and guard once outside (kmeans_codebook), which is
-    what the historical 1.7x q_ann_ivf_kmeans regression — the original
-    motivation for the floor — actually came from.
+    The guard has no size floor: bytes are the wrong proxy for
+    compute-dense work. A small vector table (the sf0.1 bench corpus is
+    under 4 MB) still gets spread — measured q_semdedup 3.28 s -> 2.94 s —
+    while the added exchange on genuinely tiny inputs costs ~0.05 s. No
+    optimizer-statistics probe runs, so the guard adds no driver-side
+    optimization pass on the guarded subtree. Loops must not re-pay the
+    exchange per iteration: they guard once outside and pass
+    ``ensure=False`` inside (:func:`kmeans_codebook`; guarding per Lloyd
+    round measured 1.7x slower on q_ann_ivf_kmeans).
     """
     shuffle_n = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -110,7 +108,7 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
 
 def knn(
     df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -121,7 +119,8 @@ def knn(
 
     Returns the input columns (minus the raw vector) plus ``dist``,
     ``cosine`` and 1-based ``rank``. Ties broken by ``id_col`` so results
-    are deterministic for the oracle. The corpus goes through
+    are deterministic for the oracle. ``query_vec`` is a list of floats
+    or a SQL fragment of the query vector. The corpus goes through
     :func:`ensure_parallelism` — the per-row distance expressions are
     interpreted array work that must not serialize onto one scan split;
     pass ``ensure=False`` when the input is known-small (a rerank
@@ -129,22 +128,10 @@ def knn(
     """
     if ensure:
         df = ensure_parallelism(df)
-    # String fast path (see functions.vectors): a Sequence query becomes a
-    # SQL literal fragment and the distance expressions parse as ONE expr
-    # each instead of ~40 py4j lambda round-trips — same analyzed tree.
-    if isinstance(query_vec, Column):
-        emb = V.as_double_array(F.col(vec_col))
-        dist = V.l2_dist(emb, query_vec)
-        cos = V.cosine_sim(emb, query_vec)
-    else:
-        q_s = (
-            query_vec
-            if isinstance(query_vec, str)
-            else V.s_vec_lit(query_vec)
-        )
-        emb_s = V.s_as_double_array(vec_col)
-        dist = V.l2_dist(emb_s, q_s)
-        cos = V.cosine_sim(emb_s, q_s)
+    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
+    emb = V.s_as_double_array(vec_col)
+    dist = V.l2_dist(emb, q)
+    cos = V.cosine_sim(emb, q)
     if round_to is not None:
         dist = F.round(dist, round_to)
         # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero)
@@ -276,7 +263,7 @@ def ivf_assign(
 
 def lsh_search(
     corpus_df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     n_planes: int = 4,
     vec_col: str = "embedding",
@@ -300,11 +287,7 @@ def lsh_search(
     """
     from . import dedup as D
 
-    q: Column | str = (
-        query_vec
-        if isinstance(query_vec, (Column, str))
-        else V.s_vec_lit(query_vec)
-    )
+    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
     blocked = corpus_df.withColumn(
         "__blk",
         D.random_hyperplane_block(V.s_as_double_array(vec_col), n_planes),
@@ -495,7 +478,7 @@ def kmeans_codebook(
 
 def probe_cells(
     centroids_df: DataFrame,
-    q: Column | str,
+    q: str,
     n_probe: int,
     centroid_vec_col: str = "centroid_vec",
     centroid_id_col: str = "centroid_id",
@@ -503,13 +486,10 @@ def probe_cells(
     """The ``n_probe`` centroid ids nearest a single query vector — the
     probe-selection step every single-query IVF variant shares (plain IVF
     and IVFPQ use this helper; the batch form in :func:`ivf_search_join`
-    is the per-query-window generalization). Deterministic tie-break on
-    centroid id; NULL distances (malformed centroid vectors) sort last."""
-    qd = (
-        V.l2_dist(V.s_as_double_array(centroid_vec_col), q)
-        if isinstance(q, str)
-        else V.l2_dist(V.as_double_array(F.col(centroid_vec_col)), q)
-    )
+    is the per-query-window generalization). ``q`` is the query vector's
+    SQL fragment. Deterministic tie-break on centroid id; NULL distances
+    (malformed centroid vectors) sort last."""
+    qd = V.l2_dist(V.s_as_double_array(centroid_vec_col), q)
     return (
         centroids_df.select(
             F.col(centroid_id_col),
@@ -524,7 +504,7 @@ def probe_cells(
 def ivf_search(
     corpus_df: DataFrame,
     centroids_df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     n_probe: int = 1,
     vec_col: str = "embedding",
@@ -537,11 +517,7 @@ def ivf_search(
     pre-assigned and partitioned by ``centroid_id`` (see :func:`ivf_assign`),
     partition pruning makes this scan ``n_probe / n_centroids`` of the data.
     """
-    q: Column | str = (
-        query_vec
-        if isinstance(query_vec, (Column, str))
-        else V.s_vec_lit(query_vec)
-    )
+    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
     assigned = ivf_assign(
         corpus_df, centroids_df, vec_col, id_col, centroid_vec_col, centroid_id_col
     )

@@ -156,36 +156,31 @@ def mmr_select(
     and later steps then cannot either (same remaining set, same scores),
     so ranks stay contiguous.
 
-    Before round 14 this was an unrolled k-step driver loop — one
-    argmax job + one localCheckpoint per step, ~k sequential bounded
-    jobs whose cost was per-job fixed overhead, not compute (guide §1.2:
-    fix the distributed shape first). The fold computes the identical
-    algebra (same rounded-cosine, same tie-breaks, verified against the
-    unrolled form on ties/NULL-rel/zero-vector/short-candidate cases and
-    hash-exact vs the oracle) in one job: q_mmr_rerank 1.83 s → ~0.5 s,
-    and q_e2e_rag's expensive upstream is now referenced once, so its
-    candidate checkpoint is unnecessary too.
+    The whole selection is one Spark job whatever k is (an unrolled
+    k-step driver loop runs one argmax job and one localCheckpoint per
+    step: q_mmr_rerank took 1.83 s that way against ~0.5 s for the fold). The fold computes the same scores and tie-breaks as a
+    per-step greedy chain with one ``MAX(round(cosine, 6))`` per step,
+    which is what the DuckDB oracle runs.
 
     Scale: the single gathered row holds the top-k candidates (k ≤ tens),
     bounded by construction — never corpus data."""
     if k < 1:
         raise ValueError(f"mmr_select needs k >= 1, got {k}")
     i, v, r = f"`{id_col}`", f"`{vec_col}`", f"`{rel_col}`"
-    sim = f"round({V.s_cosine_sim('c.' + v, 's.' + v)}, 6)"
-    # max over the selected prefix of the rounded cosine, skipping NULLs —
-    # mirrors MAX(__sim)'s NULL semantics (NULL only when every sim is NULL)
-    ms = (
-        f"aggregate(acc, CAST(NULL AS DOUBLE), (m, s) -> "
-        f"CASE WHEN {sim} IS NULL THEN m "
-        f"WHEN m IS NULL OR {sim} > m THEN {sim} ELSE m END)"
-    )
 
     def sc(ref: str) -> str:
-        """round(lam*rel − (1−lam)*maxsim, 6) for candidate ``ref`` — the
-        exact float algebra of the pre-round-14 per-step projection
-        (NULL rel or NULL maxsim both make the score NULL → skipped)."""
-        m = ms.replace("c.", f"{ref}.") if ref != "c" else ms
-        return f"round({lam!r}D * {ref}.{r} - {(1.0 - lam)!r}D * {m}, 6)"
+        """round(lam*rel − (1−lam)*maxsim, 6) for candidate ``ref``, where
+        maxsim is the max over the selected prefix ``acc`` of the rounded
+        cosine, skipping NULLs — MAX's NULL semantics (NULL only when
+        every sim is NULL). NULL rel or NULL maxsim make the score NULL,
+        so the candidate is skipped."""
+        sim = f"round({V.s_cosine_sim(f'{ref}.{v}', f's.{v}')}, 6)"
+        ms = (
+            f"aggregate(acc, CAST(NULL AS DOUBLE), (m, s) -> "
+            f"CASE WHEN {sim} IS NULL THEN m "
+            f"WHEN m IS NULL OR {sim} > m THEN {sim} ELSE m END)"
+        )
+        return f"round({lam!r}D * {ref}.{r} - {(1.0 - lam)!r}D * {ms}, 6)"
 
     # one greedy step: argmax score over the not-yet-selected candidates,
     # as a 0-or-1-element array (empty when nothing is scoreable)

@@ -113,18 +113,6 @@ def test_simhash_64_bits_are_honest(spark):
     assert any((r["sh0"] & mask) != (r["sh1"] & mask) for r in rows)
 
 
-def test_simhash_row_local_wide_bits_are_seeded(spark):
-    """Row-local simhash(bits=63): bits 32..62 draw from a seeded second
-    md5, so the high word is not a copy of the low word's bit pattern."""
-    df = _corpus(spark)
-    sh = D.simhash("text", bits=63)
-    rows = df.select("doc_id", sh.alias("sh")).collect()
-    assert rows
-    lo = lambda v: v & ((1 << 31) - 1)  # noqa: E731
-    hi = lambda v: (v >> 32) & ((1 << 31) - 1)  # noqa: E731
-    assert any(lo(r["sh"]) != hi(r["sh"]) for r in rows)
-
-
 def test_minhash_nondefault_production_params(spark):
     """The 8-hash/2-band default fits the oracle; real 100 TB recall wants
     wider configs (128/16-class). Run the full pipeline at a non-default

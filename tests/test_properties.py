@@ -773,6 +773,45 @@ def test_hashed_hyperplane_bucket_matches_python_reference(spark, vecs):
         assert got[i] == want, (i, v, got[i], want)
 
 
+def _py_hyperplane_block(vec, n_planes):
+    """Independent reference for random_hyperplane_block: plane p weighs
+    element i by +1 when ``(i // 2**p) % 2 == 0`` and by -1 otherwise,
+    summed left to right in IEEE double; the block is the concatenated
+    '1' (sum >= 0) / '0' signs. The engine divides i by 2^p in DOUBLE
+    then truncates — an exact binary scaling for these non-negative
+    indices, so it equals integer //."""
+    out = []
+    for p in range(n_planes):
+        acc = 0.0
+        for i, x in enumerate(vec):
+            acc = acc + (x if (i // 2**p) % 2 == 0 else -x)
+        out.append("1" if acc >= 0 else "0")
+    return "".join(out)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_VECS)
+def test_random_hyperplane_block_matches_python_reference(spark, vecs):
+    """The parity-pattern LSH blocks behind lsh_search (q_ann_lsh) equal
+    a from-the-docstring Python reference at every width 1..8 — the
+    fold order, the sign convention at exactly 0 and the per-plane
+    pattern are all pinned, independent of the DuckDB mirror."""
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "i: long, v: array<double>"
+    )
+    widths = range(1, 9)
+    got = {
+        r["i"]: tuple(r[f"b{n}"] for n in widths)
+        for r in df.select(
+            "i",
+            *[D.random_hyperplane_block("v", n).alias(f"b{n}") for n in widths],
+        ).collect()
+    }
+    for i, v in enumerate(vecs):
+        want = tuple(_py_hyperplane_block(v, n) for n in widths)
+        assert got[i] == want, (i, v, got[i], want)
+
+
 def _py_minhash_sig(text, num_hashes=D.MINHASH_NUM_HASHES):
     """Independent MinHash reference: Java-\\s tokenize, md5-prefix word
     hashes, Horner 3-shingle combine, min over the affine family. None =
