@@ -46,10 +46,6 @@ def h64(col: Column | str, seed: int | str | None = None,
     return F.conv(F.substring(md5_hex(col, seed), 1, nchars), 16, 10).cast("bigint")
 
 
-def hash_mod(col: Column | str, m: int, seed: int | str | None = None) -> Column:
-    return h64(col, seed) % F.lit(m)
-
-
 # ---- DuckDB SQL mirrors (text generators for plans/*.py oracles) ----
 
 def d_seeded(col: str, seed: int | str | None) -> str:
@@ -63,8 +59,4 @@ def d_md5(col: str, seed: int | str | None = None) -> str:
 def d_h64(col: str, seed: int | str | None = None,
           nchars: int = HASH_HEX_CHARS) -> str:
     return f"CAST(concat('0x', substr({d_md5(col, seed)}, 1, {nchars})) AS BIGINT)"
-
-
-def d_hash_mod(col: str, m: int, seed: int | str | None = None) -> str:
-    return f"({d_h64(col, seed)} % {m})"
 

@@ -159,15 +159,17 @@ STUB_EMBED_DIM = 16
 
 def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text",
                        dim: int = STUB_EMBED_DIM):
-    """Per-document stub embeddings as a DataFrame transform:
-    explode → bucket each token's md5 once → 16 conditional sums → dense
-    array (joined back so token-less docs get zero vectors).
+    """Per-document deterministic SQL-expressible embeddings (SURVEY §5):
+    dimension d counts the document's tokens whose md5 first hex char
+    falls in bucket d. Stands in for the LaBSE pandas_udf (R7) so the
+    chunk→vector→kNN pipeline is oracle-checkable end-to-end without
+    torch.
 
-    Prefer this over the :func:`stub_embedding` Column for whole-table
-    embedding: the nested-lambda column form generates a single huge
-    codegen method that HotSpot sporadically refuses to JIT (observed
-    3s-vs-159s flapping on identical runs); this form is one narrow
-    explode + a partial+final aggregate, stable at any scale."""
+    Built as explode → bucket each token's md5 once → ``dim`` conditional
+    sums → dense array, joined back so token-less docs get zero vectors:
+    one narrow explode and a partial+final aggregate. (A per-row nested
+    lambda over the token array compiles to one huge codegen method that
+    HotSpot may refuse to JIT.)"""
     toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
     hashed = toks.select(
         id_col,
@@ -189,23 +191,6 @@ def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text",
         df.select(id_col)
         .join(sigs, on=id_col, how="left")
         .select(F.col(id_col), F.coalesce(F.col("emb"), zeros).alias("emb"))
-    )
-
-
-def stub_embedding(col: Column | str, dim: int = STUB_EMBED_DIM) -> Column:
-    """Deterministic SQL-expressible embedding (SURVEY §5): dimension d
-    counts the tokens whose md5 first hex char falls in bucket d. Stands in
-    for the LaBSE pandas_udf (R7) so the chunk→vector→kNN pipeline is
-    oracle-checkable end-to-end without torch. Tokens are hashed once, then
-    bucketed — all row-local, no shuffle."""
-    hashed = F.transform(
-        tokens(col),
-        lambda t: F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(t), 1, 1))
-        - 1,
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: F.size(F.filter(hashed, lambda h: h == d)).cast("double"),
     )
 
 

@@ -36,46 +36,26 @@ from . import (  # noqa: F401,E402
     governance_queries,  # round-2 batch 8: k-anonymity ladder, re-ident risk
 )
 
-# Rebuild the registries in an explicit priority order. The driver checks a
-# bounded 50-entry registry PREFIX per round. The registry is 211 queries /
-# 207 oracles (the 4 oracle-less entries are the rows-only-by-design UDF
-# queries). Cumulative driver coverage closed at 209/209 in round 6
-# (q_semdedup_capped is new in round 10, q_semdedup_sqrt in round 11), so
-# the rotation is pure freshness maintenance: slots 1-N re-earn rows for
-# the queries whose code this round touches, then the ENTIRE list — window
-# and tail alike — runs strictly oldest-driver-evidence-first (per-query
-# latest row across CORRECTNESS_r01-r12, recomputed this round:
-# 14 round-8 rows, 48 oracle-bearing round-9, 48 round-10, 47 round-11,
-# 50 round-12; rows-only four at r9/r5 per policy). A 50-slot window
-# refreshing oldest-first keeps every query's newest driver row at most
-# ~4 rounds old at steady state; after the round-13 window lands, the
-# oldest remaining oracle-bearing evidence is round 9.
+# Rebuild the registries in an explicit priority order. The driver checks
+# a bounded registry PREFIX of 50 entries (the window) per run and walks
+# the rest (the tail) only when it has time left. `_reorder` enforces that
+# this list names every registered query exactly once.
 #
-# WINDOW POLICY (round 10, closes the round-9 "what's wrong" #2): the 4
-# oracle-less rows-only-by-design queries (q_multimodal_features,
-# q_udf_embed, q_udf_embed_knn, q_udf_keywords — ML-output queries whose
-# results SQL cannot replay; each has in-plan self-asserting invariants
-# and a hash-exact DuckDB-checkable sibling) NEVER occupy window slots:
-# a window slot spent on one can only record `err: no_oracle` and earns
-# no hash evidence. They live at the very END of the tail, annotated, so
-# a driver run long enough to reach them has already re-verified every
-# oracle-bearing query first.
+# WINDOW POLICY: the window leads with the oracle-bearing queries whose
+# code changed most recently, then those whose newest hash-exact driver
+# evidence is oldest; the tail continues oldest-evidence-first. A window
+# refreshed this way keeps every query's newest driver row a few runs old
+# at most. Reorder the list when a change touches queries; never drop one.
+#
+# ROWS-ONLY LAST: the 4 oracle-less, rows-only-by-design queries
+# (q_multimodal_features, q_udf_embed, q_udf_embed_knn, q_udf_keywords —
+# ML-output queries whose results SQL cannot replay; each has in-plan
+# self-asserting invariants and a hash-exact DuckDB-checkable sibling)
+# never occupy window slots: a slot spent on one can only record
+# `err: no_oracle` and earns no hash evidence. They are the last four
+# entries, so a driver run long enough to reach them has already
+# re-verified every oracle-bearing query.
 _PRIORITY = [
-    # ---- round-13 window (the first OPTIMIZATION round). Round 13
-    # changed plan construction and physical plans for performance —
-    # results proven identical (full-registry 211/211 --exact parity on
-    # final code, plus per-change hash checks) — so the window leads
-    # with the 40 oracle-bearing queries the round touched: the SemDeDup
-    # trio + graph family (new explicit-parallelism exchanges), the
-    # detector-pricing harness (checkpointed shingle table), the dedup
-    # detectors and knn/ann family (string-built expressions +
-    # parallelism guard), retrieval serving (MMR strings, postings
-    # checkpoint), and the stub-embedder users. Slots 41-50: the 10
-    # oldest remaining round-8 rows (evidence-union histogram recomputed
-    # in round 12); the 3 remaining round-8 rows sit right after the
-    # boundary, then rounds 9/10/11/12 strictly oldest-evidence-first.
-    # The rows-only four stay pinned at the very end per the round-10
-    # window policy. ----
     "q_semdedup_sqrt", "q_semdedup_capped", "q_semdedup",
     "q_pagerank", "q_graph_degree", "q_triangle_count",
     "q_minhash_eval", "q_minhash_wide_eval", "q_simhash_eval",

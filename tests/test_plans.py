@@ -185,6 +185,51 @@ def test_plan_signatures_unchanged(spark):
     )
 
 
+@pytest.mark.parametrize("name", ["q_knn", "q_pagerank"])
+def test_plan_text_is_canonical(spark, name):
+    """tools/plans/*.txt change only when a plan changes: two captures of
+    the same query in one session (fresh expression, plan and RDD IDs) are
+    byte-identical, with no ID or absolute SF path left in them."""
+    import re
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from explain import plan_text
+
+    first, second = plan_text(spark, name, SF), plan_text(spark, name, SF)
+    assert first == second
+    assert not re.search(r"#\d", first)
+    assert "plan_id=" not in first
+    assert SF not in first and "<sf_dir>" in first
+
+
+def test_plan_text_is_the_same_in_every_process(tmp_path):
+    """q_profile's multi-distinct Expand orders its projections by a hash
+    of expression IDs. plan_text starts each query at a fixed position of
+    the ID counter, so a fresh process captures the same text whether or
+    not another query was captured before it (as tools/explain.py's full
+    and subset runs do)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {os.path.join(os.path.dirname(__file__), '..', 'tools')!r})\n"
+        "from explain import get_spark, plan_text\n"
+        "spark = get_spark('plan_text', shuffle_partitions=8)\n"
+        f"texts = [plan_text(spark, name, {SF!r}) for name in sys.argv[1:]]\n"
+        "sys.stdout.write(texts[-1])\n"
+    )
+    alone, after_knn = (
+        subprocess.run([sys.executable, "-c", code, *names], cwd=tmp_path,
+                       capture_output=True, text=True, timeout=600,
+                       check=True).stdout
+        for names in (["q_profile"], ["q_knn", "q_profile"])
+    )
+    assert "Expand" in alone
+    assert alone == after_knn
+
+
 def test_snapshot_as_of_read_is_plain_pruned_scan(spark):
     """q_snapshot_read: each as-of read must be an ordinary parquet scan
     of the immutable snapshot dir feeding a partial+final aggregate — no

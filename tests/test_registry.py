@@ -45,30 +45,10 @@ def test_queries_are_callable_signature():
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in o.values())
 
 
-def _load_from_path(modname, relpath):
-    # importlib-by-path, NOT sys.path.insert(tools/): inserting tools/
-    # would shadow same-named modules (parity, explain, bench, ...) for
-    # the rest of the pytest session. (The loaded modules still insert
-    # the repo ROOT themselves at import time — a benign duplicate of
-    # conftest's insert; the shadow-prone path is the one avoided here.)
-    import importlib.util
-
-    path = os.path.join(os.path.dirname(__file__), "..", relpath)
-    spec = importlib.util.spec_from_file_location(modname, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_bench_and_ab_harness_queries_are_registered():
-    """bench.py's HEADLINE list and the fragment-cache A/B harness's
-    AB_QUERIES must reference registered queries only — a registry rename
-    would otherwise break the measurement tools at run time, long after
-    the rename commit."""
-    HEADLINE = _load_from_path("_bench_under_test", "bench.py").HEADLINE
-    AB_QUERIES = _load_from_path(
-        "_ab_fragment_cache_under_test", os.path.join("tools", "ab_fragment_cache.py")
-    ).AB_QUERIES
+def test_bench_headline_queries_are_registered():
+    """bench.py's HEADLINE list must reference registered queries only — a
+    registry rename would otherwise break the bench at run time, long
+    after the rename commit."""
+    from bench import HEADLINE
 
     assert set(HEADLINE) <= set(QUERIES), set(HEADLINE) - set(QUERIES)
-    assert set(AB_QUERIES) <= set(QUERIES), set(AB_QUERIES) - set(QUERIES)

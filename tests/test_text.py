@@ -41,7 +41,8 @@ def test_word_shingles(spark):
 
 
 def test_stub_embedding_counts_tokens(spark):
-    emb = _one(spark, T.stub_embedding(F.lit("x y z x")))
+    docs = spark.createDataFrame([(1, "x y z x")], "doc_id long, text string")
+    emb = T.stub_embeddings_df(docs).head()["emb"]
     assert len(emb) == 16
     assert sum(emb) == 4.0  # each token lands in exactly one bucket
 
