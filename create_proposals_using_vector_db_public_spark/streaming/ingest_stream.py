@@ -22,10 +22,13 @@ differ.
 
 from __future__ import annotations
 
+import tempfile
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from ..operators import ingest as I
@@ -110,22 +113,20 @@ def available_now_to_parquet(
     The query takes the session's ``spark.sql.shuffle.partitions`` as is:
     the checkpoint fixes the state partition count for every later run, so
     a cap sized to one host would bind all later runs (contrast
-    ``available_now_to_memory``)."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    ``available_now_to_memory``). When the checkpoint and ``out_path``
+    (where the sink's ``_spark_metadata`` log lives) are both on the local
+    file system, the query runs with the FileSystem checkpoint manager,
+    which forks no ``readlink`` per file-status call; results do not
+    change, and a checkpoint written under either manager resumes under
+    the other (``_run_available_now``)."""
+    _run_available_now(
+        stream_df.writeStream.format("parquet").outputMode("append"),
+        stream_df.sparkSession,
+        "available_now_to_parquet",
+        timeout_sec,
+        checkpoint=checkpoint_path,
+        sink_path=out_path,
     )
-    if not q.awaitTermination(timeout_sec):
-        # stop + raise: returning would hand the caller a partial dataset
-        # while the unstopped query keeps appending behind their back
-        q.stop()
-        raise TimeoutError(
-            f"available_now_to_parquet did not finish within {timeout_sec}s"
-        )
 
 
 def available_now_to_memory(
@@ -144,41 +145,135 @@ def available_now_to_memory(
     small the input, and each store costs a load, a delta-file write and a
     task. The cap is safe only here: the checkpoint is temporary and
     discarded, so the state partition count it fixes is never reused.
-    ``start()`` copies the session conf into the query's own session, and
-    the previous value is restored as soon as ``start()`` returns or
-    raises. A concurrent builder in the same session can read the capped
-    value during ``start()``; that cannot change its results, which do not
-    depend on the partition count (the ``tools/parity.py --partitions``
-    sweep checks this).
+    Results do not depend on the partition count (the
+    ``tools/parity.py --partitions`` sweep checks this).
+
+    The temporary checkpoint is on the local file system unless
+    ``spark.sql.streaming.checkpointLocation`` names a root for it, so the
+    query normally runs with the FileSystem checkpoint manager, which forks
+    no ``readlink`` per file-status call; it writes the same files as
+    Spark's default manager, so results do not change. Both settings hold
+    for the ``start()`` call only (``_run_available_now``).
 
     The memory sink's temp view is dropped once the result is resolved, so
     calls leave no view behind in the session; the sink's rows live as
     long as the returned DataFrame, which still reads them."""
     spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    key = "spark.sql.shuffle.partitions"
-    previous = spark.conf.get(key)
-    spark.conf.set(
-        key, str(min(int(previous), spark.sparkContext.defaultParallelism))
+    _run_available_now(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        spark,
+        "available_now_to_memory",
+        timeout_sec,
+        cap_state_partitions=True,
     )
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set(key, previous)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"available_now_to_memory did not finish within {timeout_sec}s"
-        )
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out
+
+
+_PARTITIONS_KEY = "spark.sql.shuffle.partitions"
+_CHECKPOINT_ROOT_KEY = "spark.sql.streaming.checkpointLocation"
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _on_local_fs(path: str, default_fs: str | None) -> bool:
+    """Whether Hadoop resolves ``path`` to the local file system: by its
+    URI scheme, or by ``default_fs``'s (Hadoop's default is ``file:///``)
+    for a scheme-less path. No FileSystem is instantiated."""
+    return (urlsplit(path).scheme or urlsplit(default_fs or "file:///").scheme) == "file"
+
+
+def _start_settings(
+    spark: SparkSession,
+    checkpoint: str | None,
+    sink_path: str | None,
+    cap_state_partitions: bool,
+) -> dict[str, str]:
+    """The session settings ``_run_available_now`` holds during ``start()``
+    for a query with these paths (``checkpoint`` None: a temporary one)."""
+    settings = {}
+    if cap_state_partitions:
+        parts = int(spark.conf.get(_PARTITIONS_KEY))
+        settings[_PARTITIONS_KEY] = str(min(parts, spark.sparkContext.defaultParallelism))
+    # a temporary checkpoint goes under the configured root, else into a
+    # scheme-less JVM temp directory, which Hadoop resolves on the default
+    # FS; gettempdir() stands in for it, since only the scheme is read
+    paths = [
+        checkpoint or spark.conf.get(_CHECKPOINT_ROOT_KEY, None) or tempfile.gettempdir()
+    ]
+    if sink_path is not None:
+        paths.append(sink_path)
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    if spark.conf.get(_MANAGER_KEY, None) is None and all(
+        _on_local_fs(p, default_fs) for p in paths
+    ):
+        settings[_MANAGER_KEY] = _FS_MANAGER
+    return settings
+
+
+def _run_available_now(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    runner: str,
+    timeout_sec: int,
+    checkpoint: str | None = None,
+    sink_path: str | None = None,
+    cap_state_partitions: bool = False,
+) -> None:
+    """Start ``writer``'s query with Trigger.AvailableNow, the given
+    checkpoint and file-sink path, and wait for it to finish. Every stream
+    runner starts its query here; nothing else changes the session around
+    a ``start()``.
+
+    ``start()`` copies the session conf into the query's own session, so
+    two settings are applied for that call only and the caller's values
+    are restored when it returns or raises. A concurrent builder in the
+    same session can read them during ``start()``; neither can change its
+    results.
+
+    - ``cap_state_partitions``: ``spark.sql.shuffle.partitions`` capped at
+      ``defaultParallelism`` (see ``available_now_to_memory``; only for a
+      temporary checkpoint).
+    - When every metadata-log path of the query is on the local file
+      system (the checkpoint, and the file sink's output directory, which
+      holds ``_spark_metadata``), and the session names no checkpoint
+      manager itself: the FileSystem-based checkpoint manager. Spark's
+      default FileContext manager checks file status through
+      ``getFileLinkStatus``, which without the native Hadoop library forks
+      a ``readlink`` per call. On a local path both managers do the same
+      check-then-rename on the same ``RawLocalFileSystem`` and write the
+      same file formats (checksum files included), so results do not
+      change and a checkpoint written under either resumes under the
+      other. On HDFS and object stores the default manager, with its
+      atomic rename, is kept.
+
+    A query that does not finish within ``timeout_sec`` is stopped and
+    ``TimeoutError`` raised: returning would hand the caller a partial
+    result while the unstopped query keeps writing behind their back."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if sink_path is not None:
+        writer = writer.option("path", sink_path)
+    settings = _start_settings(spark, checkpoint, sink_path, cap_state_partitions)
+    previous = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        for k, v in previous.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"{runner} did not finish within {timeout_sec}s")
 
 
 # --- streaming upsert into a versioned parquet store -------------------------
@@ -311,7 +406,11 @@ def stream_upsert_to_versioned(
     a half-written snapshot.
 
     The query takes the session's ``spark.sql.shuffle.partitions`` as is,
-    for the reason ``available_now_to_parquet`` gives."""
+    for the reason ``available_now_to_parquet`` gives. On a local
+    checkpoint it runs with the FileSystem checkpoint manager, which forks
+    no ``readlink`` per file-status call; results do not change, and a
+    checkpoint written under either manager resumes under the other
+    (``_run_available_now``)."""
     if keep_versions is not None and keep_versions < 1:
         # 0 would delete the snapshot just committed and brick the table
         raise ValueError("keep_versions must be >= 1 (or None to keep all)")
@@ -324,17 +423,10 @@ def stream_upsert_to_versioned(
             keep_versions=keep_versions,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream_df.writeStream.foreachBatch(apply_batch),
+        stream_df.sparkSession,
+        "stream_upsert_to_versioned",
+        timeout_sec,
+        checkpoint=checkpoint_path,
     )
-    if not q.awaitTermination(timeout_sec):
-        # unlike the read-only available_now_* helpers, this stream commits
-        # state — returning while it still runs would hand the caller a
-        # stale snapshot or a concurrent-writer hazard
-        q.stop()
-        raise TimeoutError(
-            f"stream_upsert_to_versioned did not finish within {timeout_sec}s"
-        )

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .ingest_stream import _run_available_now
+
 
 def running_counts_stateful(
     stream_df: DataFrame,
@@ -102,20 +104,19 @@ def run_update_to_parquet(
 
     The query takes the session's ``spark.sql.shuffle.partitions`` as is:
     the checkpoint fixes the state partition count for every later run, so
-    a cap sized to one host would bind all later runs."""
-    q = (
+    a cap sized to one host would bind all later runs. On a local
+    checkpoint it runs with the FileSystem checkpoint manager, which forks
+    no ``readlink`` per file-status call; results do not change, and a
+    checkpoint written under either manager resumes under the other
+    (``ingest_stream._run_available_now``)."""
+    _run_available_now(
         stream_df.writeStream.foreachBatch(
             lambda df, bid: df.write.mode("overwrite").parquet(
                 f"{out_path}/batch={bid}"
             )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        ).outputMode("update"),
+        stream_df.sparkSession,
+        "run_update_to_parquet",
+        timeout_sec,
+        checkpoint=checkpoint_path,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"run_update_to_parquet did not finish within {timeout_sec}s"
-        )

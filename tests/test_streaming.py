@@ -403,6 +403,10 @@ def test_events_stream_accepts_relative_sf_dir(spark):
 # --- one-shot memory runs: partition cap, view cleanup, oracle parity --------
 
 PARTS = "spark.sql.shuffle.partitions"
+MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+FS_MANAGER = _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+FC_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
 
 
 @pytest.fixture()
@@ -478,9 +482,11 @@ def test_memory_run_restores_partitions_when_start_raises(
     stream = _events_stream_of(spark, f"{watch_dir}/events")
     # append mode needs a watermark on a streaming aggregation
     agg = stream.groupBy("event_type").count()
+    manager = spark.conf.get(MANAGER, None)
     with pytest.raises(AnalysisException):
         S.available_now_to_memory(agg, output_mode="append")
     assert spark.conf.get(PARTS) == str(partitions)
+    assert spark.conf.get(MANAGER, None) == manager
 
 
 @pytest.mark.parametrize("partitions", [9], indirect=True)
@@ -549,3 +555,186 @@ def test_memory_run_queries_match_oracle(spark, duck, partitions, name):
     got = QUERIES[name](spark, SF).toPandas()
     assert len(got) > 0
     assert compare(name, got, duck.sql(ORACLES[name]).df(), exact=True) == []
+
+
+# --- checkpoint manager: the FileSystem one on local paths -------------------
+
+RUNNERS = {
+    "memory": lambda stream, d: S.available_now_to_memory(
+        stream, output_mode="append"),
+    "parquet": lambda stream, d: S.available_now_to_parquet(
+        stream, str(d / "out"), str(d / "ckpt")),
+    "versioned": lambda stream, d: S.stream_upsert_to_versioned(
+        stream, str(d / "table"), str(d / "ckpt")),
+    "stateful": lambda stream, d: S.run_update_to_parquet(
+        S.running_counts_stateful(stream, key_col="file_name", ts_col="ts"),
+        str(d / "out"), str(d / "ckpt")),
+}
+
+
+def _query_conf(query, key: str) -> str:
+    """``key`` in the query's own session, the clone ``start()`` made of
+    the caller's."""
+    return query._jsq.streamingQuery().sparkSessionForStream().conf().get(key)
+
+
+@pytest.mark.parametrize("runner", sorted(RUNNERS))
+def test_runner_starts_local_checkpoint_with_fs_manager(
+    spark, watch_dir, tmp_path, started, runner
+):
+    import datetime as dt
+
+    _write_file(spark, watch_dir, "a.parquet", [("f1", "x", dt.datetime(2024, 1, 1))])
+    before = spark.conf.get(MANAGER, None)
+    RUNNERS[runner](S.stream_parquet(spark, f"{watch_dir}/*.parquet", SCHEMA), tmp_path)
+    (q,) = started
+    assert _query_conf(q, MANAGER) == FS_MANAGER
+    assert spark.conf.get(MANAGER, None) == before
+
+
+@pytest.fixture()
+def manager(spark, request):
+    """Run the test with the session naming ``request.param`` as its
+    checkpoint manager; the previous setting is restored afterwards."""
+    before = spark.conf.get(MANAGER, None)
+    spark.conf.set(MANAGER, request.param)
+    yield request.param
+    if before is None:
+        spark.conf.unset(MANAGER)
+    else:
+        spark.conf.set(MANAGER, before)
+
+
+@pytest.mark.parametrize("manager", [FC_MANAGER], indirect=True)
+def test_checkpoint_resumes_across_managers(
+    spark, watch_dir, tmp_path, started, manager
+):
+    """A manager the session names is kept; a checkpoint written under
+    Spark's default FileContext manager resumes under the FileSystem one
+    and back, exactly-once per file."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run(file_name):
+        _write_file(spark, watch_dir, f"{file_name}.parquet", [(file_name, "x", t0)])
+        stream = S.stream_parquet(spark, f"{watch_dir}/*.parquet", SCHEMA)
+        S.available_now_to_parquet(stream, out, ckpt)
+        return _query_conf(started[-1], MANAGER)
+
+    assert run("f1") == FC_MANAGER
+    spark.conf.unset(MANAGER)
+    assert run("f2") == FS_MANAGER
+    spark.conf.set(MANAGER, FC_MANAGER)
+    assert run("f3") == FC_MANAGER
+    got = sorted(r["file_name"] for r in spark.read.parquet(out).collect())
+    assert got == ["f1", "f2", "f3"]
+
+
+def test_local_path_decision():
+    from create_proposals_using_vector_db_public_spark.streaming.ingest_stream import (
+        _on_local_fs,
+    )
+
+    assert _on_local_fs("file:/x", "file:///")
+    assert _on_local_fs("file:/x", "hdfs://nn:8020")
+    assert _on_local_fs("/x", "file:///")
+    assert _on_local_fs("/x", None)  # Hadoop's default FS is file:///
+    assert not _on_local_fs("/x", "hdfs://nn:8020")
+    assert not _on_local_fs("hdfs://nn:8020/x", "file:///")
+    assert not _on_local_fs("s3a://b/x", "file:///")
+
+
+@pytest.fixture()
+def checkpoint_root(spark, request):
+    """Run the test with ``spark.sql.streaming.checkpointLocation`` at
+    ``request.param``; unset afterwards."""
+    key = "spark.sql.streaming.checkpointLocation"
+    assert spark.conf.get(key, None) is None
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.unset(key)
+
+
+@pytest.mark.parametrize(
+    "checkpoint_root", ["hdfs://nn:8020/ckpt", "s3a://b/ckpt"], indirect=True
+)
+def test_memory_run_under_remote_checkpoint_root_keeps_default_manager(
+    spark, checkpoint_root
+):
+    """With a non-local checkpoint root the memory run's checkpoint is
+    there, so the query keeps Spark's default manager (no query is
+    started: that would contact the remote file system)."""
+    from create_proposals_using_vector_db_public_spark.streaming.ingest_stream import (
+        _start_settings,
+    )
+
+    settings = _start_settings(spark, None, None, True)
+    assert MANAGER not in settings and PARTS in settings
+
+
+def test_remote_sink_path_keeps_default_manager(spark, tmp_path):
+    """The parquet sink's ``_spark_metadata`` log lives under its output
+    directory, so a remote output keeps the default manager even on a
+    local checkpoint."""
+    from create_proposals_using_vector_db_public_spark.streaming.ingest_stream import (
+        _start_settings,
+    )
+
+    ckpt = str(tmp_path / "ckpt")
+    assert _start_settings(spark, ckpt, str(tmp_path / "out"), False) == {
+        MANAGER: FS_MANAGER
+    }
+    assert _start_settings(spark, ckpt, "s3a://b/out", False) == {}
+
+
+CENSUS = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from create_proposals_using_vector_db_public_spark.plans import QUERIES
+from create_proposals_using_vector_db_public_spark.session import get_spark
+
+spark = get_spark("census", shuffle_partitions=4, master="local[2]")
+for _ in range(2):
+    open(os.environ["CENSUS_LOG"], "w").close()
+    QUERIES["q_stream_tumbling"](spark, sys.argv[2]).count()
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
+def test_stream_run_forks_no_readlink(tmp_path):
+    """Fork census: a logging ``readlink``/``chmod`` shim first on PATH
+    records every such command the JVM forks. After a warm-up run, a
+    memory stream on its local temp checkpoint forks no ``readlink``
+    (Spark's default checkpoint manager forks one per file-status call
+    when the native Hadoop library is absent)."""
+    import subprocess
+    import sys
+
+    bin_dir, log = tmp_path / "bin", tmp_path / "forks.log"
+    bin_dir.mkdir()
+    for cmd in ("readlink", "chmod"):
+        real = shutil.which(cmd)
+        shim = bin_dir / cmd
+        shim.write_text(f'#!/bin/sh\necho {cmd} >> "$CENSUS_LOG"\nexec {real} "$@"\n')
+        shim.chmod(0o755)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        CENSUS_LOG=str(log),
+        PYTHONPATH=root,
+        SPARK_DRIVER_MEM="1g",
+    )
+    work = tmp_path / "work"
+    work.mkdir()
+    subprocess.run(
+        [sys.executable, "-c", CENSUS, root, os.path.abspath(SF)],
+        cwd=work, env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    forks = log.read_text().split()
+    if not forks:
+        pytest.skip("no command forked: the native Hadoop library is loaded")
+    assert "readlink" not in forks, forks.count("readlink")

@@ -13,11 +13,14 @@ caused it.
 
 Prints one JSON line per query: the median over the repetitions of its
 latency, the per-layer self times and job counts, stages, tasks, task
-seconds and shuffle MB (named as in ``layers.PER_LAYER``), and the total
-and ``ReusedExchange`` exchange counts of the final adaptive plan. The
-session is the benchmark's (``Bench.start_session``: ``get_spark`` with
-twice ``SPARK_GRAFT_CPUS`` shuffle partitions, which defaults here to the
-usable cores).
+seconds and shuffle MB (named as in ``layers.PER_LAYER``), the total and
+``ReusedExchange`` exchange counts of the final adaptive plan, and
+``jvm.child_cpu_s``, the CPU time of the JVM's children reaped during the
+execution (commands Hadoop forks, such as ``chmod``, and any Python worker
+that exits). Every line carries the same keys (``metric_keys``), 0 where
+its query has none. The session is the benchmark's
+(``Bench.start_session``: ``get_spark`` with twice ``SPARK_GRAFT_CPUS``
+shuffle partitions, which defaults here to the usable cores).
 """
 
 from __future__ import annotations
@@ -31,6 +34,29 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REPS = 3
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"  # bench.py's default
+
+
+# entries of ``layers.PER_LAYER`` that belong to a whole run, not to one
+# execution
+RUN_LEVEL = ("session.start_s", "jvm.gc_s", "trace.overhead", "trace.coverage_min")
+
+
+def metric_keys(layers) -> list[str]:
+    """The keys of every line's metrics, whichever queries the run has."""
+    keys = {k for k in layers.PER_LAYER if k not in RUN_LEVEL}
+    keys |= {f"{layer}.{m}.{x}" for layer, mods in layers.LAYER_MODULES
+             if layer in ("functions", "operators") for m in mods for x in ("calls", "s")}
+    return sorted(keys | {"streaming.s", "io.write_s", "exec.gc_s", "latency_s", "rows",
+                          "exchanges", "reused_exchanges", "jvm.child_cpu_s"})
+
+
+def child_cpu_s(pid: int) -> float:
+    """CPU seconds of ``pid``'s reaped children so far: fields 16-17
+    (``cutime`` + ``cstime``) of ``/proc/<pid>/stat``."""
+    with open(f"/proc/{pid}/stat") as f:
+        stat = f.read()
+    fields = stat[stat.rfind(")") + 2:].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
 
 
 def profile(sf_dir: str, names: list[str]) -> dict[str, dict[str, float]]:
@@ -56,24 +82,29 @@ def profile(sf_dir: str, names: list[str]) -> dict[str, dict[str, float]]:
         for _ in range(REPS):
             bench.reset()
             bench.tracer.enabled = True
+            child0 = child_cpu_s(bench.jvm_pid)
             latency, _cpu, rows, qe = bench.execute(name, sf_dir)
+            child = child_cpu_s(bench.jvm_pid) - child0
             bench.tracer.enabled = False
             exchanges = layers.count_exchanges(qe.executedPlan().toString())
-            runs.append((name, bench.tracer.exec_id, rows, exchanges, latency))
+            runs.append((name, bench.tracer.exec_id, rows, exchanges, latency, child))
     app_id = bench.spark.sparkContext.applicationId
     bench.spark.stop()
     # the event log is complete once the session has stopped
     log = layers.read_event_log(os.path.join(bench.event_dir, app_id))
     cores = int(os.environ["SPARK_GRAFT_CPUS"])
     samples: dict[str, list[dict[str, float]]] = {n: [] for n in names}
-    for name, exec_id, rows, exchanges, latency in runs:
+    for name, exec_id, rows, exchanges, latency, child in runs:
         spans = [s for s in bench.tracer.spans if s[5] == exec_id]
         metrics, _ = layers.layer_metrics(spans, log, 1, cores, rows, exchanges)
         samples[name].append({"latency_s": latency, "rows": rows, **metrics,
                               "exchanges": exchanges[0],
-                              "reused_exchanges": exchanges[1]})
-    # every line carries every metric, 0 where a query has none
-    keys = sorted({k for reps in samples.values() for s in reps for k in s})
+                              "reused_exchanges": exchanges[1],
+                              "jvm.child_cpu_s": child})
+    keys = metric_keys(layers)
+    unlisted = {k for reps in samples.values() for s in reps for k in s} - set(keys)
+    if unlisted:
+        raise RuntimeError(f"metrics missing from metric_keys: {sorted(unlisted)}")
     return {name: {k: statistics.median(s.get(k, 0.0) for s in reps) for k in keys}
             for name, reps in samples.items()}
 
