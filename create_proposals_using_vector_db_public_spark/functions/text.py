@@ -157,17 +157,16 @@ def lang_id(col: Column | str) -> Column:
 STUB_EMBED_DIM = 16
 
 
-def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text",
-                       dim: int = STUB_EMBED_DIM):
+def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text"):
     """Per-document deterministic SQL-expressible embeddings (SURVEY §5):
-    dimension d counts the document's tokens whose md5 first hex char
-    falls in bucket d. Stands in for the LaBSE pandas_udf (R7) so the
-    chunk→vector→kNN pipeline is oracle-checkable end-to-end without
-    torch.
+    ``STUB_EMBED_DIM`` dimensions; dimension d counts the document's tokens
+    whose md5 first hex char falls in bucket d. Stands in for the LaBSE
+    pandas_udf (R7) so the chunk→vector→kNN pipeline is oracle-checkable
+    end-to-end without torch.
 
-    Built as explode → bucket each token's md5 once → ``dim`` conditional
-    sums → dense array, joined back so token-less docs get zero vectors:
-    one narrow explode and a partial+final aggregate. (A per-row nested
+    Built as explode → bucket each token's md5 once → one conditional sum
+    per dimension → dense array, joined back so token-less docs get zero
+    vectors: one narrow explode and a partial+final aggregate. (A per-row nested
     lambda over the token array compiles to one huge codegen method that
     HotSpot may refuse to JIT.)"""
     toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
@@ -178,14 +177,13 @@ def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text",
     )
     # one expr parse per generated column (functions.vectors discipline) —
     # the per-dimension Column loop costs ~5 py4j round-trips per bucket
-    sums = [
-        F.expr(f"sum(CAST((__b = {d}) AS INT)) AS __c{d}") for d in range(dim)
-    ]
+    dims = range(STUB_EMBED_DIM)
+    sums = [F.expr(f"sum(CAST((__b = {d}) AS INT)) AS __c{d}") for d in dims]
     agged = hashed.groupBy(id_col).agg(*sums)
     emb = F.expr(
-        "array(" + ", ".join(f"CAST(__c{d} AS DOUBLE)" for d in range(dim)) + ")"
+        "array(" + ", ".join(f"CAST(__c{d} AS DOUBLE)" for d in dims) + ")"
     )
-    zeros = F.expr("array(" + ", ".join(["0D"] * dim) + ")")
+    zeros = F.expr("array(" + ", ".join(["0D"] * len(dims)) + ")")
     sigs = agged.select(F.col(id_col), emb.alias("emb"))
     return (
         df.select(id_col)

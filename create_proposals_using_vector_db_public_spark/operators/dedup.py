@@ -382,7 +382,6 @@ def dup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     rounds: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Connected components over near-dup pairs by min-label propagation:
     every node starts labeled with its own id; each round every node takes
@@ -395,12 +394,13 @@ def dup_clusters(
     DuckDB oracle runs the same rounds); near-dup clusters are shallow in
     practice (dup groups, not long chains), so a small constant suffices.
     Scale: each round is one join + one groupBy on (node) — shuffle keyed by
-    node id only, labels are two longs per row. ``checkpoint`` truncates the
-    pair lineage first (standard for iterative algorithms — without it every
-    round re-inlines the full signature pipeline into the plan).
+    node id only, labels are two longs per row. A local checkpoint
+    truncates the pair lineage first (standard for iterative algorithms —
+    without it every round re-inlines the full signature pipeline into the
+    plan). The checkpoint runs the pair subtree's stages as Spark jobs when
+    this function is called, not when its result is read.
     """
-    if checkpoint:
-        pairs = pairs.localCheckpoint(eager=False)
+    pairs = pairs.localCheckpoint(eager=False)
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(

@@ -22,7 +22,7 @@ recommended layout.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
@@ -69,7 +69,7 @@ def split_paragraphs(
 
 
 def with_content_hash(df: DataFrame, content_col: str = "content",
-                      out_col: str = "file_sha256") -> Column | DataFrame:
+                      out_col: str = "file_sha256") -> DataFrame:
     """R10: SHA-256 over file content (``app_callapi.py:117-120``)."""
     return df.withColumn(out_col, H.sha256_hex(content_col))
 

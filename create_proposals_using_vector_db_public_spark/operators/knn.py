@@ -22,7 +22,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -30,8 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vectors as V
-
-_LOG = logging.getLogger(__name__)
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -73,32 +70,21 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     exchange per iteration: they guard once outside and pass
     ``ensure=False`` inside (:func:`kmeans_codebook`; guarding per Lloyd
     round measured 1.7x slower on q_ann_ivf_kmeans).
+
+    The partition count comes from the plan's physical RDD
+    (``queryExecution().toRdd()``). On an exchange-free input (a scan or
+    a projection of one) that plans lazily and runs no job. On an input
+    that already holds an exchange it runs every stage upstream of it,
+    at build time, as Spark jobs: such an input is already spread by its
+    exchange, so its caller passes ``ensure=False`` instead.
     """
     shuffle_n = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     # partition count from the plan's own physical RDD: df.rdd would wrap
     # the plan in a DeserializeToObject projection and re-run analysis per
-    # guarded query just to ask a partition count (the guarded inputs are
-    # exchange-free scans/projections, so building the internal RDD plans
-    # lazily and runs no job)
-    try:
-        n_part = int(df._jdf.queryExecution().toRdd().getNumPartitions())
-    except Exception:
-        try:
-            n_part = df.rdd.getNumPartitions()
-        except Exception as exc:
-            # No partition probe at all (Spark Connect exposes neither
-            # _jdf nor .rdd): leave the partitioning as-is rather than
-            # pay an unconditional extra shuffle on every guarded query.
-            # The guard exists for the degenerate single-split scan; a
-            # probe-less environment loses that protection, which must be
-            # observable (same discipline as the pagerank probe-miss log).
-            _LOG.info(
-                "parallelism probe unavailable, leaving partitioning "
-                "as-is (%s: %s)", type(exc).__name__, exc,
-            )
-            return df
+    # guarded query just to ask a partition count
+    n_part = int(df._jdf.queryExecution().toRdd().getNumPartitions())
     if n_part < shuffle_n:
         if key is not None:
             return df.repartition(shuffle_n, key)
@@ -112,32 +98,31 @@ def knn(
     k: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_to: int | None = 6,
     ensure: bool = True,
 ) -> DataFrame:
     """Exact top-k by L2 distance, with cosine reported (not ranked by).
 
     Returns the input columns (minus the raw vector) plus ``dist``,
     ``cosine`` and 1-based ``rank``. Ties broken by ``id_col`` so results
-    are deterministic for the oracle. ``query_vec`` is a list of floats
-    or a SQL fragment of the query vector. The corpus goes through
-    :func:`ensure_parallelism` — the per-row distance expressions are
-    interpreted array work that must not serialize onto one scan split;
-    pass ``ensure=False`` when the input is known-small (a rerank
-    candidate set) and the repartition would be pure overhead.
+    are deterministic for the oracle; ``dist`` and ``cosine`` are rounded
+    to 6 decimals. ``query_vec`` is a list of floats or a SQL fragment of
+    the query vector. The corpus goes through :func:`ensure_parallelism` —
+    the per-row distance expressions are interpreted array work that must
+    not serialize onto one scan split. Pass ``ensure=False`` when the
+    input is known-small (a rerank candidate set) and the repartition
+    would be pure overhead, and when the input already holds an exchange
+    (a join or aggregate output): the guard's partition probe would run
+    that input's upstream stages as jobs while the plan is built.
     """
     if ensure:
         df = ensure_parallelism(df)
     q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
     emb = V.s_as_double_array(vec_col)
-    dist = V.l2_dist(emb, q)
-    cos = V.cosine_sim(emb, q)
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-        # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero)
-        # into +0.0 — the engines disagree on which zero round() emits,
-        # and an exact value-hash distinguishes their reprs
-        cos = F.round(cos, round_to) + 0.0
+    dist = F.round(V.l2_dist(emb, q), 6)
+    # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero) into
+    # +0.0 — the engines disagree on which zero round() emits, and an
+    # exact value-hash distinguishes their reprs
+    cos = F.round(V.cosine_sim(emb, q), 6) + 0.0
     out = (
         df.withColumn("dist", dist)
         .withColumn("cosine", cos)
@@ -385,7 +370,6 @@ def kmeans_update(
     assigned_df: DataFrame,
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
-    round_to: int = 6,
 ) -> DataFrame:
     """One Lloyd update step: component-wise mean of the vectors assigned to
     each centroid → (centroid_id, centroid_vec).
@@ -395,7 +379,7 @@ def kmeans_update(
     groups, trivially parallel, no vector ever crosses the wire whole.
     Means are computed from DECIMAL(27,10) sums so the result is
     order-independent (bit-identical across runs, partitionings, and
-    engines — SURVEY §7 trap 5), then rounded to ``round_to``.
+    engines — SURVEY §7 trap 5), then rounded to 6 decimals.
     """
     parts = assigned_df.select(
         F.col(centroid_id_col),
@@ -417,7 +401,7 @@ def kmeans_update(
         .select(
             centroid_id_col,
             F.transform(
-                F.col("__pairs"), lambda p: F.round(p["__mean"], round_to)
+                F.col("__pairs"), lambda p: F.round(p["__mean"], 6)
             ).alias("centroid_vec"),
         )
     )
@@ -441,6 +425,9 @@ def kmeans_codebook(
     iteration truncates the plan the way every iterative Spark algorithm
     must, and the corpus is re-scanned once per iteration — exactly the
     k-means I/O lower bound. Empty clusters keep their previous centroid.
+    The checkpoint is lazy only in name: each one runs the stages upstream
+    of it as Spark jobs when it is called, so the Lloyd iterations execute
+    while this function builds the plan, not when the result is read.
     """
     cents = seeds_df.select(
         F.col(centroid_id_col),

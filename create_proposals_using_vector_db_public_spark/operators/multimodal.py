@@ -99,7 +99,7 @@ def _byte_histogram(content: bytes, bins: int = _HIST_BINS) -> list[float]:
     return [0.0] * bins
 
 
-def extract_features(blobs: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_features(blobs: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary content: Arrow-batched,
     one Python worker pass, no shuffle. Output drops the payload — only
     features flow downstream."""

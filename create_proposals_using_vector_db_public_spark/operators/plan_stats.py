@@ -1,10 +1,11 @@
-"""Catalyst plan-statistics probes shared by the estimate-driven guards.
+"""Catalyst plan-statistics probe for estimate-driven guards.
 
-Two operators gate a physical strategy on the optimizer's size estimate
-(knn.ensure_parallelism's repartition guard; graph q_pagerank's
-state-broadcast gate). The probe lives here once so an API change or a
-decision to read a different plan stage cannot be fixed in one guard and
-silently missed in the other.
+Its single caller is q_pagerank's state-broadcast gate
+(``plans/graph_queries.py``), which picks a broadcast or a shuffled join
+from the optimizer's size estimate of the degree table. The probe is an
+operator module of its own so the benchmark's per-layer trace times it as
+one (``perfbench/layers.py`` lists ``plan_stats`` among its operator
+modules).
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ itself is posting-list shaped: the term filter collapses the corpus to
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -29,16 +29,28 @@ BM25_B = 0.75
 RRF_K = 60
 
 
+def bm25_weight() -> Column:
+    """The Robertson BM25 weight of one (document, term) posting group —
+    idf(df, n_docs) x saturated tf(tf, dl, avgdl), with k1 = ``BM25_K1``
+    and b = ``BM25_B`` — over the columns ``tf``, ``df``, ``dl``,
+    ``avgdl`` and ``n_docs``. A document's score is the sum of its
+    weights over the query terms; every BM25 plan sums this one Column."""
+    idf = F.log(
+        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    tf_part = (F.col("tf") * (BM25_K1 + 1.0)) / (
+        F.col("tf")
+        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+    )
+    return idf * tf_part
+
+
 def bm25_scores(
     docs: DataFrame,
     query_terms: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     postings: DataFrame | None = None,
-    doc_lens: DataFrame | None = None,
-    corpus_stats: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 score per document for a *dynamic* query-term set (a 1-column
     ``term`` DataFrame, always broadcast, deduplicated to IN-set
@@ -47,16 +59,13 @@ def bm25_scores(
     computed, not literal.
 
     Returns (id_col, score) with the raw double score — callers round at
-    their declared precision. Corpus stats (avgdl, n_docs) are a 1-row
-    broadcast; document lengths join on the id; only the filtered
-    postings (|terms| per doc at most) ever aggregate. Pass ``postings``
-    (an exploded (id, term) frame) when the caller runs several BM25
-    passes over the same corpus — the tokenize/explode scan then happens
-    once, not per pass. ``doc_lens`` (id_col, dl) and ``corpus_stats``
-    (avgdl, n_docs — derived from the SAME doc-length table) likewise let
-    a multi-pass caller aggregate the corpus statistics once instead of
-    once per pass (round 14, guide §5 reuse: q_query_expansion ran this
-    aggregate three times over the same checkpointed postings).
+    their declared precision. Document lengths and the 1-row corpus
+    stats (avgdl, n_docs) are derived from the same postings the term
+    frequencies come from, so they cannot describe another corpus. Pass
+    ``postings`` (an exploded (id, term) frame) when the caller runs
+    several BM25 passes over the same corpus: the tokenize/explode scan
+    then happens once, and every pass's doc-length aggregate is the same
+    subtree, which exchange reuse shuffles once.
     """
     terms = (
         postings
@@ -65,16 +74,8 @@ def bm25_scores(
             F.col(id_col), F.explode(T.tokens(text_col)).alias("term")
         )
     )
-    dl = (
-        doc_lens
-        if doc_lens is not None
-        else terms.groupBy(id_col).agg(F.count("*").alias("dl"))
-    )
-    stats = (
-        corpus_stats
-        if corpus_stats is not None
-        else dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
-    )
+    dl = terms.groupBy(id_col).agg(F.count("*").alias("dl"))
+    stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     # distinct: the declared semantics are an IN-set (the oracles' WHERE
     # term IN ...); a duplicated input term must not double-count postings
     qterms = terms.join(
@@ -85,21 +86,15 @@ def bm25_scores(
     # number of (id, term) groups, i.e. tf's row count per term — deriving
     # it from tf shares the filtered-postings scan + (id, term) exchange
     # with the tf aggregate instead of re-scanning the postings for a
-    # second, distinct-expanded aggregation (round 14, guide §2.4; the
-    # integer is identical by definition, so scores are bit-identical)
+    # second, distinct-expanded aggregation (the integer is identical by
+    # definition, so scores are bit-identical)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     return (
         tf.join(F.broadcast(dfreq), "term")
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
         .groupBy(id_col)
-        .agg(F.sum(idf * tf_part).alias("score"))
+        .agg(F.sum(bm25_weight()).alias("score"))
     )
 
 

@@ -18,6 +18,7 @@ from ..functions.hashing import d_h64, h64
 from ..sources import load_table
 from .duck import d_words
 from ..functions.money import money_double
+from ..operators import retrieval as R
 from .registry import query
 
 _WORDS = d_words()
@@ -107,8 +108,6 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- BM25 --------------------------------------------------------------------
 
 _BM25_TERMS = ("spark", "join", "vector")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 
 _BM25_ORACLE = f"""
 WITH w AS (
@@ -129,8 +128,8 @@ WITH w AS (
   SELECT tf.doc_id,
          sum(
            ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-           (tf.tf * ({_BM25_K1} + 1.0)) /
-           (tf.tf + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl.dl / stats.avgdl))
+           (tf.tf * ({R.BM25_K1} + 1.0)) /
+           (tf.tf + {R.BM25_K1} * (1.0 - {R.BM25_B} + {R.BM25_B} * dl.dl / stats.avgdl))
          ) AS score
   FROM tf
   JOIN df USING (term)
@@ -147,8 +146,9 @@ LIMIT 20
 @query("q_bm25", oracle=_BM25_ORACLE)
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 for a fixed term query — engine-native full-text
-    relevance (k1=1.2, b=0.75, Robertson idf). Per-term postings are tiny
-    after the IN filter; doc lengths and corpus stats broadcast."""
+    relevance (operators.retrieval.bm25_weight: k1=1.2, b=0.75, Robertson
+    idf). Per-term postings are tiny after the IN filter; doc lengths and
+    corpus stats broadcast."""
     d = load_table(spark, sf_dir, "documents")
     terms = d.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     dl = terms.groupBy("doc_id").agg(F.count("*").alias("dl"))
@@ -156,19 +156,12 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = terms.filter(F.col("term").isin(*_BM25_TERMS))
     tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = qterms.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (_BM25_K1 + 1.0)) / (
-        F.col("tf")
-        + _BM25_K1 * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
-        .agg(F.sum(idf * tf_part).alias("score"))
+        .agg(F.sum(R.bm25_weight()).alias("score"))
     )
     return (
         scored.select("doc_id", F.round("score", 6).alias("bm25"))

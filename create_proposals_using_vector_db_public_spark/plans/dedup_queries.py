@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..operators import dedup as D
 from ..sources import load_table
-from .duck import d_cosine, d_dot, d_hashed_bucket, d_normalize, dd, d_words
+from .duck import d_dot, d_hashed_bucket, d_normalize, dd, d_words
 from .plant import PLANT_COPY_OFFSET, PLANT_NEAR_OFFSET, assert_plantable
 from .registry import query
 
@@ -568,7 +568,10 @@ def _pair_eval(
     # joins it on both pair sides), and Spark re-executes an un-exchanged
     # subtree per consumer — the lazy localCheckpoint materializes the
     # (doc_id, shingles) rows once per invocation (round-13 measurement:
-    # q_minhash_eval 2.90 s -> 2.24 s at sf0.1, hash-identical)
+    # q_minhash_eval 2.90 s -> 2.24 s at sf0.1, hash-identical; removing
+    # it took q_minhash_wide_eval from 6.3 to 14.3 exec task-s at sf0.1
+    # on 4 vCPUs). It runs that materialization as Spark jobs while the
+    # plan is built.
     sh = corpus.select(
         "doc_id",
         F.array_distinct(T.word_shingles("text", 3)).alias("sh"),

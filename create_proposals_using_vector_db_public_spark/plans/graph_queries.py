@@ -157,11 +157,8 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.84 s -> 1.09 s, hash-identical). Orders hold <= 7 lineitems, so
     # the skipped map-side partial aggregation saved almost no shuffle
     # bytes. Same discipline as semdedup_keep's explicit count.
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        io = io.repartition(shuffle_n, "o")
-    except ValueError:  # non-numeric conf ("auto" on some platforms)
-        io = io.repartition("o")
+    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    io = io.repartition(shuffle_n, "o")
     baskets = io.groupBy("o").agg(
         F.array_sort(F.collect_set("p")).alias("ps")
     )
@@ -283,11 +280,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow (dst, c) longs move per iteration — the
     # reuse-a-partitioning-across-stages discipline either way.
     part_key = "dst" if bcast_state else "src"
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        new_u = _undirected(edges).repartition(n_part, part_key)
-    except ValueError:  # conf may be non-numeric ("auto" on some platforms)
-        new_u = _undirected(edges).repartition(part_key)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    new_u = _undirected(edges).repartition(n_part, part_key)
     # scope the cache: at most ONE pagerank edge-list entry is ever
     # resident. When the incoming logical plan equals the cached handle's
     # plan (same session, same sf_dir, same join mode, same partitioning),
@@ -335,11 +329,14 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The |nodes|-sized degree table is referenced by the initial state
     # AND by every iteration's left join — without a checkpoint each
     # reference re-aggregates the full cached edge list (one exchange +
-    # agg over 2|E| rows, 4x per invocation). The lazy localCheckpoint
-    # materializes it once per invocation (round-13 A/B on an idle box:
-    # 2.50 s -> 1.89 s fresh build+count, hash-identical); at scale this
-    # is the standard cache-the-static-degrees move of every iterative
-    # PageRank.
+    # agg over 2|E| rows, 4x per invocation). The "lazy" localCheckpoint
+    # materializes it once per invocation, and does so while the plan is
+    # built: calling it runs the degree aggregate's stages as Spark jobs
+    # (round-13 A/B on an idle box: 2.50 s -> 1.89 s fresh build+count,
+    # hash-identical; removing it at sf0.1 on 4 vCPUs took the degree
+    # work from 1.6 to 8.6 exec task-s and 2 to 57 MB of shuffle read).
+    # At scale this is the standard cache-the-static-degrees move of
+    # every iterative PageRank.
     d = u.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
         eager=False
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..operators import dedup as D
 from ..operators import ingest as I
 from ..sources import load_table
 from .registry import query
@@ -149,15 +150,9 @@ def q_dedup_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first dedup on a collision-prone key — R9's semantics made
     deterministic (dropDuplicates keeps an arbitrary row; a keyed window
     keeps the FIRST, which is what re-ingestion needs)."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang", "n_chars").orderBy(F.col("doc_id").asc())
-    return (
-        d.select("doc_id", "lang", "n_chars")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    return D.keep_first(
+        d.select("doc_id", "lang", "n_chars"), ["lang", "n_chars"], "doc_id"
     )
 
 

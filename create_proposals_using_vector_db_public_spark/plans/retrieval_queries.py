@@ -315,7 +315,13 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the expansion mining touches only |prf| documents' postings;
     the corpus-wide df lookup is filtered to the candidate terms before
-    aggregating. Both BM25 passes are posting-list shaped."""
+    aggregating. Both BM25 passes are posting-list shaped.
+
+    The four local checkpoints below are data-dependent stage boundaries,
+    and each runs Spark jobs while the plan is built: calling
+    ``localCheckpoint(eager=False)`` executes the stages upstream of it,
+    so building this query runs the postings, the seed pass and the
+    mining before the caller asks for a row."""
     d = load_table(spark, sf_dir, "documents")
     seeds = spark.createDataFrame([(t,) for t in _PRF_SEEDS], "term: string")
     # ONE tokenize/explode of the corpus, shared by both BM25 passes and
@@ -339,19 +345,16 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = d.select(
         "doc_id", F.explode(T.tokens("text")).alias("term")
     ).localCheckpoint(eager=False)
-    # Corpus statistics are built once: the per-doc length table and its
-    # (avgdl, n_docs) summary are shared by the seed pass, the expansion
-    # mining and the final pass. dl is |docs| rows (bounded like the
-    # postings checkpoint below); the 1-row stats recompute from dl per
-    # consumer, which is trivial.
-    # dl is NOT checkpointed: its three consumers plan the same aggregate
-    # subtree over the checkpointed postings, so exchange reuse runs its
-    # shuffle once. A checkpoint here would add a barrier job that AQE
-    # otherwise overlaps with the neighbouring stages, and measured slower.
+    # The mining step's n_docs comes from the same doc-length aggregate
+    # both BM25 passes derive from ``terms``: all three consumers plan the
+    # same subtree over the checkpointed postings, so exchange reuse runs
+    # its shuffle once. dl is NOT checkpointed: a checkpoint here would
+    # add a barrier job that AQE otherwise overlaps with the neighbouring
+    # stages, and measured slower.
     dl = terms.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     prf = (
-        R.bm25_scores(d, seeds, postings=terms, doc_lens=dl, corpus_stats=stats)
+        R.bm25_scores(d, seeds, postings=terms)
         .select("doc_id", F.round("score", 6).alias("s"))
         .orderBy(F.col("s").desc(), F.col("doc_id").asc())
         .limit(_PRF_DOCS)
@@ -404,7 +407,7 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q2 = seeds.unionByName(expansion)
     top = (
-        R.bm25_scores(d, q2, postings=terms, doc_lens=dl, corpus_stats=stats)
+        R.bm25_scores(d, q2, postings=terms)
         .select("doc_id", F.round("score", 6).alias("bm25"))
         .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(10)

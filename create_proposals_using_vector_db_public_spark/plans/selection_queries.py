@@ -235,8 +235,9 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint — without it Catalyst re-expands the counts+min
     subtree into every consumer and the corpus is scanned four times;
     with it, exactly two passes: one for the counts, one for the keep
-    filter) and broadcast into the keep pass. The keep decision is a
-    narrow per-row hash filter, and the output is one partial+final
+    filter) and broadcast into the keep pass. The checkpoint runs the
+    counts pass as Spark jobs while the plan is built. The keep decision
+    is a narrow per-row hash filter, and the output is one partial+final
     count per language — no shuffle of document rows at all."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))

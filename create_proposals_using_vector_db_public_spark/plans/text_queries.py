@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..operators import dedup as D
 from ..sources import load_table
 from .duck import d_words
 from .registry import query
@@ -181,24 +182,22 @@ SELECT lang, keyword, kw_rank FROM ranked WHERE kw_rank <= 6
 def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R21's order-preserving union-dedup + head-6 (``app_callapi.py:213``:
     ``list(dict.fromkeys(kw))[:6]``), per language group: first-seen order
-    is (doc_id, position-in-doc); expressed as two windows instead of a
-    single-partition collect_list (SURVEY §7 trap 2 — array_distinct after
-    collect_list only preserves order on one partition; windows scale)."""
+    is (doc_id, position-in-doc); expressed as two windows (the first
+    sighting per (lang, keyword) via operators.dedup.keep_first, then the
+    per-language rank) instead of a single-partition collect_list (SURVEY
+    §7 trap 2 — array_distinct after collect_list only preserves order on
+    one partition; windows scale)."""
     d = load_table(spark, sf_dir, "documents")
     kw = d.select(
         "doc_id",
         "lang",
         F.posexplode(T.keyword_fallback("text", 3)).alias("pos", "keyword"),
     )
-    w_first = Window.partitionBy("lang", "keyword").orderBy(
-        F.col("doc_id").asc(), F.col("pos").asc()
-    )
     w_rank = Window.partitionBy("lang").orderBy(
         F.col("doc_id").asc(), F.col("pos").asc()
     )
     return (
-        kw.withColumn("rn", F.row_number().over(w_first))
-        .filter(F.col("rn") == 1)
+        D.keep_first(kw, ["lang", "keyword"], "doc_id")
         .withColumn("kw_rank", F.row_number().over(w_rank))
         .filter(F.col("kw_rank") <= 6)
         .select("lang", "keyword", "kw_rank")

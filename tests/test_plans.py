@@ -204,11 +204,14 @@ def test_plan_text_is_canonical(spark, name):
 
 
 def test_plan_text_is_the_same_in_every_process(tmp_path):
-    """q_profile's multi-distinct Expand orders its projections by a hash
-    of expression IDs. plan_text starts each query at a fixed position of
-    the ID counter, so a fresh process captures the same text whether or
-    not another query was captured before it (as tools/explain.py's full
-    and subset runs do)."""
+    """A fresh process captures the same text whether or not other
+    captures came before it (as tools/explain.py's full and subset runs
+    do). q_profile's multi-distinct Expand orders its projections by a
+    hash of expression IDs; plan_text starts each query at a fixed
+    position of the ID counter. q_dup_clusters prints its checkpoint
+    RDD's call site, which the JVM reports differently after 16 earlier
+    reflective calls of ``localCheckpoint``; plan_text names it
+    ``<callsite>``."""
     import subprocess
     import sys
 
@@ -220,14 +223,19 @@ def test_plan_text_is_the_same_in_every_process(tmp_path):
         f"texts = [plan_text(spark, name, {SF!r}) for name in sys.argv[1:]]\n"
         "sys.stdout.write(texts[-1])\n"
     )
-    alone, after_knn = (
-        subprocess.run([sys.executable, "-c", code, *names], cwd=tmp_path,
-                       capture_output=True, text=True, timeout=600,
-                       check=True).stdout
-        for names in (["q_profile"], ["q_knn", "q_profile"])
-    )
-    assert "Expand" in alone
-    assert alone == after_knn
+    for name, before, marker in (
+        ("q_profile", ["q_knn"], "Expand"),
+        ("q_dup_clusters", ["q_dup_clusters"] * 16,
+         "localCheckpoint at <callsite>"),
+    ):
+        alone, after = (
+            subprocess.run([sys.executable, "-c", code, *names], cwd=tmp_path,
+                           capture_output=True, text=True, timeout=600,
+                           check=True).stdout
+            for names in ([name], [*before, name])
+        )
+        assert marker in alone, name
+        assert alone == after, name
 
 
 def test_snapshot_as_of_read_is_plain_pruned_scan(spark):

@@ -40,6 +40,68 @@ def test_bm25_rare_term_outscores_common(spark):
     assert scores[1] > scores[2]  # rare+common beats common alone
 
 
+def test_bm25_shared_postings_score_bit_for_bit_the_same(spark):
+    """Passing the caller's exploded postings changes where the (id, term)
+    rows come from, not the scores: doc lengths and corpus stats are
+    derived from the postings either way."""
+    from create_proposals_using_vector_db_public_spark.functions import text as T
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark join vector spark"),
+            (2, "join the  tables\tagain"),
+            (3, "vector search over vector data"),
+            (4, ""),
+        ],
+        "doc_id: long, text: string",
+    )
+    terms = spark.createDataFrame([("spark",), ("vector",)], "term: string")
+    p = docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
+
+    def scores(df):
+        return {r["doc_id"]: r["score"] for r in df.collect()}
+
+    own = scores(R.bm25_scores(docs, terms))
+    shared = scores(R.bm25_scores(docs, terms, postings=p))
+    assert own == shared and set(own) == {1, 3}
+
+
+def test_bm25_matches_the_formula_in_python(spark):
+    """Robertson BM25 on a literal corpus, k1 = BM25_K1 and b = BM25_B:
+    idf = ln(1 + (N - df + 0.5) / (df + 0.5)) and
+    tf part = tf (k1 + 1) / (tf + k1 (1 - b + b dl / avgdl))."""
+    import math
+
+    texts = {
+        1: "apple banana apple cherry",
+        2: "banana banana date",
+        3: "cherry date elder fig grape",
+        4: "apple",
+    }
+    query = ("apple", "banana")
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id: long, text: string"
+    )
+    terms = spark.createDataFrame([(t,) for t in query], "term: string")
+    words = {d: t.split() for d, t in texts.items()}
+    avgdl = sum(len(w) for w in words.values()) / len(words)
+    k1, b = R.BM25_K1, R.BM25_B
+    want = {}
+    for d, w in words.items():
+        for term in query:
+            tf = w.count(term)
+            if tf:
+                df = sum(term in ws for ws in words.values())
+                idf = math.log(1.0 + (len(words) - df + 0.5) / (df + 0.5))
+                want[d] = want.get(d, 0.0) + idf * (tf * (k1 + 1.0)) / (
+                    tf + k1 * (1.0 - b + b * len(w) / avgdl)
+                )
+    got = {r["doc_id"]: r["score"] for r in R.bm25_scores(docs, terms).collect()}
+    assert set(got) == set(want) == {1, 2, 4}
+    for d in want:
+        assert got[d] == pytest.approx(want[d], rel=1e-12), d
+
+
 def test_rrf_doc_in_both_lists_wins(spark):
     left = spark.createDataFrame(
         [(10, 1), (20, 2)], "doc_id: long, rank_lex: int"

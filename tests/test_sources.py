@@ -96,6 +96,12 @@ def test_new_session_does_not_reuse_parent_entries(spark):
 # query vector.
 BUILD_JOBS = {
     "q_join_broadcast": 0,
+    "q_bm25": 0,
+    "q_dedup_anti": 0,
+    "q_array_ops": 0,
+    "q_stub_knn": 0,
+    "q_rrf_fusion": 0,
+    "q_e2e_rag": 0,
     "q_agg_basic": 0,
     "q_topk_per_group": 0,
     "q_json_props": 0,

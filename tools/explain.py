@@ -109,12 +109,21 @@ def canonical(plan: str, sf_dir: str) -> str:
     """The plan text with everything that differs between two captures of
     the same plan taken out: expression IDs (`x#123L` -> `x#L`), the
     counter suffix of lambda variable names (`lambda x_48#L` ->
-    `lambda x#L`), exchange plan IDs, RDD IDs, the absolute SF directory
-    and the names of the per-process temp directories queries write to."""
+    `lambda x#L`), exchange plan IDs, RDD IDs, the call site of a local
+    checkpoint's RDD, the absolute SF directory and the names of the
+    per-process temp directories queries write to.
+
+    The call site is the first frame above Spark on the JVM stack. A
+    JDK 17 JVM serves a method's first reflective calls (16 for
+    `Dataset.localCheckpoint`) through `NativeMethodAccessorImpl` and
+    later ones through a generated accessor with no source file, so the
+    same plan prints `localCheckpoint at NativeMethodAccessorImpl.java:0`
+    in a short run and `localCheckpoint at <unknown>:0` in a long one."""
     plan = re.sub(r"(lambda \w+)_\d+#", r"\1#", plan)
     plan = re.sub(r"#\d+", "#", plan)
     plan = re.sub(r",? \[plan_id=\d+\]", "", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD", plan)
+    plan = re.sub(r"(localCheckpoint at )[^,\s]+:\d+", r"\1<callsite>", plan)
     plan = plan.replace(os.path.abspath(sf_dir), "<sf_dir>")
     return re.sub(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+", "<tmp>", plan)
 
