@@ -8,7 +8,11 @@ equality: SURVEY §7 trap 3), plus the north-star text-analysis family
 (language ID, quality scoring, token counting, fingerprinting).
 
 Everything is built-in Column expressions — no Python UDFs in these paths,
-so the 100 TB document scan stays inside whole-stage codegen.
+so the 100 TB document scan runs on the JVM with no Python worker.
+``tokens`` (and every builder on top of it) uses the ``transform`` and
+``filter`` lambdas, which are ``CodegenFallback`` expressions on Spark 4.1:
+whole-stage codegen compiles the stage around them, and they run
+interpreted.
 """
 
 from __future__ import annotations

@@ -1,12 +1,15 @@
-"""Vector math as pure Column expressions (no UDFs — everything stays in
-whole-stage codegen on the JVM).
+"""Vector math as pure Column expressions (no UDFs — everything runs on
+the JVM, with no Python worker).
 
 The reference computes L2 distance inside FAISS ``IndexFlatL2`` (exact brute
 force, reference ``app.py:90,180``) and a display-only cosine via sklearn
 (``app.py:184``). Here both are ``zip_with``/``aggregate`` expressions, so a
-kNN scan is a single codegen'd stage — at 100 TB this is a narrow map over
-the vectors table with a per-partition top-k reduce, no Python worker and no
-shuffle of the raw vectors.
+kNN scan is one stage — at 100 TB a narrow map over the vectors table with a
+per-partition top-k reduce, no Python worker and no shuffle of the raw
+vectors. It is not compiled code end to end: ``ZipWith``, ``ArrayAggregate``
+and ``ArrayTransform`` are ``CodegenFallback`` expressions on Spark 4.1, so
+whole-stage codegen compiles the stage around them and each distance is
+evaluated interpreted, element by element.
 
 All helpers cast elements to double first: the source columns are
 ``array<float>`` and float-typed lambda arithmetic would accumulate float32

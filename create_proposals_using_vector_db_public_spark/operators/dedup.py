@@ -24,7 +24,7 @@ in any engine — and deterministically checkable against the DuckDB oracle.
 Scale: every family is (narrow per-row signature) → (self-join on a
 low-cardinality bucket key) → (verify inside bucket). At 100 TB the bucket
 join is the only shuffle; skewed buckets (stop-shingle buckets) are handled
-by AQE skew-join splitting, and the signature pass is whole-stage codegen.
+by AQE skew-join splitting, and the signature pass is one narrow map.
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing as H
 from ..functions import text as T
+from . import selection as S
 
 MINHASH_NUM_HASHES = 8
 MINHASH_BANDS = 2  # rows per band = NUM_HASHES // BANDS
@@ -52,14 +53,8 @@ def keep_first(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     partitioning, not whichever copy a partition happened to list first.
     (Requires orderable column types; maps would need an explicit key.)"""
     rest = [c for c in df.columns if c not in keys and c != order_col]
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(order_col).asc(), *[F.col(c).asc_nulls_first() for c in rest]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    order = [F.col(order_col).asc(), *[F.col(c).asc_nulls_first() for c in rest]]
+    return S.top_k_per(df, keys, order, 1, "__rn").drop("__rn")
 
 
 # --- MinHash ---------------------------------------------------------------

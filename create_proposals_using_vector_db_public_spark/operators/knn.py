@@ -11,9 +11,10 @@ Reference semantics (``app.py:178-186``, ``app_callapi.py:201-207``):
 - assign a 1-based display rank (``app.py:183,189``).
 
 Scale notes (100 TB):
-- ``orderBy(dist).limit(k)`` compiles to ``TakeOrderedAndProject`` — each
-  partition keeps a k-sized heap, the driver merges P*k candidates. No full
-  sort, no shuffle of vectors. This is the right plan at any scale.
+- the top-k (``selection.top_k``: ``orderBy(dist).limit(k)``) compiles to
+  ``TakeOrderedAndProject`` — each partition keeps a k-sized heap, the
+  driver merges P*k candidates. No full sort, no shuffle of vectors. This
+  is the right plan at any scale.
 - For many simultaneous queries use :func:`knn_join` (broadcast the query
   side), and for sub-linear search :func:`ivf_search` / the LSH bucketing in
   ``operators.dedup`` — both prune the scanned fraction instead of scanning
@@ -26,9 +27,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions import vectors as V
+from . import selection as S
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -123,15 +124,10 @@ def knn(
     # +0.0 — the engines disagree on which zero round() emits, and an
     # exact value-hash distinguishes their reprs
     cos = F.round(V.cosine_sim(emb, q), 6) + 0.0
-    out = (
-        df.withColumn("dist", dist)
-        .withColumn("cosine", cos)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(k))
-    )
-    # rank over the k collected rows — cheap (k rows), single partition is fine
-    w = Window.orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-    return out.withColumn("rank", F.row_number().over(w)).drop(vec_col)
+    out = df.withColumn("dist", dist).withColumn("cosine", cos)
+    return S.top_k(
+        out, [F.col("dist").asc_nulls_last(), F.col(id_col).asc()], k
+    ).drop(vec_col)
 
 
 def knn_join(
@@ -165,13 +161,9 @@ def knn_join(
     joined = c.crossJoin(q).withColumn(
         "dist", F.round(V.l2_dist("__cv", "__qv"), 6)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(corpus_id_col).asc()
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, corpus_id_col, "dist", "rank")
+    order = [F.col("dist").asc_nulls_last(), F.col(corpus_id_col).asc()]
+    return S.top_k_per(joined, [query_id_col], order, k).select(
+        query_id_col, corpus_id_col, "dist", "rank"
     )
 
 
@@ -335,14 +327,13 @@ def ivf_search_join(
     qc = q.crossJoin(F.broadcast(cents)).withColumn(
         "__qd", V.l2_dist("__qv", "__cent")
     )
-    wp = Window.partitionBy(query_id_col).orderBy(
-        F.col("__qd").asc_nulls_last(), F.col(centroid_id_col).asc()
-    )
-    probes = (
-        qc.withColumn("__pn", F.row_number().over(wp))
-        .filter(F.col("__pn") <= n_probe)
-        .select(query_id_col, centroid_id_col, "__qv")
-    )
+    probes = S.top_k_per(
+        qc,
+        [query_id_col],
+        [F.col("__qd").asc_nulls_last(), F.col(centroid_id_col).asc()],
+        n_probe,
+        "__pn",
+    ).select(query_id_col, centroid_id_col, "__qv")
     assigned = ivf_assign(
         corpus_df.select(id_col, vec_col),
         centroids_df,
@@ -356,13 +347,9 @@ def ivf_search_join(
         "dist",
         F.round(V.l2_dist(V.s_as_double_array(vec_col), "__qv"), 6),
     )
-    wk = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
+    order = [F.col("dist").asc_nulls_last(), F.col(id_col).asc()]
+    return S.top_k_per(scored, [query_id_col], order, k).select(
+        query_id_col, id_col, "dist", "rank"
     )
 
 
@@ -681,9 +668,9 @@ def pq_adc_search(
         .groupBy(id_col)
         .agg(F.round(F.sqrt(F.sum("d2").cast("double")), 6).alias("adist"))
     )
-    ranked = adist.orderBy(F.col("adist").asc_nulls_last(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("adist").asc_nulls_last(), F.col(id_col).asc())
-    return ranked.withColumn("rank", F.row_number().over(w).cast("int"))
+    return S.top_k(
+        adist, [F.col("adist").asc_nulls_last(), F.col(id_col).asc()], k
+    )
 
 
 def ivfpq_search(

@@ -1,6 +1,11 @@
-"""DSIR-style importance scoring as a reusable operator.
+"""Selection operators: ranked top-k and DSIR-style importance scoring.
 
-Public recipe: Xie et al. 2023, "Data Selection for Language Models via
+``top_k`` / ``top_k_per`` are the one way this engine takes the first k
+rows by a total order and numbers them 1..k — the reference search's
+"k nearest chunks, 1-based display rank" (``app.py:178-189``) and its
+grouped generalization.
+
+DSIR's public recipe: Xie et al. 2023, "Data Selection for Language Models via
 Importance Resampling" — score each document by its target/background
 unigram importance ratio. The paper's sum of log-ratios becomes a mean of
 floor-scaled integer ratios: monotone the same way for a fixed document
@@ -16,12 +21,51 @@ languages, so lexical preference is untestable on that fixture.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.text import tokens
 
 SCALE = 1_000_000
+
+
+def top_k(
+    df: DataFrame, order: Sequence[Column | str], k: int, rank_col: str = "rank"
+) -> DataFrame:
+    """The first ``k`` rows of ``df`` by ``order``, numbered 1..k in
+    ``rank_col``.
+
+    ``order`` must be a total order (end it on a unique id) so the cut and
+    the numbering are deterministic. ``orderBy(...).limit(k)`` compiles to
+    TakeOrderedAndProject: each partition keeps a k-row heap and the driver
+    merges P*k candidates — no full sort, no shuffle of the input. The rank
+    window then runs over those k rows in one partition."""
+    w = Window.orderBy(*order)
+    return df.orderBy(*order).limit(int(k)).withColumn(
+        rank_col, F.row_number().over(w)
+    )
+
+
+def top_k_per(
+    df: DataFrame,
+    keys: Sequence[Column | str],
+    order: Sequence[Column | str],
+    k: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The first ``k`` rows of each ``keys`` group by ``order``, numbered
+    1..k in ``rank_col``; a group smaller than ``k`` keeps all its rows.
+
+    ``order`` must be a total order within a group. Catalyst compiles the
+    ``rank_col <= k`` filter to WindowGroupLimit, so each map task keeps at
+    most k rows per group before the shuffle on ``keys``."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
 
 
 def dsir_scores(docs: DataFrame, is_target: Column) -> DataFrame:

@@ -19,6 +19,7 @@ from ..sources import load_table
 from .duck import d_words
 from ..functions.money import money_double
 from ..operators import retrieval as R
+from ..operators import selection as S
 from .registry import query
 
 _WORDS = d_words()
@@ -95,12 +96,10 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
+    order = [F.col("tfidf").desc(), F.col("term").asc()]
     return (
-        scored.withColumn("term_rank", F.row_number().over(w))
-        .filter((F.col("term_rank") <= 3) & (F.col("doc_id") < 100))
+        S.top_k_per(scored, ["doc_id"], order, 3, "term_rank")
+        .filter(F.col("doc_id") < 100)
         .select("doc_id", "term", "tfidf", "term_rank")
     )
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as H
 from ..functions import text as T
 from ..functions.hashing import d_h64
+from ..operators import selection as S
 from ..sources import load_table
 from .duck import d_words
 from .plant import (PLANT_COPY_OFFSET, PLANT_DECON_OFFSET,
@@ -269,10 +270,10 @@ def q_e2e_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     without shipping arrays.
 
     Scale shape (plan captured in tools/plans/q_e2e_corpus.txt — 3
-    exchanges total): one narrow scan does scrub+tokenize+quality (all
-    codegen'd); the dedup window moves each surviving row ONCE to its
-    fingerprint group — unavoidable for exact dedup (the id-only +
-    anti-join variant moves the same bytes, keyed by id instead);
+    exchanges total): one narrow scan does scrub+tokenize+quality; the
+    dedup window moves each surviving row ONCE to its fingerprint group —
+    unavoidable for exact dedup (the id-only + anti-join variant moves the
+    same bytes, keyed by id instead);
     chunking explodes scan-side with no shuffle; the embedding is a
     two-level partial+final aggregate — 3 ints per token occurrence,
     never text, and the second exchange is already collapsed to
@@ -297,12 +298,7 @@ def q_e2e_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _E2E_MIN_WORDS
     )
     fp = toked.withColumn("fp", F.md5(F.array_join("toks", " ")))
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    kept = (
-        fp.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "toks")
-    )
+    kept = S.top_k_per(fp, ["fp"], ["doc_id"], 1).select("doc_id", "toks")
 
     starts = F.sequence(F.lit(0), F.size("toks") - 1, F.lit(_E2E_CHUNK))
     ch = kept.select("doc_id", "toks", F.explode(starts).alias("start"))

@@ -83,8 +83,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized as a float; the band test is a cross-multiplication — so
     the result is hash-exact under any partitioning. Scale shape: one
     narrow scan, per-row expressions only, zero shuffles; at 100 TB this
-    is the cheapest possible full-corpus pass (plan: project over scan,
-    whole-stage codegen)."""
+    is the cheapest possible full-corpus pass (plan: project over scan)."""
     d = load_table(spark, sf_dir, "documents")
     words = T.tokens("text")
     m = d.select(

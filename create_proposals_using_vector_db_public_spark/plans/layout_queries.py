@@ -72,10 +72,9 @@ def q_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph split (app.py:24,33) to length-bounded windows.
 
     Scale shape: tokens stay inside one narrow projection per row —
-    split → sequence → explode is whole-stage-codegen'd, no shuffle at
-    all; 100 TB chunks at scan speed. The value check hashes each chunk
-    (md5) so exact window boundaries are verified without shipping
-    text through the compare."""
+    split → sequence → explode, no shuffle at all; 100 TB chunks at scan
+    speed. The value check hashes each chunk (md5) so exact window
+    boundaries are verified without shipping text through the compare."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toked = d.select("doc_id", T.tokens("text").alias("toks")).withColumn(
         "n", F.size("toks")

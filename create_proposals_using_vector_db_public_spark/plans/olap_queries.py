@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import money_double, revenue_decimal as _rev
+from ..operators import selection as S
 from ..sources import load_table
 from .registry import query
 
@@ -161,15 +162,12 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load_table(spark, sf_dir, "part").filter(F.col("p_size") >= 45)
     s = load_table(spark, sf_dir, "supplier")
-    w = Window.partitionBy("p_partkey").orderBy(
-        F.col("s_acctbal").asc(), F.col("s_suppkey").asc()
-    )
-    return (
-        pairs.join(F.broadcast(p), pairs["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), pairs["l_suppkey"] == s["s_suppkey"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("p_partkey", "s_suppkey", "s_acctbal")
+    joined = pairs.join(
+        F.broadcast(p), pairs["l_partkey"] == p["p_partkey"]
+    ).join(F.broadcast(s), pairs["l_suppkey"] == s["s_suppkey"])
+    order = [F.col("s_acctbal").asc(), F.col("s_suppkey").asc()]
+    return S.top_k_per(joined, ["p_partkey"], order, 1).select(
+        "p_partkey", "s_suppkey", "s_acctbal"
     )
 
 

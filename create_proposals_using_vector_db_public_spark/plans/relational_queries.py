@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.money import money_double, revenue_decimal
+from ..operators import selection as S
 from ..sources import load_table
 from .registry import query
 
@@ -403,18 +404,12 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey, streams each partition; no global sort. The R19 rank
     generalized to grouped ranking."""
     o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.withColumn("order_rank", F.row_number().over(w))
-        .filter(F.col("order_rank") <= 3)
-        .select(
-            F.col("o_custkey").alias("c_custkey"),
-            "o_orderkey",
-            "o_totalprice",
-            "order_rank",
-        )
+    order = [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()]
+    return S.top_k_per(o, ["o_custkey"], order, 3, "order_rank").select(
+        F.col("o_custkey").alias("c_custkey"),
+        "o_orderkey",
+        "o_totalprice",
+        "order_rank",
     )
 
 

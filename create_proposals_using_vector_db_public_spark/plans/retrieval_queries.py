@@ -19,11 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions import text as T
 from ..functions import vectors as V
 from ..operators import retrieval as R
+from ..operators import selection as S
 from ..sources import load_table
 from .curation_queries import (
     _GOPHER_STOPWORDS,
@@ -136,36 +136,21 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the top-k truncation, so no global window ever sees the corpus."""
     d = load_table(spark, sf_dir, "documents")
     seeds = spark.createDataFrame([(t,) for t in _RRF_TERMS], "term: string")
-    lex_top = (
-        R.bm25_scores(d, seeds)
-        .select("doc_id", F.round("score", 6).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_RRF_TOPK)
+    scores = R.bm25_scores(d, seeds).select(
+        "doc_id", F.round("score", 6).alias("s")
     )
-    lex = lex_top.withColumn(
-        "rank_lex",
-        F.row_number().over(
-            Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        ),
+    lex = S.top_k(
+        scores, [F.col("s").desc(), F.col("doc_id").asc()], _RRF_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
     emb = T.stub_embeddings_df(d, "doc_id", "text")
     qv = F.broadcast(
         emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
     )
-    vec_top = (
-        emb.crossJoin(qv)
-        .select(
-            "doc_id",
-            F.round(V.l2_dist("emb", "qv"), 6).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-        .limit(_RRF_TOPK)
+    dists = emb.crossJoin(qv).select(
+        "doc_id", F.round(V.l2_dist("emb", "qv"), 6).alias("dist")
     )
-    vec = vec_top.withColumn(
-        "rank_vec",
-        F.row_number().over(
-            Window.orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-        ),
+    vec = S.top_k(
+        dists, [F.col("dist").asc(), F.col("doc_id").asc()], _RRF_TOPK, "rank_vec"
     ).select("doc_id", "rank_vec")
     return R.rrf_fuse(lex, vec).limit(10)
 
@@ -406,18 +391,10 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     q2 = seeds.unionByName(expansion)
-    top = (
-        R.bm25_scores(d, q2, postings=terms)
-        .select("doc_id", F.round("score", 6).alias("bm25"))
-        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(10)
+    scored = R.bm25_scores(d, q2, postings=terms).select(
+        "doc_id", F.round("score", 6).alias("bm25")
     )
-    return top.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        ),
-    )
+    return S.top_k(scored, [F.col("bm25").desc(), F.col("doc_id").asc()], 10)
 
 
 # --- prefix autocomplete ------------------------------------------------------
@@ -459,17 +436,13 @@ def q_prefix_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("freq"))
     )
-    w = Window.partitionBy("prefix").orderBy(
-        F.col("freq").desc(), F.col("term").asc()
-    )
-    return (
-        tf.withColumn(
-            "prefix", F.substring("term", 1, _COMPLETE_PREFIX_LEN)
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _COMPLETE_TOPK)
-        .select("prefix", "term", "freq", "rnk")
-    )
+    return S.top_k_per(
+        tf.withColumn("prefix", F.substring("term", 1, _COMPLETE_PREFIX_LEN)),
+        ["prefix"],
+        [F.col("freq").desc(), F.col("term").asc()],
+        _COMPLETE_TOPK,
+        "rnk",
+    ).select("prefix", "term", "freq", "rnk")
 
 
 # --- end-to-end serving pipeline ---------------------------------------------
@@ -607,17 +580,11 @@ def q_e2e_rag(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = d.join(kept_ids, "doc_id").select("doc_id", "text")
     postings = terms_all.join(kept_ids, "doc_id")
     seeds = spark.createDataFrame([(t,) for t in _E2E_TERMS], "term: string")
-    lex_top = (
-        R.bm25_scores(kept, seeds, postings=postings)
-        .select("doc_id", F.round("score", 6).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_E2E_TOPK)
+    scores = R.bm25_scores(kept, seeds, postings=postings).select(
+        "doc_id", F.round("score", 6).alias("s")
     )
-    lex = lex_top.withColumn(
-        "rank_lex",
-        F.row_number().over(
-            Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        ),
+    lex = S.top_k(
+        scores, [F.col("s").desc(), F.col("doc_id").asc()], _E2E_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
     emb = T.stub_embeddings_df(kept, "doc_id", "text")
     qv = F.broadcast(
@@ -625,20 +592,11 @@ def q_e2e_rag(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.filter(F.col("doc_id") == 0), "doc_id", "text"
         ).select(F.col("emb").alias("qv"))
     )
-    vec_top = (
-        emb.crossJoin(qv)
-        .select(
-            "doc_id",
-            F.round(V.l2_dist("emb", "qv"), 6).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-        .limit(_E2E_TOPK)
+    dists = emb.crossJoin(qv).select(
+        "doc_id", F.round(V.l2_dist("emb", "qv"), 6).alias("dist")
     )
-    vec = vec_top.withColumn(
-        "rank_vec",
-        F.row_number().over(
-            Window.orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-        ),
+    vec = S.top_k(
+        dists, [F.col("dist").asc(), F.col("doc_id").asc()], _E2E_TOPK, "rank_vec"
     ).select("doc_id", "rank_vec")
     top = R.rrf_fuse(lex, vec).limit(_E2E_FUSED).select("doc_id", "rrf")
     cand = top.join(emb, "doc_id").select(

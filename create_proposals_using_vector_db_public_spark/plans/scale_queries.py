@@ -6,12 +6,13 @@ histograms. Each oracle-checked; each docstring says when to use it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import d_h64, h64
 from ..functions import vectors as V
 from ..functions.money import money_double
+from ..operators import selection as S
 from ..sources import load_table
 from .duck import dd
 from .registry import query
@@ -629,17 +630,13 @@ def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "l_shipdate").alias("month"),
         h64(F.col("l_partkey").cast("string")).alias("h"),
     ).distinct()
-    wm = Window.partitionBy("quarter", "month").orderBy("h")
     msk = (
-        mh.withColumn("rn", F.row_number().over(wm))
-        .filter(F.col("rn") <= _KMV_K)
+        S.top_k_per(mh, ["quarter", "month"], ["h"], _KMV_K, "rn")
         .select("quarter", "h")
         .distinct()
     )
-    wq = Window.partitionBy("quarter").orderBy("h")
     kmv = (
-        msk.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _KMV_K)
+        S.top_k_per(msk, ["quarter"], ["h"], _KMV_K, "rn")
         .groupBy("quarter")
         .agg(
             F.count("*").alias("n_mins"),

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from ..functions import text as T
 from ..functions import vectors as V
 from ..operators import dedup as D
+from ..operators import selection as S
 from ..sources import load_table
 from .duck import d_words
 from .registry import query
@@ -99,9 +100,7 @@ def q_stub_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(V.l2_dist("emb", "qv"), 6).alias("dist"),
     )
-    top = scored.orderBy(F.col("dist").asc(), F.col("doc_id").asc()).limit(10)
-    w = Window.orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-    return top.withColumn("rank", F.row_number().over(w))
+    return S.top_k(scored, [F.col("dist").asc(), F.col("doc_id").asc()], 10)
 
 
 # --- keyword ops (R15 fallback, R16) ----------------------------------------
@@ -193,15 +192,13 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.posexplode(T.keyword_fallback("text", 3)).alias("pos", "keyword"),
     )
-    w_rank = Window.partitionBy("lang").orderBy(
-        F.col("doc_id").asc(), F.col("pos").asc()
-    )
-    return (
-        D.keep_first(kw, ["lang", "keyword"], "doc_id")
-        .withColumn("kw_rank", F.row_number().over(w_rank))
-        .filter(F.col("kw_rank") <= 6)
-        .select("lang", "keyword", "kw_rank")
-    )
+    return S.top_k_per(
+        D.keep_first(kw, ["lang", "keyword"], "doc_id"),
+        ["lang"],
+        [F.col("doc_id").asc(), F.col("pos").asc()],
+        6,
+        "kw_rank",
+    ).select("lang", "keyword", "kw_rank")
 
 
 # --- templating (R22, R24, R25) ---------------------------------------------

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from ..functions import vectors as V
 from ..operators import knn as K
+from ..operators import selection as S
 from ..sources import load_table
 from .duck import d_cosine, d_dot, d_l2, d_l2sq, d_norm, dd
 from .registry import query
@@ -133,7 +134,9 @@ FROM embeddings e, q
 @query("q_vec_math", oracle=_VEC_MATH_ORACLE)
 def q_vec_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zip_with/aggregate vector arithmetic (R17/R18 building blocks) over
-    the whole table — stays entirely in whole-stage codegen."""
+    the whole table — one narrow map, no shuffle. The lambdas are
+    CodegenFallback expressions, so each vector is evaluated interpreted
+    inside the compiled stage."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = V.s_vec_lit(_query_vec(spark, sf_dir, 0))
     e = V.s_as_double_array("embedding")
@@ -245,11 +248,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(V.cosine_sim(V.s_as_double_array("embedding"), qv), 6) + 0.0)
         .alias("cosine"),
     )
-    top = scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(10)
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return top.withColumn("rank", F.row_number().over(w)).orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
+    return S.top_k(scored, [F.col("cosine").desc(), F.col("vec_id").asc()], 10)
 
 
 _ANN_RECALL_ORACLE = f"""

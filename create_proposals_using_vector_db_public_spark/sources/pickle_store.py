@@ -214,8 +214,25 @@ class RefPickleDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    """Idempotent registration of the refpickle format."""
-    spark.dataSource.register(RefPickleDataSource)
+    """Register the refpickle format with ``spark``'s session once.
+
+    Registrations are per session (a ``newSession()`` starts without one),
+    and registering again replaces the source with a JVM warning. Spark
+    also refuses a name that the thread's active session already resolves
+    (``DATA_SOURCE_ALREADY_EXISTS``), so ``spark`` is active for the call."""
+    jss = spark._jsparkSession
+    if jss.sessionState().dataSourceManager().dataSourceExists("refpickle"):
+        return
+    sessions = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = sessions.getActiveSession()
+    sessions.setActiveSession(jss)
+    try:
+        spark.dataSource.register(RefPickleDataSource)
+    finally:
+        if prev.isDefined():
+            sessions.setActiveSession(prev.get())
+        else:
+            sessions.clearActiveSession()
 
 
 def read_doc_data(spark: SparkSession, path: str) -> DataFrame:

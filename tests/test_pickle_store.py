@@ -61,6 +61,38 @@ def test_read_reference_style_store(spark):
     assert got[1].keywords == ["beta", "gamma"]
 
 
+def test_register_once_per_session(spark, monkeypatch):
+    """Reads register the refpickle source once per session: a second read
+    in the same session does not register it again (Spark would log that
+    it replaced the source), and a new session, which starts without the
+    registration, still reads the store."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def spy(self, source):
+        calls.append(source)
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", spy)
+    store = {
+        "names": ["r.docx"],
+        "paragraphs": [("r.docx", 0)],
+        "embeddings": [[1.0]],
+        "keywords": [["k"]],
+    }
+    path = _tmp("doc_data.pkl")
+    with open(path, "wb") as f:
+        pickle.dump(store, f)
+    session = spark.newSession()
+    for _ in range(2):
+        assert pickle_store.read_doc_data(session, path).count() == 1
+    assert len(calls) == 1
+    assert pickle_store.read_doc_data(session.newSession(), path).count() == 1
+    assert len(calls) == 2
+
+
 def test_roundtrip_identity(spark):
     rows = [(f"f{i % 3}.docx", i // 3, [float(i)], [f"k{i}"]) for i in range(9)]
     df = spark.createDataFrame(

@@ -185,6 +185,28 @@ def test_plan_signatures_unchanged(spark):
     )
 
 
+def test_every_pinned_cross_join_is_allowlisted():
+    """Every query whose pinned signature holds a BroadcastNestedLoopJoin
+    or CartesianProduct node has a tools/plan_audit.py ALLOW entry for
+    that flag, with a reason. test_plan_signatures_unchanged pins the
+    signatures to the live plans, so this check needs no Spark session."""
+    import json
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from explain import SIG_PATH
+    from plan_audit import ALLOW, FLAGS
+
+    pinned = json.load(open(SIG_PATH))["signatures"]
+    missing = sorted(
+        (name, flag)
+        for name, nodes in pinned.items()
+        for flag, rx in FLAGS.items()
+        if any(rx.search(n) for n in nodes) and not ALLOW.get(name, {}).get(flag)
+    )
+    assert not missing, f"cross joins without an ALLOW reason: {missing}"
+
+
 @pytest.mark.parametrize("name", ["q_knn", "q_pagerank"])
 def test_plan_text_is_canonical(spark, name):
     """tools/plans/*.txt change only when a plan changes: two captures of

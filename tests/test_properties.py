@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from create_proposals_using_vector_db_public_spark.functions import text as T
 from create_proposals_using_vector_db_public_spark.functions import hashing as H
 from create_proposals_using_vector_db_public_spark.operators import dedup as D
+from create_proposals_using_vector_db_public_spark.operators import selection as S
 
 # printable-ish unicode incl. whitespace runs, CJK, accents — the fixture
 # corpus is Korean+English so non-ASCII must hold
@@ -863,3 +864,46 @@ def test_minhash_signatures_match_python_reference_fuzzed(spark, texts):
             assert i not in got, (i, t, got.get(i))
         else:
             assert got.get(i) == want, (i, t)
+
+
+# (group, score) rows: 3 groups and 4 score values over up to 10 rows force
+# score ties, groups smaller than k, and NULL scores
+_RANKED = st.lists(
+    st.tuples(st.integers(0, 2), st.one_of(st.none(), st.integers(0, 3))),
+    max_size=10,
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_RANKED, st.integers(0, 12))
+def test_top_k_helpers_match_sorted_reference(spark, rows, k):
+    """top_k and top_k_per against Python sorted(): score ties broken by
+    id, NULL scores last under asc_nulls_last, k of 0, 1, a drawn value
+    and more than the row count, groups smaller than k. Each kept row's
+    rank is its position in the order that chose it."""
+    from functools import reduce
+
+    data = [(i, g, sc) for i, (g, sc) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id: int, g: int, score: int")
+    order = [F.col("score").asc_nulls_last(), F.col("id").asc()]
+    ks = sorted({0, 1, k, len(data) + 1})
+    builds = {
+        "top_k": lambda n: S.top_k(df, order, n),
+        "top_k_per": lambda n: S.top_k_per(df, ["g"], order, n),
+    }
+    parts = [
+        build(n).select(F.lit(name).alias("fn"), F.lit(n).alias("k"), "id", "rank")
+        for name, build in builds.items()
+        for n in ks
+    ]
+    got = {tuple(r) for r in reduce(lambda a, b: a.union(b), parts).collect()}
+
+    ranked = sorted(data, key=lambda r: (r[2] is None, r[2] or 0, r[0]))
+    want = {("top_k", n, r[0], pos) for n in ks for pos, r in enumerate(ranked[:n], 1)}
+    want |= {
+        ("top_k_per", n, r[0], pos)
+        for n in ks
+        for g in {r[1] for r in data}
+        for pos, r in enumerate([r for r in ranked if r[1] == g][:n], 1)
+    }
+    assert got == want

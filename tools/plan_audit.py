@@ -61,6 +61,10 @@ ALLOW: dict[str, dict[str, str]] = {
         "nested_loop": "1-row stub query vector + 1-row corpus stats "
         "broadcast cross joins"
     },
+    "q_e2e_rag": {
+        "nested_loop": "1-row BM25 corpus stats (avgdl, n_docs) + 1-row "
+        "stub query vector broadcast cross joins"
+    },
     "q_mmr_rerank": {
         "nested_loop": "1-row query vector; per-step joins against the "
         "<=5-row selected set (greedy MMR unroll)"
