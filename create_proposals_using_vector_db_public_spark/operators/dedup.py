@@ -104,48 +104,41 @@ def minhash_cols(hashed: Column, num_hashes: int = MINHASH_NUM_HASHES) -> list[C
 # polynomial combination constant for word-hash n-grams; intermediates stay
 # < 2^45 (ANSI-safe: Spark 4 errors on long overflow, DuckDB on BIGINT)
 SHINGLE_COMBINE = 8191
+SHINGLE_WORDS = 3  # words per MinHash / SimHash shingle
 
 
-def shingle_hashes_exploded(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_words: int = 3,
-) -> DataFrame:
-    """(id, __s) rows — one integer hash per word n-gram, built from ONE
-    md5 per WORD plus integer combination of consecutive word hashes
-    (lead() over position). The n-gram *strings* never materialize: the
-    naive form (slice + array_join per position, then md5 per shingle)
-    spends most of its time constructing and hashing ~20-char strings.
-    Words repeat heavily, shingles don't — hashing words is strictly less
-    work, and everything downstream is integer math.
+def shingle_hashes_exploded(df: DataFrame) -> DataFrame:
+    """(doc_id, __s) rows over a ``(doc_id, text)`` frame — one integer
+    hash per 3-word shingle, built from ONE md5 per WORD plus integer
+    combination of consecutive word hashes (lead() over position). The
+    n-gram *strings* never materialize: the naive form (slice +
+    array_join per position, then md5 per shingle) spends most of its
+    time constructing and hashing ~20-char strings. Words repeat heavily,
+    shingles don't — hashing words is strictly less work, and everything
+    downstream is integer math.
     """
     toks = df.select(
-        F.col(id_col), F.posexplode(T.tokens(text_col)).alias("__pos", "__w")
+        F.col("doc_id"), F.posexplode(T.tokens("text")).alias("__pos", "__w")
     )
     wh = toks.select(
-        id_col,
+        "doc_id",
         "__pos",
         H.h64(F.col("__w"), nchars=MINHASH_BASE_HEX).alias("__h"),
     )
-    w = Window.partitionBy(id_col).orderBy("__pos")
+    w = Window.partitionBy("doc_id").orderBy("__pos")
     s = F.col("__h")
-    for k in range(1, shingle_words):
+    for k in range(1, SHINGLE_WORDS):
         s = (s * SHINGLE_COMBINE + F.lead("__h", k).over(w)) % MINHASH_P
-    return wh.select(F.col(id_col), s.alias("__s")).filter(
+    return wh.select(F.col("doc_id"), s.alias("__s")).filter(
         F.col("__s").isNotNull()
     )
 
 
 def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_words: int = 3,
-    num_hashes: int = MINHASH_NUM_HASHES,
+    df: DataFrame, num_hashes: int = MINHASH_NUM_HASHES
 ) -> DataFrame:
-    """(id, mh0..mh7) signatures via explode → hash words once → integer
-    shingle hashes → min-aggregate.
+    """(doc_id, mh0..mh7) signatures of a ``(doc_id, text)`` frame via
+    explode → hash words once → integer shingle hashes → min-aggregate.
 
     The row-local form (:func:`minhash_cols` over an array column) is
     algebraically identical, but Catalyst's project-collapsing re-inlines
@@ -155,10 +148,10 @@ def minhash_signatures(
     aggregation share the same hash partitioning, so there is exactly one
     shuffle — at 100 TB it carries three longs per token, nothing more.
 
-    Documents with no shingles (< shingle_words words) produce no rows,
-    matching the NULL-signature filter of the row-local form.
+    Documents with no shingles (< 3 words) produce no rows, matching the
+    NULL-signature filter of the row-local form.
     """
-    hashed = shingle_hashes_exploded(df, id_col, text_col, shingle_words)
+    hashed = shingle_hashes_exploded(df)
     # one expr parse per signature column (the loop otherwise pays ~8 py4j
     # round-trips per hash function — functions.vectors discipline)
     mins = []
@@ -167,24 +160,7 @@ def minhash_signatures(
         mins.append(
             F.expr(f"min(({a} * __s + {b}) % {MINHASH_P}) AS mh{j}")
         )
-    return hashed.groupBy(id_col).agg(*mins)
-
-
-def with_minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    shingle_words: int = 3,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """df columns + mh0..mh7 (joined back on id_col; see
-    :func:`minhash_signatures` for why the signature pass is exploded).
-    LEFT join: documents too short to shingle keep their row with NULL
-    signature columns — the same contract as the row-local
-    :func:`minhash_cols` form, and no silent row loss for enrich-style
-    callers."""
-    sigs = minhash_signatures(df, id_col, text_col, shingle_words, num_hashes)
-    return df.join(sigs, on=id_col, how="left")
+    return hashed.groupBy("doc_id").agg(*mins)
 
 
 def band_key(sig_cols: list[str], band: int, bands: int = MINHASH_BANDS) -> Column:
@@ -196,7 +172,6 @@ def band_key(sig_cols: list[str], band: int, bands: int = MINHASH_BANDS) -> Colu
 
 def lsh_candidate_pairs(
     sigs: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
 ) -> DataFrame:
@@ -209,7 +184,7 @@ def lsh_candidate_pairs(
     """
     sig_names = [f"mh{j}" for j in range(num_hashes)]
     banded = sigs.select(
-        id_col,
+        "doc_id",
         *sig_names,
         F.posexplode(
             F.array(*[band_key(sig_names, b, bands) for b in range(bands)])
@@ -217,13 +192,13 @@ def lsh_candidate_pairs(
     ).filter(F.col(sig_names[0]).isNotNull())
 
     a = banded.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in sig_names],
         "band_idx",
         "band_hash",
     )
     b = banded.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         *[F.col(c).alias(f"{c}_b") for c in sig_names],
         "band_idx",
         "band_hash",
@@ -252,33 +227,22 @@ def lsh_candidate_pairs(
 
 def minhash_dedup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
-    shingle_words: int = 3,
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signature → banded candidates →
-    threshold on estimated Jaccard. Defaults (8 hashes / 2 bands) fit the
-    oracle fixture; production recall at 100 TB wants num_hashes=128,
-    bands=16 — the match probability is 1-(1-j^(n/b))^b, and 8/2 misses too
-    many 0.5-Jaccard pairs for a real pipeline."""
-    sigs = minhash_signatures(df, id_col=id_col, text_col=text_col,
-                              shingle_words=shingle_words,
-                              num_hashes=num_hashes)
-    pairs = lsh_candidate_pairs(sigs, id_col, num_hashes=num_hashes,
-                                bands=bands)
+    """Full MinHash-LSH near-dup pipeline over a ``(doc_id, text)`` frame:
+    signature → banded candidates → threshold on estimated Jaccard.
+    Defaults (8 hashes / 2 bands) fit the oracle fixture; production
+    recall at 100 TB wants num_hashes=128, bands=16 — the match
+    probability is 1-(1-j^(n/b))^b, and 8/2 misses too many 0.5-Jaccard
+    pairs for a real pipeline."""
+    sigs = minhash_signatures(df, num_hashes=num_hashes)
+    pairs = lsh_candidate_pairs(sigs, num_hashes=num_hashes, bands=bands)
     return pairs.filter(F.col("est_jaccard") >= threshold)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
     """Winnowed k-gram fingerprints (the MOSS scheme) over WORD k-grams:
     hash every word, roll a k-word shingle hash along the token sequence,
     slide a `window` over the shingle hashes, keep each window's minimum —
@@ -292,16 +256,17 @@ def winnow_fingerprints(
     invisible). Word-shingle diversity is vocab^k, so document frequencies
     stay discriminative at any corpus size.
 
-    Returns exploded (id, fp) rows, distinct per doc. Cost: one md5 per
-    word (the MinHash discipline: hash words once, combine arithmetically);
-    the k-word shingle hash is the Horner affine chain
-    ``s = (s*A + w_j) mod P`` — products < 2^48, bit-exact on both engines.
+    Returns exploded (doc_id, fp) rows of a ``(doc_id, text)`` frame,
+    distinct per doc. Cost: one md5 per word (the MinHash discipline:
+    hash words once, combine arithmetically); the k-word shingle hash is
+    the Horner affine chain ``s = (s*A + w_j) mod P`` — products < 2^48,
+    bit-exact on both engines.
 
     Docs with fewer than k words contribute nothing; docs with fewer than
     `window` shingles contribute their single overall min.
     """
     whash = F.transform(
-        T.tokens(F.col(text_col)),
+        T.tokens(F.col("text")),
         lambda t: H.h64(t, nchars=MINHASH_BASE_HEX),
     )
     # materialize each intermediate array in its OWN projection, then window
@@ -312,8 +277,8 @@ def winnow_fingerprints(
     # filter re-inlines the per-word md5 chain into the predicate and
     # pushdown then runs it serialized inside the scan stage (same failure
     # as ngram_jaccard_pairs above).
-    coded = df.filter(F.size(T.tokens(F.col(text_col))) >= k).select(
-        F.col(id_col), whash.alias("__w")
+    coded = df.filter(F.size(T.tokens(F.col("text"))) >= k).select(
+        F.col("doc_id"), whash.alias("__w")
     )
 
     def shingle_hash(i):  # position i (1-based Column) -> Horner chain
@@ -325,7 +290,7 @@ def winnow_fingerprints(
     hashed = F.transform(
         F.sequence(F.lit(1), F.size("__w") - (k - 1)), shingle_hash
     )
-    base = coded.select(F.col(id_col), hashed.alias("__h"))
+    base = coded.select(F.col("doc_id"), hashed.alias("__h"))
     mins_over_h = F.when(
         F.size("__h") >= window,
         F.transform(
@@ -334,14 +299,12 @@ def winnow_fingerprints(
         ),
     ).otherwise(F.array(F.array_min(F.col("__h"))))
     return base.select(
-        id_col, F.explode(F.array_distinct(mins_over_h)).alias("fp")
+        "doc_id", F.explode(F.array_distinct(mins_over_h)).alias("fp")
     )
 
 
 def winnow_dup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     window: int = 4,
     max_df: int = 10,
@@ -353,7 +316,7 @@ def winnow_dup_pairs(
     skew-free; identical to dropping stop-shingles in MinHash). The join
     key is the fingerprint itself — high cardinality, well distributed
     once capped."""
-    fps = winnow_fingerprints(df, id_col, text_col, k, window)
+    fps = winnow_fingerprints(df, k, window)
     rare = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("__df"))
@@ -361,8 +324,8 @@ def winnow_dup_pairs(
         .select("fp")
     )
     capped = fps.join(rare, on="fp")
-    a = capped.select(F.col(id_col).alias("id_a"), "fp")
-    b = capped.select(F.col(id_col).alias("id_b"), "fp")
+    a = capped.select(F.col("doc_id").alias("id_a"), "fp")
+    b = capped.select(F.col("doc_id").alias("id_b"), "fp")
     return (
         a.join(b.hint("merge"), on="fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -372,13 +335,9 @@ def winnow_dup_pairs(
     )
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    rounds: int = 3,
-) -> DataFrame:
-    """Connected components over near-dup pairs by min-label propagation:
+def dup_clusters(pairs: DataFrame, rounds: int = 3) -> DataFrame:
+    """Connected components over ``(id_a, id_b)`` near-dup pairs by
+    min-label propagation:
     every node starts labeled with its own id; each round every node takes
     the minimum label among itself and its neighbors. After the clusters'
     diameter in rounds, the label IS the component id (min member id) — the
@@ -397,9 +356,9 @@ def dup_clusters(
     """
     pairs = pairs.localCheckpoint(eager=False)
     edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -430,17 +389,15 @@ def dup_clusters(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     block_chars: int = 20,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """Exact character-n-gram Jaccard between documents sharing a blocking
-    key (first `block_chars` chars). Blocking bounds the pair space the way
-    LSH bands do, but the verify step computes TRUE Jaccard on the distinct
-    n-gram sets."""
-    grams = F.array_distinct(T.char_ngrams(text_col, n))
+    """Exact character-n-gram Jaccard between the ``(doc_id, text)``
+    documents sharing a blocking key (first `block_chars` chars).
+    Blocking bounds the pair space the way LSH bands do, but the verify
+    step computes TRUE Jaccard on the distinct n-gram sets."""
+    grams = F.array_distinct(T.char_ngrams("text", n))
     # Filter on the equivalent CHEAP predicate (grams is non-empty iff the
     # text has >= n chars) BEFORE projecting the grams. Filtering on
     # size(grams) AFTER the projection re-inlines the whole char-n-gram
@@ -449,16 +406,16 @@ def ngram_jaccard_pairs(
     # into the scan stage — where a single-row-group file serializes it
     # onto one core (measured at sf10: the scan stage ran 19 empty tasks
     # + 1 task doing every doc's n-grams twice).
-    base = df.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col),
-        F.md5(F.substring(text_col, 1, block_chars)).alias("block"),
+    base = df.filter(F.length(F.col("text")) >= n).select(
+        F.col("doc_id"),
+        F.md5(F.substring("text", 1, block_chars)).alias("block"),
         grams.alias("grams"),
     )
     a = base.select(
-        F.col(id_col).alias("id_a"), "block", F.col("grams").alias("grams_a")
+        F.col("doc_id").alias("id_a"), "block", F.col("grams").alias("grams_a")
     )
     b = base.select(
-        F.col(id_col).alias("id_b"), "block", F.col("grams").alias("grams_b")
+        F.col("doc_id").alias("id_b"), "block", F.col("grams").alias("grams_b")
     )
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
@@ -483,80 +440,52 @@ def ngram_jaccard_pairs(
 # at 500k docs with the old 32-bit family — SCALE.md "detector pricing").
 # At 64 bits the same tail is ~2.4e-15, negligible even at 10^9 docs.
 SIMHASH_BITS = 64
-# Each affine draw is mod 2^31-1, so it yields 31 honest bits; wider
-# signatures take bits from INDEPENDENT draws (a "64-bit" signature built
-# by reusing one draw's bits would collide exactly like a 31-bit one —
-# perfectly correlated halves).
+SIMHASH_WORDS = 2  # 32-bit words sh0, sh1 a signature packs into
+# Each affine draw is mod 2^31-1, so it yields 31 honest bits; the 64 bits
+# come from three INDEPENDENT draws (a "64-bit" signature built by reusing
+# one draw's bits would collide exactly like a 31-bit one — perfectly
+# correlated halves).
 SIMHASH_BITS_PER_DRAW = 31
 # One (a, b) mix per draw: small classic Lehmer/L'Ecuyer multipliers.
-# 48271 (Park-Miller 1988 revision), 69621, 16807 (MINSTD), and 39373 are
-# verified primitive roots mod 2^31-1 (full period); 40692 is L'Ecuyer's
-# full-period multiplier for the close prime 2147483399, kept unchanged so
-# stored 64-bit signatures stay stable. All multipliers are < 2^17 and
-# shingle hashes are < 2^31, so every product stays < 2^48 — exact under
-# Spark's ANSI mode and DuckDB BIGINT alike. Five draws x 31 bits cap the
-# signature width at 155 bits, which covers the 128-bit config.
-# EXTENSION RULE (if anything ever needs >155 bits): append another
-# primitive root mod 2^31-1 that is < 2^17 — verify with
-# all(pow(a, (p-1)//q, p) != 1 for q in (2,3,7,11,31,151,331)), p=2^31-1.
-# The DuckDB oracle mirrors whatever is here (plans/dedup_queries.py
-# generates its SQL from this table), so no second edit is needed.
+# 48271 (Park-Miller 1988 revision) and 69621 are verified primitive roots
+# mod 2^31-1 (full period); 40692 is L'Ecuyer's full-period multiplier for
+# the close prime 2147483399, kept unchanged so stored 64-bit signatures
+# stay stable. All multipliers are < 2^17 and shingle hashes are < 2^31, so
+# every product stays < 2^48 — exact under Spark's ANSI mode and DuckDB
+# BIGINT alike. The DuckDB oracle mirrors this table
+# (plans/dedup_queries.py generates its SQL from it).
 SIMHASH_MIX = (
     (48271, 11939),
     (69621, 12345),
     (40692, 7777),
-    (16807, 5551),
-    (39373, 9999),
 )
 
 
-def simhash_words(bits: int = SIMHASH_BITS) -> int:
-    """Number of 32-bit words (sh0, sh1, ...) a signature packs into."""
-    return (bits + 31) // 32
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """64-bit SimHash per document of a ``(doc_id, text)`` frame: integer
+    shingle hashes (see :func:`shingle_hashes_exploded`) → distinct per
+    doc → one affine mix per 31-bit draw → per-bit conditional counts in
+    one partial+final aggregation. Each word is hashed exactly once.
 
-
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-    shingle_words: int = 3,
-) -> DataFrame:
-    """SimHash per document: integer shingle hashes (see
-    :func:`shingle_hashes_exploded`) → distinct per doc → one affine mix
-    per 31-bit draw → per-bit conditional counts in one partial+final
-    aggregation. Each word is hashed exactly once at any supported
-    width. Width is capped at 31 x len(SIMHASH_MIX) bits (155 with the
-    published 5-draw family — covering the 128-bit config); past the cap
-    the function fails loudly rather than silently correlating bits. To
-    extend, follow the EXTENSION RULE documented at SIMHASH_MIX.
-
-    Output: ``(id_col, sh0[, sh1, ...])`` — one non-negative 32-bit word
-    per column (bit b lives in word b div 32). Packing into 32-bit words
+    Output: ``(doc_id, sh0, sh1)`` — one non-negative 32-bit word per
+    column (bit b lives in word b div 32). Packing into 32-bit words
     instead of one 64-bit value keeps every signature value positive, so
     band extraction (div/mod) and Hamming (xor + bit_count) never touch a
     sign bit on either engine. Global bit b draws local bit (b mod 31) of
     draw (b div 31) — each draw an independent affine mix mod 2^31-1
-    (SIMHASH_MIX), which is what makes the advertised width honest."""
-    ndraws = (bits + SIMHASH_BITS_PER_DRAW - 1) // SIMHASH_BITS_PER_DRAW
-    if ndraws > len(SIMHASH_MIX):
-        raise ValueError(
-            f"{bits} bits needs {ndraws} draws; SIMHASH_MIX has "
-            f"{len(SIMHASH_MIX)} — extend the published family (the oracle "
-            f"mirrors these constants)"
-        )
-    hashed = shingle_hashes_exploded(df, id_col, text_col, shingle_words or 3)
-    distinct = hashed.dropDuplicates([id_col, "__s"])
+    (SIMHASH_MIX), which is what makes the 64-bit width honest."""
+    hashed = shingle_hashes_exploded(df)
+    distinct = hashed.dropDuplicates(["doc_id", "__s"])
     # whole-string expression construction: the per-bit loop otherwise
     # costs ~5 py4j round-trips per bit x 64 bits plus ~8 per packed-word
     # CASE arm — measured as the dominant build cost of q_dedup_simhash
     # (1.9 s of a 3.2 s query). One expr parse per generated column keeps
     # the identical analyzed tree (functions.vectors discipline).
     mixed = distinct.select(
-        id_col,
+        "doc_id",
         *[
             F.expr(f"({a} * __s + {b}) % {MINHASH_P} AS __v{k}")
-            for k, (a, b) in enumerate(SIMHASH_MIX[:ndraws])
+            for k, (a, b) in enumerate(SIMHASH_MIX)
         ],
     )
     bit_counts = [
@@ -564,81 +493,51 @@ def simhash_signatures(
             f"sum(CAST((__v{b // SIMHASH_BITS_PER_DRAW} div "
             f"{1 << (b % SIMHASH_BITS_PER_DRAW)}) % 2 AS INT)) AS __c{b}"
         )
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
-    agged = mixed.groupBy(id_col).agg(F.count("*").alias("__n"), *bit_counts)
+    agged = mixed.groupBy("doc_id").agg(F.count("*").alias("__n"), *bit_counts)
     words = []
-    for w in range(simhash_words(bits)):
+    for w in range(SIMHASH_WORDS):
         word_sql = " + ".join(
             f"(CASE WHEN __c{b} * 2 > __n THEN {1 << (b - 32 * w)} "
             f"ELSE 0 END)"
-            for b in range(32 * w, min(32 * (w + 1), bits))
+            for b in range(32 * w, 32 * (w + 1))
         )
         words.append(F.expr(f"CAST({word_sql} AS BIGINT) AS sh{w}"))
-    return agged.select(F.col(id_col), *words)
+    return agged.select(F.col("doc_id"), *words)
 
 
-def simhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, blocked on 4 equal-width
-    bands: Hamming(a,b) <= 3 ⇒ at least one of the 4 bands is untouched
-    (pigeonhole), so the band join loses no true pair at the default
-    threshold while avoiding the n² compare. 64 bits / 4 bands / hamming 3
-    is exactly the Manku et al. (WWW'07) web-scale configuration; above
-    hamming 3 the blocking becomes approximate (documented, not silent).
-
-    Width guard: the 4 bands must TILE the 32-bit signature words — i.e.
-    band_bits (= bits/4) must divide 32, so bits is a power of two in
-    [4, 128]. A non-tiling width like 40 would leave bits 30-31 outside
-    every band: recall would survive (an untouched bit perturbs no band,
-    so the pigeonhole bound holds a fortiori) but the exact Manku band
-    layout this docstring promises would not. Widths ABOVE 128 are also
-    rejected: their bands span multiple 32-bit words, and the extraction
-    below reads exactly one word per band — accepting them would silently
-    block on that same weaker truncated-band layout (today they are
-    doubly unreachable, since SIMHASH_MIX caps the family at 155 bits and
-    the next tiling width is 256; if the mix family is ever extended past
-    256 bits, band extraction must learn to concatenate band_bits/32
-    whole words per band before this guard is relaxed)."""
-    if bits % 4:
-        raise ValueError("band blocking needs bits divisible by 4")
-    band_bits = bits // 4
-    if 32 % band_bits != 0:
-        raise ValueError(
-            f"bits={bits} gives band_bits={band_bits}, which does not tile "
-            f"the 32-bit signature words (need band_bits | 32, i.e. a "
-            f"power-of-two width in [4, 128]); widths > 128 need "
-            f"multi-word band extraction, which this blocker does not do"
-        )
-    per_word = max(1, 32 // band_bits)  # bands carved per 32-bit word
-    base = simhash_signatures(df, id_col=id_col, text_col=text_col, bits=bits)
-    sig_cols = [f"sh{w}" for w in range(simhash_words(bits))]
+def simhash_dedup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs of a ``(doc_id, text)`` frame by SimHash Hamming
+    distance, blocked on 4 16-bit bands: Hamming(a,b) <= 3 ⇒ at least one
+    of the 4 bands is untouched (pigeonhole), so the band join loses no
+    true pair at the default threshold while avoiding the n² compare.
+    64 bits / 4 bands / hamming 3 is exactly the Manku et al. (WWW'07)
+    web-scale configuration; above hamming 3 the blocking becomes
+    approximate (documented, not silent)."""
+    base = simhash_signatures(df)
+    sig_cols = [f"sh{w}" for w in range(SIMHASH_WORDS)]
+    # band i is the 16-bit half (i mod 2) of word i div 2
     band_vals = [
         F.expr(
-            f"CAST({sig_cols[i // per_word]} / "
-            f"{1 << (band_bits * (i % per_word))} AS BIGINT) "
-            f"% {1 << band_bits}"
+            f"CAST({sig_cols[i // 2]} / {1 << (16 * (i % 2))} AS BIGINT) "
+            f"% {1 << 16}"
         )
         for i in range(4)
     ]
     banded = base.select(
-        id_col,
+        "doc_id",
         *sig_cols,
         F.posexplode(F.array(*band_vals)).alias("band_idx", "band_val"),
     )
     a = banded.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in sig_cols],
         "band_idx",
         "band_val",
     )
     b = banded.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         *[F.col(c).alias(f"{c}_b") for c in sig_cols],
         "band_idx",
         "band_val",
@@ -653,8 +552,8 @@ def simhash_dedup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
         # Hamming BEFORE the pair-dedup shuffle: bands collide by chance
-        # at ~1/2^band_bits per band, so the candidate set is dominated by
-        # far pairs — filtering first shrinks the dropDuplicates exchange
+        # at ~1/2^16 per band, so the candidate set is dominated by far
+        # pairs — filtering first shrinks the dropDuplicates exchange
         # from every chance collision down to the true near-dups. Result
         # is identical (hamming is a function of the dedup key).
         .filter(F.col("hamming") <= max_hamming)
@@ -664,59 +563,53 @@ def simhash_dedup_pairs(
 
 # --- embedding cosine near-dup ------------------------------------------------
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
-    threshold: float = 0.95,
-    bands: int = 2,
-    planes_per_band: int = 6,
-) -> DataFrame:
-    """Near-dup pairs by cosine similarity, banded-LSH-blocked so the pair
-    space stays bounded as the corpus grows.
+EMBED_LSH_BANDS = 2
+EMBED_LSH_PLANES = 6  # sign bits per band: 64 buckets per label block
 
-    A coarse block (``block_col``; pass None for LSH-only) alone does NOT
-    scale: fixed-cardinality blocks grow linearly with the corpus, so
-    within-block pairs grow QUADRATICALLY (measured 13s → 132s for x10
-    data at sf1 with 10 label blocks). Each block is therefore sub-divided
-    by ``bands`` hashed-hyperplane sign buckets of ``planes_per_band``
-    bits (hashed_hyperplane_bucket); candidates = pairs sharing a bucket
-    in ANY band. This is MinHash-LSH banding transplanted to the
-    embedding space: identical vectors collide in every band (recall 1.0
-    on exact copies), genuinely-near pairs collide with the standard
-    banded probability 1-(1-s^r)^b, and bucket count 2^planes_per_band
-    is the knob that keeps per-bucket pair work flat as n grows.
+
+def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Near-dup pairs of a ``(vec_id, label, embedding)`` frame by cosine
+    similarity, banded-LSH-blocked so the pair space stays bounded as the
+    corpus grows.
+
+    The coarse ``label`` block alone does NOT scale: fixed-cardinality
+    blocks grow linearly with the corpus, so within-block pairs grow
+    QUADRATICALLY (measured 13s → 132s for x10 data at sf1 with 10 label
+    blocks). Each block is therefore sub-divided by EMBED_LSH_BANDS
+    hashed-hyperplane sign buckets of EMBED_LSH_PLANES bits
+    (hashed_hyperplane_bucket); candidates = pairs sharing a bucket in ANY
+    band. This is MinHash-LSH banding transplanted to the embedding space:
+    identical vectors collide in every band (recall 1.0 on exact copies),
+    genuinely-near pairs collide with the standard banded probability
+    1-(1-s^r)^b, and the bucket count 2^EMBED_LSH_PLANES is what keeps
+    per-bucket pair work flat as n grows.
 
     Cost per candidate is ONE dot product: both sides are L2-normalized
     once before the joins (the measured q_semdedup optimization; an
     oracle must mirror dot(normalize(a), normalize(b)) exactly)."""
     from ..functions import vectors as V
 
-    blk = F.lit(0) if block_col is None else F.col(block_col)
     base = df.select(
-        F.col(id_col),
-        blk.alias("__blk"),
-        V.normalize(V.s_as_double_array(vec_col)).alias("__v"),
+        F.col("vec_id"),
+        F.col("label").alias("__blk"),
+        V.normalize(V.s_as_double_array("embedding")).alias("__v"),
     )
     parts = []
-    for band in range(bands):
+    for band in range(EMBED_LSH_BANDS):
         banded = base.select(
-            id_col,
+            "vec_id",
             "__blk",
             "__v",
-            hashed_hyperplane_bucket(
-                "__v", band, planes_per_band
-            ).alias("__bkt"),
+            hashed_hyperplane_bucket("__v", band).alias("__bkt"),
         )
         a = banded.select(
-            F.col(id_col).alias("id_a"),
+            F.col("vec_id").alias("id_a"),
             F.col("__v").alias("va"),
             "__blk",
             "__bkt",
         )
         b = banded.select(
-            F.col(id_col).alias("id_b"),
+            F.col("vec_id").alias("id_b"),
             F.col("__v").alias("vb"),
             "__blk",
             "__bkt",
@@ -761,13 +654,11 @@ def _sign_bits(vec: str, predicates: Iterable[str]) -> Column:
     return F.expr("concat(" + ", ".join(signs) + ")")
 
 
-def hashed_hyperplane_bucket(
-    vec_col: str, band: int, n_planes: int = 6
-) -> Column:
+def hashed_hyperplane_bucket(vec_col: str, band: int) -> Column:
     """Pseudo-random-hyperplane LSH bucket for one band: sign bits of
-    ``n_planes`` projections whose ±1 pattern per (global plane p,
+    EMBED_LSH_PLANES (n) projections whose ±1 pattern per (global plane p,
     element i) is the LCG bit ``(i*1103515245 + p*12345) // 65536 % 2``
-    (+1 when it is 0), for p = band*n_planes .. band*n_planes+n_planes-1.
+    (+1 when it is 0), for p = band*n .. band*n+n-1.
 
     Unlike random_hyperplane_block's parity patterns (degenerate for
     plane p when 2^p >= dim — every element gets the same sign), the
@@ -781,7 +672,9 @@ def hashed_hyperplane_bucket(
         (
             f"CAST((CAST(i AS BIGINT) * 1103515245 + {p * 12345}) / 65536 "
             f"AS BIGINT) % 2 = 0"
-            for p in range(band * n_planes, (band + 1) * n_planes)
+            for p in range(
+                band * EMBED_LSH_PLANES, (band + 1) * EMBED_LSH_PLANES
+            )
         ),
     )
 
@@ -800,18 +693,12 @@ def random_hyperplane_block(vec_col: str, n_planes: int = 8) -> Column:
 
 # --- SemDeDup: within-cluster semantic dedup ---------------------------------
 
-def semdedup_keep(
-    assigned: DataFrame,
-    id_col: str = "vec_id",
-    cluster_col: str = "centroid_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-) -> DataFrame:
+def semdedup_keep(assigned: DataFrame, threshold: float = 0.3) -> DataFrame:
     """SemDeDup's keep step (Abbas et al. 2023, public paper): given
     vectors already coarse-clustered (``knn.ivf_assign`` output or any
-    (id, cluster, vector) frame), drop every vector whose rounded cosine
-    similarity to a LOWER-id member of the SAME cluster exceeds
-    ``threshold``; return the kept (id, cluster) rows.
+    (vec_id, centroid_id, embedding) frame), drop every vector whose
+    rounded cosine similarity to a LOWER-id member of the SAME cluster
+    exceeds ``threshold``; return the kept (vec_id, centroid_id) rows.
 
     Determinism: the "first" representative of a duplicate set is the
     minimum id (a total order), and cosine is rounded to 6dp before the
@@ -840,9 +727,9 @@ def semdedup_keep(
         assigned.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     base = assigned.select(
-        F.col(id_col).alias("__id"),
-        F.col(cluster_col).alias("__cl"),
-        V.normalize(V.s_as_double_array(vec_col)).alias("__v"),
+        F.col("vec_id").alias("__id"),
+        F.col("centroid_id").alias("__cl"),
+        V.normalize(V.s_as_double_array("embedding")).alias("__v"),
     ).repartition(shuffle_n, "__cl")
     # No checkpoint here (round 13): the three references to ``base``
     # below (both pair-join sides + the anti-join's kept side) all sit
@@ -879,5 +766,5 @@ def semdedup_keep(
     )
     return (
         base.join(dropped, "__id", "left_anti")
-        .select(F.col("__id").alias(id_col), F.col("__cl").alias(cluster_col))
+        .select(F.col("__id").alias("vec_id"), F.col("__cl").alias("centroid_id"))
     )

@@ -67,10 +67,7 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     under 4 MB) still gets spread — measured q_semdedup 3.28 s -> 2.94 s —
     while the added exchange on genuinely tiny inputs costs ~0.05 s. No
     optimizer-statistics probe runs, so the guard adds no driver-side
-    optimization pass on the guarded subtree. Loops must not re-pay the
-    exchange per iteration: they guard once outside and pass
-    ``ensure=False`` inside (:func:`kmeans_codebook`; guarding per Lloyd
-    round measured 1.7x slower on q_ann_ivf_kmeans).
+    optimization pass on the guarded subtree.
 
     The partition count comes from the plan's physical RDD
     (``queryExecution().toRdd()``). On an exchange-free input (a scan or
@@ -97,11 +94,11 @@ def knn(
     df: DataFrame,
     query_vec: Sequence[float] | str,
     k: int,
-    vec_col: str = "embedding",
     id_col: str = "vec_id",
     ensure: bool = True,
 ) -> DataFrame:
-    """Exact top-k by L2 distance, with cosine reported (not ranked by).
+    """Exact top-k by L2 distance over ``embedding``, with cosine reported
+    (not ranked by).
 
     Returns the input columns (minus the raw vector) plus ``dist``,
     ``cosine`` and 1-based ``rank``. Ties broken by ``id_col`` so results
@@ -118,7 +115,7 @@ def knn(
     if ensure:
         df = ensure_parallelism(df)
     q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
-    emb = V.s_as_double_array(vec_col)
+    emb = V.s_as_double_array("embedding")
     dist = F.round(V.l2_dist(emb, q), 6)
     # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero) into
     # +0.0 — the engines disagree on which zero round() emits, and an
@@ -127,19 +124,12 @@ def knn(
     out = df.withColumn("dist", dist).withColumn("cosine", cos)
     return S.top_k(
         out, [F.col("dist").asc_nulls_last(), F.col(id_col).asc()], k
-    ).drop(vec_col)
+    ).drop("embedding")
 
 
-def knn_join(
-    queries_df: DataFrame,
-    corpus_df: DataFrame,
-    k: int,
-    query_vec_col: str = "query_vec",
-    query_id_col: str = "query_id",
-    corpus_vec_col: str = "embedding",
-    corpus_id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k per query for a (small) batch of queries: broadcast the query
+def knn_join(queries_df: DataFrame, corpus_df: DataFrame, k: int) -> DataFrame:
+    """Top-k per query for a (small) batch of ``(query_id, query_vec)``
+    queries over a ``(vec_id, embedding)`` corpus: broadcast the query
     side, one pass over the corpus, window top-k per query.
 
     At scale the corpus is the 100 TB side and stays partitioned in place;
@@ -149,34 +139,25 @@ def knn_join(
     """
     q = F.broadcast(
         queries_df.select(
-            F.col(query_id_col),
-            V.as_double_array(query_vec_col).alias("__qv"),
+            F.col("query_id"),
+            V.as_double_array("query_vec").alias("__qv"),
         )
     )
-    c = ensure_parallelism(
-        corpus_df.select(corpus_id_col, corpus_vec_col)
-    ).select(
-        F.col(corpus_id_col), V.as_double_array(corpus_vec_col).alias("__cv")
+    c = ensure_parallelism(corpus_df.select("vec_id", "embedding")).select(
+        F.col("vec_id"), V.as_double_array("embedding").alias("__cv")
     )
     joined = c.crossJoin(q).withColumn(
         "dist", F.round(V.l2_dist("__cv", "__qv"), 6)
     )
-    order = [F.col("dist").asc_nulls_last(), F.col(corpus_id_col).asc()]
-    return S.top_k_per(joined, [query_id_col], order, k).select(
-        query_id_col, corpus_id_col, "dist", "rank"
+    order = [F.col("dist").asc_nulls_last(), F.col("vec_id").asc()]
+    return S.top_k_per(joined, ["query_id"], order, k).select(
+        "query_id", "vec_id", "dist", "rank"
     )
 
 
-def ivf_assign(
-    corpus_df: DataFrame,
-    centroids_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
-    ensure: bool = True,
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest centroid.
+def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
+    """IVF coarse quantization: assign every ``(vec_id, embedding, ...)``
+    corpus vector to its nearest ``(centroid_id, centroid_vec)`` centroid.
 
     Centroids are broadcast (there are hundreds-to-thousands of them even at
     100 TB); assignment is a broadcast cross join + per-vector argmin via a
@@ -187,53 +168,39 @@ def ivf_assign(
     Ties broken by ``centroid_id`` via lexicographic struct comparison, so
     assignment is deterministic (SURVEY §7 trap 5).
 
-    Re-assignment safe: a corpus that already carries assignment columns
-    (this function's own output, fed back after a codebook update) has
-    them dropped first — otherwise the cross join would raise
-    AMBIGUOUS_REFERENCE on ``centroid_id``.
-
     Parallelism: assignment is compute-dense (k interpreted array-L2s
     per row) but byte-light, so the corpus goes through
     :func:`ensure_parallelism` — without it a single-row-group parquet
     scan runs all n x k distances in ONE task (the sf10 proof's
-    multi-minute straggler). Pass ``ensure=False`` when the caller
-    already guarded the corpus (:func:`kmeans_codebook` does it once
-    outside its Lloyd loop instead of once per iteration).
+    multi-minute straggler).
     """
-    stale = [
-        c for c in (centroid_id_col, "centroid_dist")
-        if c in corpus_df.columns
-    ]
-    if stale:
-        corpus_df = corpus_df.drop(*stale)
-    if ensure:
-        # keyed by the id: the argmin groupBy below clusters on id_col, so
-        # the guard's exchange doubles as the aggregate's distribution —
-        # one shuffle of the corpus instead of round-robin + groupBy(id)
-        corpus_df = ensure_parallelism(corpus_df, key=id_col)
+    # keyed by the id: the argmin groupBy below clusters on vec_id, so the
+    # guard's exchange doubles as the aggregate's distribution — one
+    # shuffle of the corpus instead of round-robin + groupBy(id)
+    corpus_df = ensure_parallelism(corpus_df, key="vec_id")
     cents = F.broadcast(
         centroids_df.select(
-            F.col(centroid_id_col),
-            V.as_double_array(centroid_vec_col).alias("__cent"),
+            F.col("centroid_id"),
+            V.as_double_array("centroid_vec").alias("__cent"),
         )
     )
-    emb = V.as_double_array(vec_col)
-    rest = [c for c in corpus_df.columns if c != id_col]
+    emb = V.as_double_array("embedding")
+    rest = [c for c in corpus_df.columns if c != "vec_id"]
     scored = (
         corpus_df.withColumn("__v", emb)
         .crossJoin(cents)
         .withColumn("__cdist", F.round(V.l2_dist("__v", "__cent"), 6))
     )
-    best = scored.groupBy(id_col).agg(
+    best = scored.groupBy("vec_id").agg(
         F.min_by(
-            F.struct(F.col("__cdist"), F.col(centroid_id_col), *rest),
-            F.struct(F.col("__cdist"), F.col(centroid_id_col)),
+            F.struct(F.col("__cdist"), F.col("centroid_id"), *rest),
+            F.struct(F.col("__cdist"), F.col("centroid_id")),
         ).alias("__best")
     )
     return best.select(
-        id_col,
+        "vec_id",
         *[F.col(f"__best.{c}") for c in rest],
-        F.col(f"__best.{centroid_id_col}").alias(centroid_id_col),
+        F.col("__best.centroid_id").alias("centroid_id"),
         F.col("__best.__cdist").alias("centroid_dist"),
     )
 
@@ -243,53 +210,29 @@ def lsh_search(
     query_vec: Sequence[float] | str,
     k: int,
     n_planes: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probe: int = 1,
 ) -> DataFrame:
-    """Hyperplane-LSH ANN: bucket every vector by the sign pattern of
-    ``n_planes`` deterministic projections (operators.dedup.
-    random_hyperplane_block — the same blocks the embedding near-dup
-    family uses), then exact-search only the query's bucket.
+    """Hyperplane-LSH ANN over a ``(vec_id, embedding, ...)`` corpus:
+    bucket every vector by the sign pattern of ``n_planes`` deterministic
+    projections (operators.dedup.random_hyperplane_block — the same
+    blocks the embedding near-dup family uses), then exact-search only the
+    query's bucket.
 
     The other scale path next to :func:`ivf_search`: no codebook to train,
     2^n_planes buckets, and with the corpus partitioned by block the scan
-    prunes to ~n_probe/2^n_planes of the data. Candidates from the bucket
-    go through :func:`knn`, so ranking semantics (L2 order, cosine
-    reported, 1-based rank) are identical to the exact path.
-
-    ``n_probe`` > 1 is multi-probe LSH: also search the buckets whose sign
-    pattern differs from the query's in exactly one plane (a near-boundary
-    neighbor most likely lands there). Up to ``1 + n_planes`` buckets.
+    prunes to ~1/2^n_planes of the data. Candidates from the bucket go
+    through :func:`knn`, so ranking semantics (L2 order, cosine reported,
+    1-based rank) are identical to the exact path.
     """
     from . import dedup as D
 
     q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
     blocked = corpus_df.withColumn(
         "__blk",
-        D.random_hyperplane_block(V.s_as_double_array(vec_col), n_planes),
+        D.random_hyperplane_block(V.s_as_double_array("embedding"), n_planes),
     )
     qblk = D.random_hyperplane_block(q, n_planes)
-    if n_probe <= 1:
-        cond = F.col("__blk") == qblk
-    else:
-        # flip one sign at a time: substring surgery on the block string,
-        # deterministic probe order = plane order
-        probes = [qblk]
-        for p in range(min(n_probe - 1, n_planes)):
-            bit = F.substring(qblk, p + 1, 1)
-            flipped = F.when(bit == "1", F.lit("0")).otherwise(F.lit("1"))
-            probes.append(
-                F.concat(
-                    F.substring(qblk, 1, p),
-                    flipped,
-                    F.substring(qblk, p + 2, n_planes - p - 1),
-                )
-            )
-        # isin() needs literals; the probe blocks are Column expressions
-        cond = F.array_contains(F.array(*probes), F.col("__blk"))
-    cell = blocked.filter(cond).drop("__blk")
-    return knn(cell, q, k, vec_col=vec_col, id_col=id_col)
+    cell = blocked.filter(F.col("__blk") == qblk).drop("__blk")
+    return knn(cell, q, k)
 
 
 def ivf_search_join(
@@ -298,12 +241,6 @@ def ivf_search_join(
     centroids_df: DataFrame,
     k: int,
     n_probe: int = 1,
-    query_vec_col: str = "query_vec",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """Batch IVF ANN: top-k per query for a (small) query set, each query
     probing only its ``n_probe`` nearest cells.
@@ -317,11 +254,11 @@ def ivf_search_join(
     only shuffle is the per-query top-k on ``query_id``.
     """
     q = queries_df.select(
-        F.col(query_id_col), V.as_double_array(query_vec_col).alias("__qv")
+        F.col("query_id"), V.as_double_array("query_vec").alias("__qv")
     )
     cents = centroids_df.select(
-        F.col(centroid_id_col),
-        V.as_double_array(centroid_vec_col).alias("__cent"),
+        F.col("centroid_id"),
+        V.as_double_array("centroid_vec").alias("__cent"),
     )
     # probe set: n_probe nearest centroids per query (both sides tiny)
     qc = q.crossJoin(F.broadcast(cents)).withColumn(
@@ -329,37 +266,26 @@ def ivf_search_join(
     )
     probes = S.top_k_per(
         qc,
-        [query_id_col],
-        [F.col("__qd").asc_nulls_last(), F.col(centroid_id_col).asc()],
+        ["query_id"],
+        [F.col("__qd").asc_nulls_last(), F.col("centroid_id").asc()],
         n_probe,
         "__pn",
-    ).select(query_id_col, centroid_id_col, "__qv")
-    assigned = ivf_assign(
-        corpus_df.select(id_col, vec_col),
-        centroids_df,
-        vec_col,
-        id_col,
-        centroid_vec_col,
-        centroid_id_col,
-    )
-    cell = assigned.join(F.broadcast(probes), on=centroid_id_col, how="inner")
+    ).select("query_id", "centroid_id", "__qv")
+    assigned = ivf_assign(corpus_df.select("vec_id", "embedding"), centroids_df)
+    cell = assigned.join(F.broadcast(probes), on="centroid_id", how="inner")
     scored = cell.withColumn(
         "dist",
-        F.round(V.l2_dist(V.s_as_double_array(vec_col), "__qv"), 6),
+        F.round(V.l2_dist(V.s_as_double_array("embedding"), "__qv"), 6),
     )
-    order = [F.col("dist").asc_nulls_last(), F.col(id_col).asc()]
-    return S.top_k_per(scored, [query_id_col], order, k).select(
-        query_id_col, id_col, "dist", "rank"
+    order = [F.col("dist").asc_nulls_last(), F.col("vec_id").asc()]
+    return S.top_k_per(scored, ["query_id"], order, k).select(
+        "query_id", "vec_id", "dist", "rank"
     )
 
 
-def kmeans_update(
-    assigned_df: DataFrame,
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-) -> DataFrame:
-    """One Lloyd update step: component-wise mean of the vectors assigned to
-    each centroid → (centroid_id, centroid_vec).
+def kmeans_update(assigned_df: DataFrame) -> DataFrame:
+    """One Lloyd update step: component-wise mean of the ``embedding``
+    vectors assigned to each ``centroid_id`` → (centroid_id, centroid_vec).
 
     Shape: posexplode to (centroid, pos, value) → decimal-sum aggregate →
     rebuild the array. One shuffle keyed by (centroid_id, pos) — dim×k
@@ -369,24 +295,24 @@ def kmeans_update(
     engines — SURVEY §7 trap 5), then rounded to 6 decimals.
     """
     parts = assigned_df.select(
-        F.col(centroid_id_col),
-        F.posexplode(V.as_double_array(vec_col)).alias("__pos", "__val"),
+        F.col("centroid_id"),
+        F.posexplode(V.as_double_array("embedding")).alias("__pos", "__val"),
     )
-    comp = parts.groupBy(centroid_id_col, "__pos").agg(
+    comp = parts.groupBy("centroid_id", "__pos").agg(
         (
             F.sum(F.col("__val").cast("decimal(27,10)")).cast("double")
             / F.count("*")
         ).alias("__mean")
     )
     return (
-        comp.groupBy(centroid_id_col)
+        comp.groupBy("centroid_id")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("__pos"), F.col("__mean")))
             ).alias("__pairs")
         )
         .select(
-            centroid_id_col,
+            "centroid_id",
             F.transform(
                 F.col("__pairs"), lambda p: F.round(p["__mean"], 6)
             ).alias("centroid_vec"),
@@ -394,84 +320,22 @@ def kmeans_update(
     )
 
 
-def kmeans_codebook(
-    corpus_df: DataFrame,
-    seeds_df: DataFrame,
-    iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
-) -> DataFrame:
-    """Lloyd's k-means codebook training: alternate :func:`ivf_assign` and
-    :func:`kmeans_update` for a fixed number of iterations, starting from
-    deterministic seeds. Returns (centroid_id, centroid_vec).
-
-    Each iteration materializes only the centroids (k × dim doubles — a
-    parameter, not data), so the lineage stays flat: localCheckpoint per
-    iteration truncates the plan the way every iterative Spark algorithm
-    must, and the corpus is re-scanned once per iteration — exactly the
-    k-means I/O lower bound. Empty clusters keep their previous centroid.
-    The checkpoint is lazy only in name: each one runs the stages upstream
-    of it as Spark jobs when it is called, so the Lloyd iterations execute
-    while this function builds the plan, not when the result is read.
-    """
-    cents = seeds_df.select(
-        F.col(centroid_id_col),
-        V.as_double_array(centroid_vec_col).alias(centroid_vec_col),
-    )
-    # Guard the corpus ONCE outside the loop (the per-iteration form
-    # re-paid the plan probe and exchange every Lloyd round — measured
-    # 1.7x on q_ann_ivf_kmeans at sf0.1). Keyed by the id so every
-    # iteration's assignment groupBy(id) rides the guard exchange instead
-    # of adding its own n-row shuffle per Lloyd round.
-    corpus = ensure_parallelism(corpus_df.select(id_col, vec_col), key=id_col)
-    for _ in range(iters):
-        assigned = ivf_assign(
-            corpus, cents, vec_col, id_col, centroid_vec_col,
-            centroid_id_col, ensure=False,
-        )
-        updated = kmeans_update(assigned, vec_col, centroid_id_col).select(
-            centroid_id_col, F.col("centroid_vec").alias(centroid_vec_col)
-        )
-        # empty clusters: fall back to the previous centroid so k is stable
-        cents = (
-            cents.alias("prev")
-            .join(updated.alias("upd"), on=centroid_id_col, how="left")
-            .select(
-                F.col(centroid_id_col),
-                F.coalesce(
-                    F.col(f"upd.{centroid_vec_col}"),
-                    F.col(f"prev.{centroid_vec_col}"),
-                ).alias(centroid_vec_col),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return cents
-
-
-def probe_cells(
-    centroids_df: DataFrame,
-    q: str,
-    n_probe: int,
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
-) -> DataFrame:
+def probe_cells(centroids_df: DataFrame, q: str, n_probe: int) -> DataFrame:
     """The ``n_probe`` centroid ids nearest a single query vector — the
     probe-selection step every single-query IVF variant shares (plain IVF
     and IVFPQ use this helper; the batch form in :func:`ivf_search_join`
     is the per-query-window generalization). ``q`` is the query vector's
     SQL fragment. Deterministic tie-break on centroid id; NULL distances
     (malformed centroid vectors) sort last."""
-    qd = V.l2_dist(V.s_as_double_array(centroid_vec_col), q)
+    qd = V.l2_dist(V.s_as_double_array("centroid_vec"), q)
     return (
         centroids_df.select(
-            F.col(centroid_id_col),
+            F.col("centroid_id"),
             qd.alias("__qd"),
         )
-        .orderBy(F.col("__qd").asc_nulls_last(), F.col(centroid_id_col).asc())
+        .orderBy(F.col("__qd").asc_nulls_last(), F.col("centroid_id").asc())
         .limit(n_probe)
-        .select(centroid_id_col)
+        .select("centroid_id")
     )
 
 
@@ -481,10 +345,6 @@ def ivf_search(
     query_vec: Sequence[float] | str,
     k: int,
     n_probe: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """IVF-style ANN: probe only the ``n_probe`` centroids nearest the query,
     brute-force search within their cells. At 100 TB with the corpus
@@ -492,16 +352,13 @@ def ivf_search(
     partition pruning makes this scan ``n_probe / n_centroids`` of the data.
     """
     q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
-    assigned = ivf_assign(
-        corpus_df, centroids_df, vec_col, id_col, centroid_vec_col, centroid_id_col
-    )
-    probe = probe_cells(centroids_df, q, n_probe, centroid_vec_col, centroid_id_col)
-    cell = assigned.join(F.broadcast(probe), on=centroid_id_col, how="inner")
-    # ensure=False: the probed cells inherit the assignment's partitions
-    # (guarded inside ivf_assign when the corpus is big), and the
-    # broadcast-join size ESTIMATE is inflated enough to misfire the
-    # guard on fixture-scale inputs.
-    return knn(cell, q, k, vec_col=vec_col, id_col=id_col, ensure=False)
+    assigned = ivf_assign(corpus_df, centroids_df)
+    probe = probe_cells(centroids_df, q, n_probe)
+    cell = assigned.join(F.broadcast(probe), on="centroid_id", how="inner")
+    # ensure=False: the probed cell holds the assignment's exchange, which
+    # already spreads it, and ensure_parallelism's partition-count probe
+    # would run every stage upstream of that exchange at build time.
+    return knn(cell, q, k, ensure=False)
 
 
 # --- product quantization ----------------------------------------------------
@@ -510,12 +367,10 @@ def pq_subvectors(
     df: DataFrame,
     n_sub: int,
     sub_dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     ensure: bool = True,
 ) -> DataFrame:
-    """Slice each vector into ``n_sub`` contiguous ``sub_dim``-wide
-    subvectors → (id, s, sv) rows. Scan-side explode (no shuffle in the
+    """Slice each ``embedding`` into ``n_sub`` contiguous ``sub_dim``-wide
+    subvectors → (vec_id, s, sv) rows. Scan-side explode (no shuffle in the
     general case); the subspace index ``s`` becomes the join/grouping
     key for all later PQ stages, so every per-subspace step parallelizes
     across s. The input goes through :func:`ensure_parallelism` first —
@@ -529,8 +384,8 @@ def pq_subvectors(
         # keyed by the id: pq_assign groups by (id, s) and the ADC score
         # aggregate by id — hash(id) satisfies both, so the whole encode+
         # score pipeline reuses this one exchange (guide §2.4)
-        df = ensure_parallelism(df, key=id_col)
-    v = V.as_double_array(vec_col)
+        df = ensure_parallelism(df, key="vec_id")
+    v = V.as_double_array("embedding")
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(n_sub - 1)),
         lambda s: F.struct(
@@ -540,14 +395,13 @@ def pq_subvectors(
     )
     return (
         df.withColumn("__v", v)
-        .select(F.col(id_col), F.inline(subs))
+        .select(F.col("vec_id"), F.inline(subs))
     )
 
 
 def pq_assign(
     subs_df: DataFrame,
     codebook_df: DataFrame,
-    id_col: str = "vec_id",
     keep_sv: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment per (vector, subspace): broadcast the
@@ -562,13 +416,13 @@ def pq_assign(
         "__cdist", F.round(V.l2_dist("sv", "__cent"), 6)
     )
     carried = [F.col("sv").alias("sv")] if keep_sv else []
-    best = scored.groupBy(id_col, "s").agg(
+    best = scored.groupBy("vec_id", "s").agg(
         F.min_by(
             F.struct(F.col("centroid_id"), *carried),
             F.struct(F.col("__cdist"), F.col("centroid_id")),
         ).alias("__best")
     )
-    cols = [F.col(id_col), F.col("s"), F.col("__best.centroid_id").alias("code")]
+    cols = [F.col("vec_id"), F.col("s"), F.col("__best.centroid_id").alias("code")]
     if keep_sv:
         cols.append(F.col("__best.sv").alias("sv"))
     return best.select(*cols)
@@ -579,8 +433,6 @@ def pq_train(
     n_sub: int,
     sub_dim: int,
     n_cent: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Train per-subspace PQ codebooks: deterministic seeds (the ``n_cent``
     smallest ids' subvectors — any orderable id domain works, no
@@ -588,14 +440,14 @@ def pq_train(
     component means (same order-independence discipline as
     :func:`kmeans_update`, here keyed by (s, centroid, pos)). Returns
     (s, centroid_id, cv). More Lloyd rounds = repeat assign/update."""
-    subs = pq_subvectors(corpus_df, n_sub, sub_dim, vec_col, id_col)
+    subs = pq_subvectors(corpus_df, n_sub, sub_dim)
     seed_ids = (
-        corpus_df.select(id_col).distinct().orderBy(id_col).limit(n_cent)
+        corpus_df.select("vec_id").distinct().orderBy("vec_id").limit(n_cent)
     )
-    seeds = subs.join(F.broadcast(seed_ids), on=id_col).select(
-        "s", F.col(id_col).alias("centroid_id"), F.col("sv").alias("cv")
+    seeds = subs.join(F.broadcast(seed_ids), on="vec_id").select(
+        "s", F.col("vec_id").alias("centroid_id"), F.col("sv").alias("cv")
     )
-    assigned = pq_assign(subs, seeds, id_col, keep_sv=True)
+    assigned = pq_assign(subs, seeds, keep_sv=True)
     parts = assigned.select(
         "s", F.col("code").alias("centroid_id"),
         F.posexplode("sv").alias("pos", "val"),
@@ -629,8 +481,6 @@ def pq_adc_search(
     n_sub: int,
     sub_dim: int,
     k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     ensure: bool = True,
 ) -> DataFrame:
     """Asymmetric-distance PQ search: encode the corpus to (vector,
@@ -645,8 +495,8 @@ def pq_adc_search(
     the codebook — the full float vectors never participate. Here the
     encode pass is recomputed from the scan; a real deployment persists
     the code columns once and scans only those thereafter."""
-    subs = pq_subvectors(corpus_df, n_sub, sub_dim, vec_col, id_col, ensure)
-    codes = pq_assign(subs, codebook_df, id_col)
+    subs = pq_subvectors(corpus_df, n_sub, sub_dim, ensure)
+    codes = pq_assign(subs, codebook_df)
 
     q_s = V.s_vec_lit(list(query_vec))
     dt = F.broadcast(
@@ -665,11 +515,11 @@ def pq_adc_search(
     )
     adist = (
         codes.join(dt, (codes.s == dt.s) & (codes.code == dt.centroid_id))
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.round(F.sqrt(F.sum("d2").cast("double")), 6).alias("adist"))
     )
     return S.top_k(
-        adist, [F.col("adist").asc_nulls_last(), F.col(id_col).asc()], k
+        adist, [F.col("adist").asc_nulls_last(), F.col("vec_id").asc()], k
     )
 
 
@@ -682,10 +532,6 @@ def ivfpq_search(
     sub_dim: int,
     k: int,
     n_probe: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec_col: str = "centroid_vec",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """IVF + PQ composed: coarse-quantize to prune WHICH vectors are
     scored (n_probe/n_centroids of the corpus, partition-prunable), then
@@ -696,20 +542,14 @@ def ivfpq_search(
     quantize raw vectors, not cell residuals; residual encoding is the
     same pipeline with (vector − centroid) fed to pq_train/pq_assign."""
     q = V.s_vec_lit(list(query_vec))
-    assigned = ivf_assign(
-        corpus_df, centroids_df, vec_col, id_col, centroid_vec_col,
-        centroid_id_col,
+    assigned = ivf_assign(corpus_df, centroids_df)
+    probe = probe_cells(centroids_df, q, n_probe)
+    cell = assigned.join(F.broadcast(probe), "centroid_id").select(
+        "vec_id", "embedding"
     )
-    probe = probe_cells(
-        centroids_df, q, n_probe, centroid_vec_col, centroid_id_col
-    )
-    cell = assigned.join(F.broadcast(probe), centroid_id_col).select(
-        id_col, vec_col
-    )
-    # ensure=False: the probed cell subset inherits the assignment's
-    # partitions (guarded in ivf_assign when the corpus is big); the
-    # join-output size estimate would misfire the guard at fixture scale.
+    # ensure=False: the probed cell holds the assignment's exchange, which
+    # already spreads it, and ensure_parallelism's partition-count probe
+    # would run every stage upstream of that exchange at build time.
     return pq_adc_search(
-        cell, codebook_df, query_vec, n_sub, sub_dim, k, vec_col, id_col,
-        ensure=False,
+        cell, codebook_df, query_vec, n_sub, sub_dim, k, ensure=False
     )

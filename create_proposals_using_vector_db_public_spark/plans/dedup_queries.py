@@ -171,34 +171,30 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n·bucket) instead of O(n²) at 100 TB. Defaults 8 hashes / 2 bands fit
     the oracle; production recall wants 128/16 — both are parameters
     (tested at a non-default setting in tests/test_dedup.py)."""
-    return D.minhash_dedup_pairs(
-        _corpus(spark, sf_dir), id_col="doc_id", text_col="text", threshold=0.5
-    )
+    return D.minhash_dedup_pairs(_corpus(spark, sf_dir), threshold=0.5)
 
 
 def _simhash_sql() -> str:
     # integer shingle hashes + one independent affine mix per 31-bit draw,
     # mirroring operators.dedup.simhash_signatures (64-bit, two 32-bit
     # words sh0/sh1 so no value ever touches a sign bit in either engine)
-    bits = D.SIMHASH_BITS
     bpd = D.SIMHASH_BITS_PER_DRAW
-    ndraws = (bits + bpd - 1) // bpd
     mixes = ",\n         ".join(
         f"({a} * s + {b}) % {D.MINHASH_P} AS v{k}"
-        for k, (a, b) in enumerate(D.SIMHASH_MIX[:ndraws])
+        for k, (a, b) in enumerate(D.SIMHASH_MIX)
     )
     bit_cnts = ",\n         ".join(
         f"sum((v{b // bpd} // {1 << (b % bpd)}) % 2) AS c{b}"
-        for b in range(bits)
+        for b in range(D.SIMHASH_BITS)
     )
     words = ",\n         ".join(
         "CAST("
         + " + ".join(
             f"(CASE WHEN c{b} * 2 > n THEN {1 << (b - 32 * w)} ELSE 0 END)"
-            for b in range(32 * w, min(32 * (w + 1), bits))
+            for b in range(32 * w, 32 * (w + 1))
         )
         + f" AS BIGINT) AS sh{w}"
-        for w in range(D.simhash_words(bits))
+        for w in range(D.SIMHASH_WORDS)
     )
     return f"""
 wh_t AS (
@@ -219,21 +215,13 @@ wh_t AS (
 
 
 def _simhash_band_sql(i: int) -> str:
-    """Band i of 4: band_bits-wide slice carved out of word i // per_word."""
-    band_bits = D.SIMHASH_BITS // 4
-    per_word = max(1, 32 // band_bits)
-    return (
-        f"(sh{i // per_word} // {1 << (band_bits * (i % per_word))}) "
-        f"% {1 << band_bits}"
-    )
+    """Band i of 4: the 16-bit half (i mod 2) of word i div 2."""
+    return f"(sh{i // 2} // {1 << (16 * (i % 2))}) % {1 << 16}"
 
 
-_SIMHASH_WORD_COLS = ", ".join(
-    f"sh{w}" for w in range(D.simhash_words(D.SIMHASH_BITS))
-)
+_SIMHASH_WORD_COLS = ", ".join(f"sh{w}" for w in range(D.SIMHASH_WORDS))
 _SIMHASH_HAMMING = " + ".join(
-    f"bit_count(xor(a.sh{w}, b.sh{w}))"
-    for w in range(D.simhash_words(D.SIMHASH_BITS))
+    f"bit_count(xor(a.sh{w}, b.sh{w}))" for w in range(D.SIMHASH_WORDS)
 )
 
 _SIMHASH_ORACLE = f"""
@@ -265,9 +253,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair) — the Manku et al. WWW'07 web-scale configuration. 64-bit width
     is what keeps precision usable past ~10^5 docs: the 32-bit family
     measured precision 0.045 at 500k docs (SCALE.md detector pricing)."""
-    return D.simhash_dedup_pairs(
-        _corpus(spark, sf_dir), id_col="doc_id", text_col="text", max_hamming=3
-    )
+    return D.simhash_dedup_pairs(_corpus(spark, sf_dir), max_hamming=3)
 
 
 _NGRAM_ORACLE = f"""
@@ -301,8 +287,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     block — LSH-free verify-style dedup with a cheap blocking key."""
     return D.ngram_jaccard_pairs(
         _corpus(spark, sf_dir),
-        id_col="doc_id",
-        text_col="text",
         n=5,
         block_chars=20,
         threshold=0.6,
@@ -363,10 +347,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + PLANT_COPY_OFFSET).alias("vec_id"), "label", "embedding"
     )
     corpus = e.select("vec_id", "label", "embedding").unionByName(copies)
-    return D.embedding_near_dup_pairs(
-        corpus, id_col="vec_id", vec_col="embedding", block_col="label",
-        threshold=0.9,
-    )
+    return D.embedding_near_dup_pairs(corpus, threshold=0.9)
 
 
 # single-pass normalize mirroring functions.text.fingerprint exactly —
@@ -452,10 +433,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_dedup_minhash (banded LSH, no all-pairs)
     plus one partial+final aggregate keyed by the batch doc id; the
     existing index contributes signatures only, never text."""
-    pairs = D.minhash_dedup_pairs(
-        _corpus(spark, sf_dir), id_col="doc_id", text_col="text",
-        threshold=0.5,
-    )
+    pairs = D.minhash_dedup_pairs(_corpus(spark, sf_dir), threshold=0.5)
     batch = pairs.filter(F.col("id_b") >= _BATCH_START)
     return batch.groupBy(F.col("id_b").alias("doc_id")).agg(
         F.min("id_a").alias("first_dup"),
@@ -648,9 +626,9 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     already exposes (1.0 precision, 0.90/0.95/0.98 recall at
     sf0.001/0.01/0.1)."""
     corpus = _corpus(spark, sf_dir)
-    emitted = D.minhash_dedup_pairs(
-        corpus, id_col="doc_id", text_col="text", threshold=0.5
-    ).select("id_a", "id_b")
+    emitted = D.minhash_dedup_pairs(corpus, threshold=0.5).select(
+        "id_a", "id_b"
+    )
     return _pair_eval(spark, sf_dir, corpus, emitted)
 
 
@@ -676,8 +654,7 @@ def q_minhash_wide_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real knob (128/16 at 100 TB) changes only two integers."""
     corpus = _corpus(spark, sf_dir)
     emitted = D.minhash_dedup_pairs(
-        corpus, id_col="doc_id", text_col="text", threshold=0.5,
-        num_hashes=_WIDE_HASHES, bands=_WIDE_BANDS,
+        corpus, threshold=0.5, num_hashes=_WIDE_HASHES, bands=_WIDE_BANDS
     ).select("id_a", "id_b")
     return _pair_eval(spark, sf_dir, corpus, emitted)
 
@@ -690,7 +667,7 @@ def q_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the detector-family trade-off on identical ground truth — the
     comparison a pipeline owner makes when choosing between the two."""
     corpus = _corpus(spark, sf_dir)
-    emitted = D.simhash_dedup_pairs(
-        corpus, id_col="doc_id", text_col="text", max_hamming=3
-    ).select("id_a", "id_b")
+    emitted = D.simhash_dedup_pairs(corpus, max_hamming=3).select(
+        "id_a", "id_b"
+    )
     return _pair_eval(spark, sf_dir, corpus, emitted)

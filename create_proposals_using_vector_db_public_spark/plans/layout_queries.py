@@ -148,8 +148,8 @@ FROM m
 @query("q_centroid_label", oracle=_CENTROID_ORACLE)
 def q_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label mean embedding — the centroid computation under every
-    IVF codebook / k-means step (operators/knn.py kmeans_codebook uses
-    the same shape with assignment in the loop).
+    IVF codebook / k-means step (operators/knn.py kmeans_update takes the
+    same per-centroid means over an assignment).
 
     Float determinism: each float32 element is floored to a scaled
     integer (exact, per-element), summed as BIGINT (order-independent).

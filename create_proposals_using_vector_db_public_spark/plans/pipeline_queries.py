@@ -238,9 +238,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate shuffling only (node, label) longs; the pair lineage is
     checkpointed once so the plan does not re-inline the signature pipeline
     per round (operators.dedup.dup_clusters)."""
-    pairs = D.minhash_dedup_pairs(
-        _corpus(spark, sf_dir), id_col="doc_id", text_col="text", threshold=0.5
-    )
+    pairs = D.minhash_dedup_pairs(_corpus(spark, sf_dir), threshold=0.5)
     return D.dup_clusters(pairs, rounds=3)
 
 
@@ -307,8 +305,6 @@ def q_winnow_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams, not char grams, are the right unit on low-diversity text)."""
     return D.winnow_dup_pairs(
         _corpus(spark, sf_dir),
-        id_col="doc_id",
-        text_col="text",
         k=_WINNOW_K,
         window=_WINNOW_W,
         max_df=10,
@@ -690,8 +686,6 @@ def q_winnow_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _corpus(spark, sf_dir)
     emitted = D.winnow_dup_pairs(
         corpus,
-        id_col="doc_id",
-        text_col="text",
         k=_WINNOW_K,
         window=_WINNOW_W,
         max_df=10,

@@ -1,7 +1,5 @@
 """Dedup operator behavior on planted duplicates."""
 
-import pytest
-
 from create_proposals_using_vector_db_public_spark.operators import dedup as D
 
 TEXT = (
@@ -205,11 +203,11 @@ def _py_shingle_hashes(text, k=3):
     return out
 
 
-def _py_simhash_words(text, bits=D.SIMHASH_BITS):
+def _py_simhash_words(text):
     feats = set(_py_shingle_hashes(text))
     n = len(feats)
-    words = [0] * D.simhash_words(bits)
-    for b in range(bits):
+    words = [0] * D.SIMHASH_WORDS
+    for b in range(D.SIMHASH_BITS):
         a, c = D.SIMHASH_MIX[b // D.SIMHASH_BITS_PER_DRAW]
         ones = sum(
             ((a * s + c) % D.MINHASH_P >> (b % D.SIMHASH_BITS_PER_DRAW)) & 1
@@ -231,60 +229,6 @@ def test_simhash_signatures_match_python_reference(spark):
                      (4, OTHER)]
     }
     assert got == want
-
-
-def test_simhash_128_bits_are_honest(spark):
-    """The 5-draw SIMHASH_MIX family supports 128-bit signatures: 4
-    words, each in [0, 2^32), matching the independent pure-Python
-    reference bit for bit, with no two words replaying each other's low
-    31 bits for every doc (the correlated-halves failure mode the round-5
-    rework eliminated at 64 bits must not reappear at 128)."""
-    rows = D.simhash_signatures(_corpus(spark), bits=128).collect()
-    got = {r["doc_id"]: tuple(r[f"sh{w}"] for w in range(4)) for r in rows}
-    want = {
-        i: _py_simhash_words(t, bits=128)
-        for i, t in [(1, TEXT), (2, TEXT), (3, TEXT + " extra tail words"),
-                     (4, OTHER)]
-    }
-    assert got == want
-    for words in got.values():
-        assert all(0 <= w < (1 << 32) for w in words)
-    mask = (1 << 31) - 1
-    for a in range(4):
-        for b in range(a + 1, 4):
-            assert any(
-                (words[a] & mask) != (words[b] & mask)
-                for words in got.values()
-            ), f"words {a} and {b} identical on every doc — correlated draws"
-
-
-def test_simhash_dedup_pairs_128_bit_end_to_end(spark):
-    """Band blocking at the 128-bit width (band_bits=32: one whole word
-    per band): identical docs still collide, the distinct doc does not."""
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in D.simhash_dedup_pairs(_corpus(spark), bits=128).collect()
-    }
-    assert (1, 2) in pairs
-    assert (1, 4) not in pairs and (2, 4) not in pairs
-
-
-def test_simhash_width_guards_fail_loudly(spark):
-    """Past the published family (>155 bits) or on a non-tiling band
-    width the functions must raise, never silently correlate or weaken
-    the Manku band layout."""
-    df = _corpus(spark)
-    with pytest.raises(ValueError, match="extend the published family"):
-        D.simhash_signatures(df, bits=156)
-    with pytest.raises(ValueError, match="does not tile"):
-        D.simhash_dedup_pairs(df, bits=40)
-    with pytest.raises(ValueError, match="divisible by 4"):
-        D.simhash_dedup_pairs(df, bits=42)
-    # bits=256 tiles arithmetically (band_bits=64 is a multiple of 32) but
-    # each band would span TWO words while extraction reads one — must be
-    # rejected up front, not silently blocked on the truncated layout
-    with pytest.raises(ValueError, match="multi-word band"):
-        D.simhash_dedup_pairs(df, bits=256)
 
 
 def test_minhash_signatures_match_python_reference(spark):

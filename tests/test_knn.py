@@ -76,43 +76,6 @@ def test_kmeans_update_component_means(spark):
     assert cents[1] == [10.0, 20.0]
 
 
-def test_kmeans_codebook_converges_on_separated_clusters(spark):
-    from create_proposals_using_vector_db_public_spark.operators import knn as K
-
-    # two well-separated blobs; seeds start inside each blob
-    rows = [(i, [0.0 + 0.1 * i, 0.0]) for i in range(4)] + [
-        (10 + i, [100.0 + 0.1 * i, 50.0]) for i in range(4)
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    seeds = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [100.0, 50.0])],
-        "centroid_id: int, centroid_vec: array<float>",
-    )
-    cents = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in K.kmeans_codebook(df, seeds, iters=3).collect()
-    }
-    assert abs(cents[0][0] - 0.15) < 1e-6 and cents[0][1] == 0.0
-    assert abs(cents[1][0] - 100.15) < 1e-6 and cents[1][1] == 50.0
-
-
-def test_lsh_multiprobe_superset_of_single_probe(spark):
-    from create_proposals_using_vector_db_public_spark.operators import knn as K
-    from create_proposals_using_vector_db_public_spark.sources import load_table
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "label", "embedding")
-    q = [float(x) for x in emb.filter("vec_id = 11").head()["embedding"]]
-    # k larger than the table so the top-k cap never displaces candidates —
-    # with a binding k, nearer vectors from neighbor buckets would push
-    # single-probe results out of the top-k (correct, but not a superset)
-    single = {r["vec_id"] for r in K.lsh_search(emb, q, k=10**6, n_probe=1).collect()}
-    multi = {r["vec_id"] for r in K.lsh_search(emb, q, k=10**6, n_probe=5).collect()}
-    # probing the 4 Hamming-1 neighbor buckets can only ADD candidates, and
-    # the query's own bucket (containing vec 11 itself) is always searched
-    assert 11 in single and single <= multi and len(multi) >= len(single)
-
-
 def test_ivf_search_join_per_query_cells(spark):
     corpus = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(10)],

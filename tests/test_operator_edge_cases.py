@@ -80,33 +80,6 @@ def test_split_paragraphs_literal_dot_delimiter(spark):
     assert [r["paragraph"] for r in out] == ["a", "b", "c"]
 
 
-def test_with_minhash_signature_keeps_short_docs(spark):
-    df = spark.createDataFrame(
-        [(1, "one two three four"), (2, "tiny")], "doc_id: long, text: string"
-    )
-    out = D.with_minhash_signature(df).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    assert set(by_id) == {1, 2}  # no silent row loss
-    assert by_id[1]["mh0"] is not None
-    assert by_id[2]["mh0"] is None  # too short to shingle → NULL signature
-
-
-def test_ivf_assign_accepts_its_own_output(spark):
-    corpus = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [5.0, 5.0])],
-        "vec_id: long, embedding: array<float>",
-    )
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [4.0, 4.0])],
-        "centroid_id: int, centroid_vec: array<float>",
-    )
-    once = K.ivf_assign(corpus, cents)
-    # feed the assigned output straight back in (post-codebook-update loop)
-    twice = K.ivf_assign(once, cents)
-    got = {r["vec_id"]: r["centroid_id"] for r in twice.collect()}
-    assert got == {0: 0, 1: 1}
-
-
 def test_pq_train_works_with_offset_ids(spark):
     """Seeding must not assume ids are dense from 0."""
     rows = [(100 + i, [float(i), float(i + 1), 0.5 * i, 1.0]) for i in range(6)]

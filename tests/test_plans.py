@@ -207,6 +207,29 @@ def test_every_pinned_cross_join_is_allowlisted():
     assert not missing, f"cross joins without an ALLOW reason: {missing}"
 
 
+def test_every_committed_unpartitioned_window_is_allowlisted():
+    """tools/plan_audit.py's window rule over the committed plan dumps:
+    every query with an unpartitioned window that is not over a
+    TakeOrderedAndProject has a _WINDOW_OK reason, and every _WINDOW_OK
+    entry still names such a query. Reads tools/plans/*.txt, so it needs
+    no Spark session."""
+    import glob
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from explain import OUT_DIR
+    from plan_audit import _WINDOW_OK, unpartitioned_windows
+
+    flagged = set()
+    for path in glob.glob(os.path.join(OUT_DIR, "*.txt")):
+        with open(path) as f:
+            if unpartitioned_windows(f.read()):
+                flagged.add(os.path.basename(path)[: -len(".txt")])
+    assert sorted(flagged - set(_WINDOW_OK)) == []
+    assert sorted(set(_WINDOW_OK) - flagged) == []
+    assert all(_WINDOW_OK.values())
+
+
 @pytest.mark.parametrize("name", ["q_knn", "q_pagerank"])
 def test_plan_text_is_canonical(spark, name):
     """tools/plans/*.txt change only when a plan changes: two captures of

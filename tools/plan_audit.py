@@ -142,25 +142,69 @@ ALLOW: dict[str, dict[str, str]] = {
     "q_rare_terms": {"nested_loop": "1-row corpus-total for rarity"},
     "q_gap_fill": {"nested_loop": "bounded days x event-types densify grid"},
     "q_triangle_count": {"nested_loop": "two 1-row count aggregates"},
-    "q_yoy_growth": {"single_partition_window": "|months|-row calendar"},
-    "q_top_revenue": {"single_partition_window": "|suppliers|-row max"},
-    "q_collocations_w": {},
 }
-# whole-table windows over DIMENSION-BOUNDED aggregates are fine; these
-# queries declare them (see each docstring)
-_WINDOW_OK = {
-    "q_yoy_growth", "q_top_revenue", "q_collocations", "q_share_of_parent",
-    "q_skyline", "q_bpe_merges", "q_pack_sequences", "q_heavy_hitters",
-    "q_rare_terms", "q_vocab_coverage", "q_domain_mix", "q_cms_heavy",
-    "q_incremental_agg", "q_winnow_dups", "q_centroid_label",
-    "q_dup_clusters", "q_table_diff", "q_zorder_layout", "q_ewma_smooth",
-    "q_transitions", "q_histogram",
+# query -> reason for its unpartitioned windows: each runs in ONE task, so
+# it is fine only over a bounded input. A window whose child is
+# TakeOrderedAndProject ranks the k rows of a top-k and needs no entry.
+_WINDOW_OK: dict[str, str] = {
+    "q_yoy_growth": "lag over the |months|-row calendar aggregate",
+    "q_top_revenue": "max over the |suppliers|-row revenue aggregate",
+    "q_collocations": "pair total over the aggregated pair table "
+    "(bounded by |vocab|^2, never the corpus)",
+    "q_share_of_parent": "parent totals over the |nations|-row "
+    "(region, nation) aggregate",
+    "q_skyline": "running max over the |distinct prices|-row aggregate",
+    "q_ntile": "global quartiles need one total order over customer, a "
+    "dimension table; ntile has no per-partition form",
+    "q_udf_embed_knn": "lag/row_number invariant checks over the 5 rows "
+    "the kNN top-k ranked",
 }
 
 FLAGS = {
     "cartesian": re.compile(r"CartesianProduct"),
     "nested_loop": re.compile(r"BroadcastNestedLoopJoin"),
 }
+
+# tree line `+- Window (N)` and the node on the line below it, its child
+_WINDOW_CHILD = re.compile(r"\bWindow \((\d+)\)\n.*?(\w[\w ]*?) \(\d+\)")
+_WINDOW_ARGS = re.compile(r"^\((\d+)\) Window\n(?:.*\n)*?Arguments: (.*)$", re.M)
+
+
+def _first_spec_item(args: str) -> str:
+    """The first top-level item of the first ``windowspecdefinition(``
+    in a Window node's arguments."""
+    start = args.index("windowspecdefinition(") + len("windowspecdefinition(")
+    depth = 0
+    for end in range(start, len(args)):
+        c = args[end]
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            if depth == 0:
+                break
+            depth -= 1
+        elif c == "," and depth == 0:
+            break
+    return args[start:end]
+
+
+def unpartitioned_windows(plan: str) -> list[str]:
+    """Node ids of the Window nodes in an ``explain("formatted")`` text
+    that have no partition key, leaving out those over a
+    TakeOrderedAndProject. A window spec lists its partition keys first,
+    so an unpartitioned one starts with an order key (`` ASC``/``
+    DESC``) or with its frame."""
+    child = dict(_WINDOW_CHILD.findall(plan))
+    found = []
+    for node, args in _WINDOW_ARGS.findall(plan):
+        item = _first_spec_item(args)
+        unpartitioned = (
+            " ASC" in item or " DESC" in item
+            or item.startswith("specifiedwindowframe")
+        )
+        if unpartitioned and child.get(node) != "TakeOrderedAndProject":
+            found.append(node)
+    return found
 
 
 def main() -> int:
@@ -179,22 +223,9 @@ def main() -> int:
         for flag, rx in FLAGS.items():
             if rx.search(plan) and flag not in ALLOW.get(name, {}):
                 problems.append(f"{name}: unexpected {flag}")
-        if (
-            "Window" in plan
-            and "No Partition" not in plan  # warning text not in plan
-            and re.search(r"^\(\d+\) Window", plan, flags=re.M)
-            and not re.search(r"PartitionSpec|partitionBy", plan)
-        ):
-            # formatted plans show 'Window [..], [partition-cols], [order]'
-            # in details; a window with NO partition columns shows empty
-            # second bracket — flag unless declared dimension-bounded
-            for m in re.finditer(r"^\(\d+\) Window\n(?:.*\n){0,6}", plan, re.M):
-                block = m.group(0)
-                if re.search(r"windowspecdefinition\(\w", block):
-                    continue  # partitioned window
-                if name not in _WINDOW_OK:
-                    problems.append(f"{name}: single-partition window")
-                break
+        windows = unpartitioned_windows(plan)
+        if windows and name not in _WINDOW_OK:
+            problems.append(f"{name}: single-partition window(s) {windows}")
     spark.stop()
     if problems:
         print("PLAN AUDIT FINDINGS:")
