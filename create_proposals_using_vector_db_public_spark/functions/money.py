@@ -32,6 +32,7 @@ def money_double(s: Column) -> Column:
     integer; sub-1 fraction), and the single IEEE add then yields the
     same bits on both engines. Below 2^53 the result equals the
     correctly-rounded direct cast, so small-SF values are unchanged.
-    SQL mirror: plans.duck.d_money_double."""
+    The oracles spell out the same floor-plus-fraction casts in their
+    SQL."""
     f = F.floor(s)
     return f.cast("double") + (s - f).cast("double")

@@ -102,10 +102,10 @@ def punct_ratio(col: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str,
-                   stopwords: Sequence[str] = _EN_STOPWORDS) -> Column:
+def stopword_ratio(col: Column | str) -> Column:
+    """Share of tokens that are ``_EN_STOPWORDS`` (case-insensitive)."""
     toks = tokens(col)
-    sw = F.array(*[F.lit(s) for s in stopwords])
+    sw = F.array(*[F.lit(s) for s in _EN_STOPWORDS])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return F.when(
         F.size(toks) > 0, hits.cast("double") / F.size(toks)
@@ -161,8 +161,9 @@ def lang_id(col: Column | str) -> Column:
 STUB_EMBED_DIM = 16
 
 
-def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text"):
-    """Per-document deterministic SQL-expressible embeddings (SURVEY §5):
+def stub_embeddings_df(df):
+    """Per-document deterministic SQL-expressible embeddings (SURVEY §5)
+    of a ``(doc_id, text)`` frame, returned as ``(doc_id, emb)``:
     ``STUB_EMBED_DIM`` dimensions; dimension d counts the document's tokens
     whose md5 first hex char falls in bucket d. Stands in for the LaBSE
     pandas_udf (R7) so the chunk→vector→kNN pipeline is oracle-checkable
@@ -173,9 +174,9 @@ def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text"):
     vectors: one narrow explode and a partial+final aggregate. (A per-row nested
     lambda over the token array compiles to one huge codegen method that
     HotSpot may refuse to JIT.)"""
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("__t"))
     hashed = toks.select(
-        id_col,
+        "doc_id",
         (F.instr(F.lit("0123456789abcdef"), F.substring(F.md5("__t"), 1, 1)) - 1)
         .alias("__b"),
     )
@@ -183,16 +184,16 @@ def stub_embeddings_df(df, id_col: str = "doc_id", text_col: str = "text"):
     # the per-dimension Column loop costs ~5 py4j round-trips per bucket
     dims = range(STUB_EMBED_DIM)
     sums = [F.expr(f"sum(CAST((__b = {d}) AS INT)) AS __c{d}") for d in dims]
-    agged = hashed.groupBy(id_col).agg(*sums)
+    agged = hashed.groupBy("doc_id").agg(*sums)
     emb = F.expr(
         "array(" + ", ".join(f"CAST(__c{d} AS DOUBLE)" for d in dims) + ")"
     )
     zeros = F.expr("array(" + ", ".join(["0D"] * len(dims)) + ")")
-    sigs = agged.select(F.col(id_col), emb.alias("emb"))
+    sigs = agged.select(F.col("doc_id"), emb.alias("emb"))
     return (
-        df.select(id_col)
-        .join(sigs, on=id_col, how="left")
-        .select(F.col(id_col), F.coalesce(F.col("emb"), zeros).alias("emb"))
+        df.select("doc_id")
+        .join(sigs, on="doc_id", how="left")
+        .select(F.col("doc_id"), F.coalesce(F.col("emb"), zeros).alias("emb"))
     )
 
 

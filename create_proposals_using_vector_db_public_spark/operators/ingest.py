@@ -25,19 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import hashing as H
-
 CHUNK_KEY = ("file_name", "paragraph_idx")
 
 
 def filter_ingestible(
     df: DataFrame,
-    name_col: str = "file_name",
     extensions: tuple[str, ...] = (".pdf", ".docx"),
 ) -> DataFrame:
-    """R1+R2: keep allowed extensions (reference: .pdf/.docx), drop Office
-    ``~$`` lock files (``app.py:121``, ``app.py:35-36``)."""
-    name = F.col(name_col)
+    """R1+R2: keep ``file_name``s with an allowed extension (reference:
+    .pdf/.docx), drop Office ``~$`` lock files (``app.py:121``,
+    ``app.py:35-36``)."""
+    name = F.col("file_name")
     ext_ok = None
     for ext in extensions:
         cond = name.endswith(ext)
@@ -45,33 +43,24 @@ def filter_ingestible(
     return df.filter(ext_ok & ~name.startswith("~$"))
 
 
-def split_paragraphs(
-    df: DataFrame,
-    text_col: str = "text",
-    delim: str = "\n",
-) -> DataFrame:
-    """R5+R6: split into trimmed, non-empty paragraphs with positional index
-    (``app.py:24,33`` + enumeration ``app.py:97``). posexplode keeps the
-    within-file position — the reference's paragraph_idx — without a window.
+def split_paragraphs(df: DataFrame, delim: str = "\n") -> DataFrame:
+    """R5+R6: split ``text`` into trimmed, non-empty paragraphs with
+    positional index (``app.py:24,33`` + enumeration ``app.py:97``); the
+    other columns are kept. posexplode keeps the within-file position —
+    the reference's paragraph_idx — without a window.
     ``delim`` is a LITERAL separator (regex-escaped before the split —
     ``delim='.'`` splits on dots, not on every character)."""
     import re
 
     exploded = df.select(
-        *[c for c in df.columns if c != text_col],
-        F.posexplode(F.split(F.col(text_col), re.escape(delim))).alias(
+        *[c for c in df.columns if c != "text"],
+        F.posexplode(F.split(F.col("text"), re.escape(delim))).alias(
             "paragraph_idx", "paragraph"
         ),
     )
     return exploded.withColumn("paragraph", F.trim("paragraph")).filter(
         F.length("paragraph") > 0
     )
-
-
-def with_content_hash(df: DataFrame, content_col: str = "content",
-                      out_col: str = "file_sha256") -> DataFrame:
-    """R10: SHA-256 over file content (``app_callapi.py:117-120``)."""
-    return df.withColumn(out_col, H.sha256_hex(content_col))
 
 
 def skip_unchanged(
@@ -85,15 +74,12 @@ def skip_unchanged(
     return scanned.join(F.broadcast(file_state), on=list(key_cols), how="left_anti")
 
 
-def skip_existing_chunks(
-    new_chunks: DataFrame,
-    existing: DataFrame,
-    key_cols: tuple[str, ...] = CHUNK_KEY,
-) -> DataFrame:
-    """R9: drop paragraphs whose (file, idx) key is already indexed — the
-    reference's O(N²) list scan (``app.py:98-99``) as a hash anti-join."""
-    keys = existing.select(*key_cols).dropDuplicates(list(key_cols))
-    return new_chunks.join(keys, on=list(key_cols), how="left_anti")
+def skip_existing_chunks(new_chunks: DataFrame, existing: DataFrame) -> DataFrame:
+    """R9: drop paragraphs whose ``CHUNK_KEY`` (file, idx) is already
+    indexed — the reference's O(N²) list scan (``app.py:98-99``) as a hash
+    anti-join."""
+    keys = existing.select(*CHUNK_KEY).dropDuplicates(list(CHUNK_KEY))
+    return new_chunks.join(keys, on=list(CHUNK_KEY), how="left_anti")
 
 
 def upsert_files(
@@ -124,18 +110,13 @@ def delete_files(
     return existing.join(F.broadcast(file_names), on=file_col, how="left_anti")
 
 
-def zero_vector_for_empty(
-    df: DataFrame,
-    text_col: str = "paragraph",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """R8: empty text → zero vector instead of a model call
-    (``app_callapi.py:112``)."""
+def zero_vector_for_empty(df: DataFrame, dim: int = 64) -> DataFrame:
+    """R8: an empty ``paragraph`` gets a zero ``embedding`` instead of a
+    model call (``app_callapi.py:112``)."""
     return df.withColumn(
-        vec_col,
+        "embedding",
         F.when(
-            F.length(F.coalesce(F.col(text_col), F.lit(""))) == 0,
+            F.length(F.coalesce(F.col("paragraph"), F.lit(""))) == 0,
             F.array_repeat(F.lit(0.0).cast("float"), dim),
-        ).otherwise(F.col(vec_col)),
+        ).otherwise(F.col("embedding")),
     )

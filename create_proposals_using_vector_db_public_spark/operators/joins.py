@@ -32,31 +32,21 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """For every left row, attach the payload of the latest right row with
     ``right_ts <= left_ts`` in the same key group (backward as-of).
 
-    Rows tie-break as (ts, right-before-left[, tiebreak]) so a right row at
-    exactly left_ts is matched — the `<=` convention. ``tiebreak`` must be
-    one of ``right_payload`` (it orders RIGHT rows; no other right column
-    survives into the union). When several right rows share (key, ts) and
-    no ``tiebreak`` is given, the payload columns themselves complete the
-    ordering, so the row with the greatest payload tuple wins
-    deterministically on every run/partitioning (payload types must be
-    orderable for this default).
+    Rows order as (ts, right-before-left, payload) so a right row at
+    exactly left_ts is matched — the `<=` convention. When several right
+    rows share (key, ts), the payload columns complete the ordering, so
+    the row with the greatest payload tuple wins deterministically on
+    every run/partitioning (payload types must be orderable).
 
     Payloads are carried through the window inside a single-field struct so
     a right row whose payload is genuinely NULL still *matches* (the
     result is that NULL, not a stale earlier value) — ``last(ignorenulls)``
     skips only the left rows' placeholder structs, never a real right row.
     """
-    if tiebreak is not None and tiebreak not in right_payload:
-        raise ValueError(
-            f"tiebreak {tiebreak!r} must be one of right_payload "
-            f"{right_payload} — only payload columns survive into the "
-            "as-of union"
-        )
     lcols = [c for c in left.columns]
 
     def wrap_null(c: str) -> Column:
@@ -80,17 +70,15 @@ def asof_join(
           for c in right_payload],
     )
     u = l.unionByName(r)
-    order = [F.col("__ts").asc(), F.col("__side").asc()]
-    if tiebreak is not None:
-        order.append(F.col(f"__r_{tiebreak}").asc_nulls_first())
-    else:
-        # total order among tied right rows: last() then deterministically
-        # carries the greatest payload tuple (left rows' placeholder
-        # structs are NULL and sort first; a right row's struct is always
-        # non-null even when the payload inside it is)
-        order.extend(
-            F.col(f"__r_{c}").asc_nulls_first() for c in right_payload
-        )
+    # total order among tied right rows: last() then deterministically
+    # carries the greatest payload tuple (left rows' placeholder structs
+    # are NULL and sort first; a right row's struct is always non-null even
+    # when the payload inside it is)
+    order = [
+        F.col("__ts").asc(),
+        F.col("__side").asc(),
+        *[F.col(f"__r_{c}").asc_nulls_first() for c in right_payload],
+    ]
     w = (
         Window.partitionBy(*key_cols)
         .orderBy(*order)

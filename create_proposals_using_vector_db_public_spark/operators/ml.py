@@ -35,6 +35,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
 EMBED_DIM = 768
+EMBED_MAX_TOKENS = 512  # the reference's v2 truncation
 _MODEL_SINGLETON: dict[str, object] = {}
 
 
@@ -95,9 +96,7 @@ def _hash_embed_batch(texts: pd.Series, dim: int) -> pd.Series:
     return texts.map(one)
 
 
-def _model_embed_batch(
-    bundle, texts: pd.Series, dim: int, max_length: int
-) -> pd.Series:
+def _model_embed_batch(bundle, texts: pd.Series, dim: int) -> pd.Series:
     """Model-path batch embedding: ONE tokenizer call + ONE forward pass
     per Arrow batch — the whole point of the pandas_udf over the
     reference's row-at-a-time loop (app.py:101; SURVEY §4: batching is
@@ -121,7 +120,7 @@ def _model_embed_batch(
                 return_tensors="pt",
                 truncation=True,
                 padding=True,
-                max_length=max_length,
+                max_length=EMBED_MAX_TOKENS,
             )
             hidden = model(**enc).last_hidden_state
             # attention-masked mean pool: padded positions must not
@@ -145,17 +144,17 @@ def _model_embed_batch(
     return pd.Series(out)
 
 
-def embedder_udf(dim: int = EMBED_DIM, max_length: int = 512):
-    """pandas_udf returning array<float> embeddings. Model path when the ML
-    stack exists; hash fallback otherwise. Always zero-vector for empty
-    text (R8)."""
+def embedder_udf(dim: int = EMBED_DIM):
+    """pandas_udf returning array<float> embeddings. Model path (inputs
+    truncated at ``EMBED_MAX_TOKENS``) when the ML stack exists; hash
+    fallback otherwise. Always zero-vector for empty text (R8)."""
 
     @pandas_udf(ArrayType(FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         bundle = _load_model()
         if bundle is None:
             return _hash_embed_batch(texts, dim)
-        return _model_embed_batch(bundle, texts, dim, max_length)
+        return _model_embed_batch(bundle, texts, dim)
 
     return embed
 
@@ -228,13 +227,12 @@ def keyword_udf(top_n: int = 8):
     return keywords
 
 
-def with_embeddings(df, text_col: str = "text", out_col: str = "embedding",
-                    dim: int = EMBED_DIM):
-    """Attach embeddings. Discipline from SURVEY §4: call this AFTER all
-    dedup/filter stages — Catalyst will not reorder a nondeterministic
-    Python UDF past a join, so placement in the pipeline is placement in
-    the plan."""
-    return df.withColumn(out_col, embedder_udf(dim)(F.col(text_col)))
+def with_embeddings(df, dim: int = EMBED_DIM):
+    """Attach an ``embedding`` of the ``text`` column. Discipline from
+    SURVEY §4: call this AFTER all dedup/filter stages — Catalyst will not
+    reorder a nondeterministic Python UDF past a join, so placement in the
+    pipeline is placement in the plan."""
+    return df.withColumn("embedding", embedder_udf(dim)(F.col("text")))
 
 
 # --- R22/R23/R24: generation path (driver-side, key-gated) ------------------
@@ -250,9 +248,15 @@ def build_prompt(keywords: list[str], notes: str) -> str:
     return PROMPT_TEMPLATE.format(keywords=", ".join(keywords), notes=notes)
 
 
-def generate_proposal(prompt: str, model: str = "gpt-4o-mini",
-                      temperature: float = 0.2, max_tokens: int = 1200) -> str:
-    """R23. Requires OPENAI_API_KEY (the reference's guard,
+GEN_MODEL = "gpt-4o-mini"
+GEN_TEMPERATURE = 0.2
+GEN_MAX_TOKENS = 1200
+
+
+def generate_proposal(prompt: str) -> str:
+    """R23: one chat completion with the reference's call shape
+    (``GEN_MODEL``, ``GEN_TEMPERATURE``, ``GEN_MAX_TOKENS``). Requires
+    OPENAI_API_KEY (the reference's guard,
     ``app_callapi.py:27-30``); raises cleanly without it — CI never needs a
     key or the network."""
     if not os.environ.get("OPENAI_API_KEY"):
@@ -264,10 +268,10 @@ def generate_proposal(prompt: str, model: str = "gpt-4o-mini",
 
     client = OpenAI()
     resp = client.chat.completions.create(
-        model=model,
+        model=GEN_MODEL,
         messages=[{"role": "user", "content": prompt}],
-        temperature=temperature,
-        max_tokens=max_tokens,
+        temperature=GEN_TEMPERATURE,
+        max_tokens=GEN_MAX_TOKENS,
     )
     return resp.choices[0].message.content
 

@@ -57,19 +57,18 @@ FEATURE_SCHEMA = StructType(
 _HIST_BINS = 16
 
 
-def make_blob_table(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Derive a deterministic binary-blob table from a text table — the
-    fixture generator for multimodal plumbing (UTF-8 bytes stand in for
-    encoded media)."""
+def make_blob_table(df: DataFrame) -> DataFrame:
+    """Derive a deterministic binary-blob table from a ``(doc_id, text)``
+    table — the fixture generator for multimodal plumbing (UTF-8 bytes
+    stand in for encoded media)."""
     return df.select(
-        F.col(id_col).alias("blob_id"),
+        F.col("doc_id").alias("blob_id"),
         F.element_at(
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col(id_col) % 3 + 1).cast("int"),
+            (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("media_type"),
-        F.encode(F.col(text_col), "UTF-8").alias("content"),
-        F.length(F.encode(F.col(text_col), "UTF-8")).cast("long").alias("n_bytes"),
+        F.encode(F.col("text"), "UTF-8").alias("content"),
+        F.length(F.encode(F.col("text"), "UTF-8")).cast("long").alias("n_bytes"),
         F.lit("synthetic").alias("source"),
     )
 

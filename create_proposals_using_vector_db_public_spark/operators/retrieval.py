@@ -48,21 +48,19 @@ def bm25_weight() -> Column:
 def bm25_scores(
     docs: DataFrame,
     query_terms: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """BM25 score per document for a *dynamic* query-term set (a 1-column
-    ``term`` DataFrame, always broadcast, deduplicated to IN-set
-    semantics) — the data-dependent variant of the fixed-term q_bm25,
-    needed by pseudo-relevance feedback where the expanded term set is
-    computed, not literal.
+    """BM25 score per ``(doc_id, text)`` document for a *dynamic*
+    query-term set (a 1-column ``term`` DataFrame, always broadcast,
+    deduplicated to IN-set semantics) — the data-dependent variant of the
+    fixed-term q_bm25, needed by pseudo-relevance feedback where the
+    expanded term set is computed, not literal.
 
-    Returns (id_col, score) with the raw double score — callers round at
+    Returns (doc_id, score) with the raw double score — callers round at
     their declared precision. Document lengths and the 1-row corpus
     stats (avgdl, n_docs) are derived from the same postings the term
     frequencies come from, so they cannot describe another corpus. Pass
-    ``postings`` (an exploded (id, term) frame) when the caller runs
+    ``postings`` (an exploded (doc_id, term) frame) when the caller runs
     several BM25 passes over the same corpus: the tokenize/explode scan
     then happens once, and every pass's doc-length aggregate is the same
     subtree, which exchange reuse shuffles once.
@@ -71,17 +69,17 @@ def bm25_scores(
         postings
         if postings is not None
         else docs.select(
-            F.col(id_col), F.explode(T.tokens(text_col)).alias("term")
+            F.col("doc_id"), F.explode(T.tokens("text")).alias("term")
         )
     )
-    dl = terms.groupBy(id_col).agg(F.count("*").alias("dl"))
+    dl = terms.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     # distinct: the declared semantics are an IN-set (the oracles' WHERE
     # term IN ...); a duplicated input term must not double-count postings
     qterms = terms.join(
         F.broadcast(query_terms.select("term").distinct()), "term"
     )
-    tf = qterms.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # df per term == COUNT(DISTINCT id) over the filtered postings == the
     # number of (id, term) groups, i.e. tf's row count per term — deriving
     # it from tf shares the filtered-postings scan + (id, term) exchange
@@ -91,52 +89,39 @@ def bm25_scores(
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     return (
         tf.join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(bm25_weight()).alias("score"))
     )
 
 
-def rrf_fuse(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str = "doc_id",
-    left_rank: str = "rank_lex",
-    right_rank: str = "rank_vec",
-    k: int = RRF_K,
-) -> DataFrame:
-    """Reciprocal-rank fusion of two ranked candidate lists (Cormack et
-    al. 2009): full-outer join on the id, score = Σ 1/(k + rank) over the
+def rrf_fuse(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Reciprocal-rank fusion of a lexical ``(doc_id, rank_lex)`` and a
+    vector ``(doc_id, rank_vec)`` candidate list (Cormack et al. 2009):
+    full-outer join on ``doc_id``, score = Σ 1/(``RRF_K`` + rank) over the
     lists that contain the doc. Deterministic: the score is one or two
     exact double divisions added once (no order-dependent accumulation),
     rounded to 6dp; ties break on the id. Both inputs are top-k-bounded,
     so the join is trivially small at serving time."""
-    fused = left.join(right, id_col, "full_outer").select(
-        id_col,
-        left_rank,
-        right_rank,
+    fused = left.join(right, "doc_id", "full_outer").select(
+        "doc_id",
+        "rank_lex",
+        "rank_vec",
         F.round(
-            F.coalesce(1.0 / (k + F.col(left_rank)), F.lit(0.0))
-            + F.coalesce(1.0 / (k + F.col(right_rank)), F.lit(0.0)),
+            F.coalesce(1.0 / (RRF_K + F.col("rank_lex")), F.lit(0.0))
+            + F.coalesce(1.0 / (RRF_K + F.col("rank_vec")), F.lit(0.0)),
             6,
         ).alias("rrf"),
     )
-    return fused.orderBy(F.col("rrf").desc(), F.col(id_col).asc())
+    return fused.orderBy(F.col("rrf").desc(), F.col("doc_id").asc())
 
 
-def mmr_select(
-    cand: DataFrame,
-    k: int,
-    lam: float = 0.5,
-    id_col: str = "doc_id",
-    vec_col: str = "emb",
-    rel_col: str = "rel",
-) -> DataFrame:
-    """Maximal-marginal-relevance selection (Carbonell & Goldstein 1998):
-    greedily pick ``k`` items maximizing lam*relevance − (1−lam)*max
-    cosine-similarity to the already-selected set. Returns (id, rel,
-    mmr_rank).
+def mmr_select(cand: DataFrame, k: int, lam: float = 0.5) -> DataFrame:
+    """Maximal-marginal-relevance selection (Carbonell & Goldstein 1998)
+    over ``(doc_id, emb, rel)`` candidates: greedily pick ``k`` items
+    maximizing lam*relevance − (1−lam)*max cosine-similarity to the
+    already-selected set. Returns (doc_id, rel, mmr_rank).
 
     The candidate set is top-k-bounded upstream (tens of rows), so the
     whole greedy loop fits in ONE expression: gather the candidates into
@@ -161,7 +146,7 @@ def mmr_select(
     bounded by construction — never corpus data."""
     if k < 1:
         raise ValueError(f"mmr_select needs k >= 1, got {k}")
-    i, v, r = f"`{id_col}`", f"`{vec_col}`", f"`{rel_col}`"
+    i, v, r = "doc_id", "emb", "rel"
 
     def sc(ref: str) -> str:
         """round(lam*rel − (1−lam)*maxsim, 6) for candidate ``ref``, where
@@ -209,13 +194,13 @@ def mmr_select(
         else f"aggregate(sequence(2, {int(k)}), {pick1}, "
         f"(acc, st) -> concat(acc, {best}))"
     )
-    gathered = cand.select(id_col, vec_col, rel_col).agg(
-        F.collect_list(F.struct(id_col, vec_col, rel_col)).alias("cs")
+    gathered = cand.select(i, v, r).agg(
+        F.collect_list(F.struct(i, v, r)).alias("cs")
     )
     return gathered.select(
         F.posexplode(F.expr(sel)).alias("__pos", "__s")
     ).select(
-        F.col(f"__s.{i}").alias(id_col),
-        F.col(f"__s.{r}").alias(rel_col),
+        F.col(f"__s.{i}").alias(i),
+        F.col(f"__s.{r}").alias(r),
         (F.col("__pos") + 1).cast("int").alias("mmr_rank"),
     )

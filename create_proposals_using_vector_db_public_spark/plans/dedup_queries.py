@@ -312,10 +312,10 @@ base AS (
   SELECT vec_id, label, {d_normalize(dd("embedding"))} AS v FROM vcorpus
 ),
 b0 AS (
-  SELECT vec_id, label, v, {d_hashed_bucket("v", 0, 6)} AS bkt FROM base
+  SELECT vec_id, label, v, {d_hashed_bucket("v", 0)} AS bkt FROM base
 ),
 b1 AS (
-  SELECT vec_id, label, v, {d_hashed_bucket("v", 1, 6)} AS bkt FROM base
+  SELECT vec_id, label, v, {d_hashed_bucket("v", 1)} AS bkt FROM base
 ),
 cand AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,

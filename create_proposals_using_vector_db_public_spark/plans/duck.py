@@ -9,6 +9,8 @@ a fixed rounding makes the value-hash stable.
 
 from __future__ import annotations
 
+from ..operators.dedup import EMBED_LSH_PLANES
+
 
 def dd(col: str) -> str:
     """Cast a list<float> column to list<double>."""
@@ -67,27 +69,16 @@ def d_words(col: str = "text") -> str:
     )
 
 
-def d_money_double(x: str) -> str:
-    """Mirror of ``functions.money.money_double``: exact decimal
-    aggregate → double via separately-cast floor and fraction (each cast
-    exact at its own scale) + one IEEE add — identical bits on both
-    engines at any magnitude, unlike a direct decimal→double cast (see
-    money_double's docstring for the 2^53 divergence)."""
-    return (
-        f"(CAST(floor({x}) AS DOUBLE) + CAST({x} - floor({x}) AS DOUBLE))"
-    )
-
-
-def d_hashed_bucket(a: str, band: int, n_planes: int = 6) -> str:
+def d_hashed_bucket(a: str, band: int) -> str:
     """Mirror of ``operators.dedup.hashed_hyperplane_bucket``: sign bits
-    of ``n_planes`` pseudo-random-hyperplane projections for LSH band
-    ``band``. The ±1 pattern per (global plane p, element i) is the LCG
+    of ``EMBED_LSH_PLANES`` pseudo-random-hyperplane projections for LSH
+    band ``band``. The ±1 pattern per (global plane p, element i) is the LCG
     bit ``(i*1103515245 + p*12345) // 65536 % 2`` — pure int64
     arithmetic, identical in both engines; the projection reduces
     sequentially so the float sign is bit-identical."""
     signs = []
-    for j in range(n_planes):
-        p = band * n_planes + j
+    for j in range(EMBED_LSH_PLANES):
+        p = band * EMBED_LSH_PLANES + j
         term = (
             f"list_reduce(list_prepend(0.0, "
             f"list_transform(list_zip({a}, range(0, len({a}))), "

@@ -256,7 +256,7 @@ def q_pickle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     w = Window.partitionBy("source").orderBy("doc_id")
     chunks = (
-        T.stub_embeddings_df(d, "doc_id", "text")
+        T.stub_embeddings_df(d)
         .join(d.select("doc_id", "source", "text"), "doc_id")
         .select(
             F.col("source").alias("file_name"),
@@ -337,7 +337,7 @@ def q_pickle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     chunks = (
-        T.stub_embeddings_df(d, "doc_id", "text")
+        T.stub_embeddings_df(d)
         .join(d.select("doc_id", "source", "text"), "doc_id")
         .select(
             F.col("source").alias("file_name"),

@@ -62,7 +62,7 @@ def q_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's paragraph chunking (``app.py:24,33,97``), applied to the
     documents fixture (space-delimited)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    chunks = I.split_paragraphs(d.select("doc_id", "text"), "text", delim=" ")
+    chunks = I.split_paragraphs(d.select("doc_id", "text"), delim=" ")
     return chunks.select("doc_id", "paragraph_idx", "paragraph")
 
 

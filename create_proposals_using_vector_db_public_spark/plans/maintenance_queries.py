@@ -445,8 +445,8 @@ def q_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" (rev 2)")).alias("text"),
         (F.col("n_chars") + 8).alias("n_chars"),
     )
-    v0 = _IS.commit_version(gen1, base, file_col="file_name")
-    v1 = _IS.commit_version(gen2, base, file_col="file_name")
+    v0 = _IS.commit_version(gen1, base)
+    v1 = _IS.commit_version(gen2, base)
     assert (v0, v1) == (0, 1), "fresh store must commit versions 0, 1"
     outs = []
     for v in (0, 1):

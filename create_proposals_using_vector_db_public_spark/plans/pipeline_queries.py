@@ -477,19 +477,17 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     state continuation is proven by tests/test_streaming.py.
 
     The update-mode memory sink keeps one row per key PER MICRO-BATCH; a
-    run split into several batches (a second staged file, or
-    maxFilesPerTrigger) would otherwise surface stale intermediate totals
-    next to the final ones, so the query reduces to the final row per key
-    (max of the monotone running count / event-time max)."""
+    run split into several batches (a second staged file) would otherwise
+    surface stale intermediate totals next to the final ones, so the query
+    reduces to the final row per key (max of the monotone running count /
+    event-time max)."""
     from pyspark.sql.types import LongType
 
     from ..streaming import available_now_to_memory, running_counts_stateful
     from .streaming_queries import _events_stream
 
     ev = _events_stream(spark, sf_dir)
-    counts = running_counts_stateful(
-        ev, key_col="event_type", ts_col="ts_us", ts_type=LongType()
-    )
+    counts = running_counts_stateful(ev, ts_col="ts_us", ts_type=LongType())
     out = available_now_to_memory(counts, output_mode="update")
     return out.groupBy("event_type").agg(
         F.max("n_events").alias("n_events"),

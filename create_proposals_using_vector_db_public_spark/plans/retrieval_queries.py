@@ -142,7 +142,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = S.top_k(
         scores, [F.col("s").desc(), F.col("doc_id").asc()], _RRF_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
-    emb = T.stub_embeddings_df(d, "doc_id", "text")
+    emb = T.stub_embeddings_df(d)
     qv = F.broadcast(
         emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
     )
@@ -227,7 +227,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the gathered top-20 candidate array (see mmr_select) — one job,
     nothing collected to the driver."""
     d = load_table(spark, sf_dir, "documents")
-    emb = T.stub_embeddings_df(d, "doc_id", "text")
+    emb = T.stub_embeddings_df(d)
     qv = F.broadcast(
         emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
     )
@@ -586,11 +586,11 @@ def q_e2e_rag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = S.top_k(
         scores, [F.col("s").desc(), F.col("doc_id").asc()], _E2E_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
-    emb = T.stub_embeddings_df(kept, "doc_id", "text")
+    emb = T.stub_embeddings_df(kept)
     qv = F.broadcast(
-        T.stub_embeddings_df(
-            d.filter(F.col("doc_id") == 0), "doc_id", "text"
-        ).select(F.col("emb").alias("qv"))
+        T.stub_embeddings_df(d.filter(F.col("doc_id") == 0)).select(
+            F.col("emb").alias("qv")
+        )
     )
     dists = emb.crossJoin(qv).select(
         "doc_id", F.round(V.l2_dist("emb", "qv"), 6).alias("dist")

@@ -50,7 +50,7 @@ def q_stub_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket counts, exploded to (doc_id, dim, val) rows for value-exact
     oracle comparison."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    emb = T.stub_embeddings_df(d, "doc_id", "text")
+    emb = T.stub_embeddings_df(d)
     return emb.select(
         "doc_id",
         F.posexplode("emb").alias("dim", "val"),
@@ -94,7 +94,7 @@ def q_stub_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference search pipeline (R5→R7→R17→R19) oracle-checked without any ML
     dependency."""
     d = load_table(spark, sf_dir, "documents")
-    emb = T.stub_embeddings_df(d, "doc_id", "text")
+    emb = T.stub_embeddings_df(d)
     qv = emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
     scored = emb.crossJoin(F.broadcast(qv)).select(
         "doc_id",

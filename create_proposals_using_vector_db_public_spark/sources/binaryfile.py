@@ -28,16 +28,16 @@ from ..functions import hashing as H
 from ..operators import ingest as I
 
 
-def read_binary_folder(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.{pdf,docx,txt}",
-) -> DataFrame:
-    """R1: folder scan with extension filtering pushed into the file
-    listing (pathGlobFilter prunes at the source, not post-scan)."""
+INGEST_GLOB = "*.{pdf,docx,txt}"
+
+
+def read_binary_folder(spark: SparkSession, path: str) -> DataFrame:
+    """R1: folder scan with the ``INGEST_GLOB`` extension filter pushed
+    into the file listing (pathGlobFilter prunes at the source, not
+    post-scan)."""
     df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", INGEST_GLOB)
         .load(path)
     )
     return df.withColumn(
@@ -91,16 +91,11 @@ def extract_text_udf():
     return extract
 
 
-def ingest_folder(
-    spark: SparkSession,
-    path: str,
-    file_state: DataFrame | None = None,
-) -> DataFrame:
+def ingest_folder(spark: SparkSession, path: str) -> DataFrame:
     """The reference's full ingest front half, composed end-to-end:
 
     binaryFile scan (R1) → lock-file skip (R2) → extract (R3/R4) →
-    sha256 (R10) → unchanged-skip anti-join (R11) → paragraph split +
-    index (R5/R6).
+    sha256 (R10) → paragraph split + index (R5/R6).
 
     Returns the chunk table (file_name, file_sha256, paragraph_idx,
     paragraph). The embed/keyword UDFs (operators.ml) attach downstream —
@@ -109,11 +104,9 @@ def ingest_folder(
     files = read_binary_folder(spark, path)
     files = I.filter_ingestible(files, extensions=(".pdf", ".docx", ".txt"))
     files = files.withColumn("file_sha256", H.sha256_hex("content"))
-    if file_state is not None:
-        files = I.skip_unchanged(files, file_state)
     texts = files.select(
         "file_name",
         "file_sha256",
         extract_text_udf()(F.col("file_name"), F.col("content")).alias("text"),
     )
-    return I.split_paragraphs(texts, text_col="text", delim="\n")
+    return I.split_paragraphs(texts)

@@ -31,7 +31,6 @@ written.
 
 from __future__ import annotations
 
-import logging
 import os
 import pickle
 from dataclasses import dataclass
@@ -125,27 +124,18 @@ class RefPickleStreamReader(SimpleDataSourceStreamReader):
     which is deterministic because shard files are immutable once written.
 
     Driver-memory contract: a batch's rows are buffered on the driver
-    (Spark's simple-stream wrapper prefetches there), so an uncapped
-    catch-up over many pending shards buffers them ALL in one batch.
-    ``option("maxShardsPerBatch", n)`` bounds that: each micro-batch
-    consumes at most n shards and a ``processingTime`` trigger drains the
-    backlog incrementally. The default is uncapped because
+    (Spark's simple-stream wrapper prefetches there), and each ``read()``
+    takes every pending shard, so a catch-up over a backlog buffers it
+    ALL in one batch. That is what the package's AvailableNow runs need:
     ``Trigger.AvailableNow`` issues exactly ONE read() for a simple
-    reader — a capped AvailableNow run would silently stop after n
-    shards. Cap for continuous tailing; leave uncapped for one-shot
-    drains of bounded backlogs. A capped ``read()`` that leaves backlog
-    behind logs a runtime warning, so a capped-AvailableNow misuse is
-    detectable rather than silently partial.
+    reader, so a per-batch cap would leave the rest of the backlog
+    undrained.
     """
 
     def __init__(self, options):
         self._dir = options.get("path")
         if not self._dir:
             raise ValueError("refpickle stream: a load(path) is required")
-        max_shards = options.get("maxShardsPerBatch")
-        self._max_shards = int(max_shards) if max_shards is not None else None
-        if self._max_shards is not None and self._max_shards < 1:
-            raise ValueError("refpickle stream: maxShardsPerBatch must be >= 1")
 
     def initialOffset(self):
         return {"upto": ""}
@@ -176,19 +166,6 @@ class RefPickleStreamReader(SimpleDataSourceStreamReader):
         new = [n for n in self._files() if n > start["upto"]]
         if not new:
             return iter(()), start
-        if self._max_shards is not None and len(new) > self._max_shards:
-            # surfaced, not silent: a capped read under Trigger.AvailableNow
-            # would otherwise stop after this batch with backlog remaining
-            # (AvailableNow issues exactly one read() for a simple reader)
-            logging.getLogger(__name__).warning(
-                "refpickle stream: maxShardsPerBatch=%d leaves %d shard(s) "
-                "unconsumed this batch; under Trigger.AvailableNow the "
-                "remainder will NOT be drained — use a processingTime "
-                "trigger for capped tailing",
-                self._max_shards,
-                len(new) - self._max_shards,
-            )
-            new = new[: self._max_shards]
         return self._rows(new), {"upto": new[-1]}
 
     def readBetweenOffsets(self, start, end):
@@ -240,22 +217,14 @@ def read_doc_data(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format("refpickle").load(path)
 
 
-def read_doc_data_stream(
-    spark: SparkSession,
-    directory: str,
-    max_shards_per_batch: int | None = None,
-) -> DataFrame:
+def read_doc_data_stream(spark: SparkSession, directory: str) -> DataFrame:
     """Watch a directory of doc_data shard pickles as a stream (new shard
     files become micro-batches; the reference's incremental folder-rescan
-    semantics applied to its own persistence format). Cap the per-batch
-    driver buffer with ``max_shards_per_batch`` when tailing a large
-    backlog under a processingTime trigger — see RefPickleStreamReader's
-    driver-memory contract for why AvailableNow runs must stay uncapped."""
+    semantics applied to its own persistence format). Each micro-batch
+    takes every pending shard — see RefPickleStreamReader's driver-memory
+    contract."""
     register(spark)
-    reader = spark.readStream.format("refpickle")
-    if max_shards_per_batch is not None:
-        reader = reader.option("maxShardsPerBatch", max_shards_per_batch)
-    return reader.load(directory)
+    return spark.readStream.format("refpickle").load(directory)
 
 
 def write_doc_data(df: DataFrame, path: str) -> int:

@@ -33,34 +33,21 @@ from pyspark.sql.types import StructType
 
 from ..operators import ingest as I
 
+# how long a stream runner waits for its AvailableNow query to finish
+STREAM_TIMEOUT_SEC = 300
 
-def stream_parquet(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+
+def stream_parquet(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """File-source stream over a parquet directory (the folder being
     "watched"). Schema must be provided — streaming sources don't infer."""
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+    return spark.readStream.format("parquet").schema(schema).load(path)
 
 
-def stream_chunks(
-    files_stream: DataFrame,
-    text_col: str = "text",
-    delim: str = "\n",
-    watermark_col: str | None = None,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """The streaming chunking pipeline: R5/R6 paragraph split + R9 key dedup
-    with watermark-bounded state."""
-    chunks = I.split_paragraphs(files_stream, text_col=text_col, delim=delim)
-    if watermark_col is None:
-        return chunks
-    return chunks.withWatermark(watermark_col, watermark_delay)
+def stream_chunks(files_stream: DataFrame) -> DataFrame:
+    """The streaming chunking pipeline: the R5/R6 paragraph split of the
+    stream's ``text`` column, the same transform as the batch
+    ``operators.ingest.split_paragraphs``."""
+    return I.split_paragraphs(files_stream)
 
 
 def watermark_dedup(
@@ -80,19 +67,17 @@ def watermark_dedup(
 
 def windowed_event_counts(
     events_stream: DataFrame,
-    ts_col: str = "ts",
     window: str = "6 hours",
     watermark: str = "1 hour",
-    extra_key: str | None = "event_type",
 ) -> DataFrame:
-    """Event-time tumbling-window aggregation with late-data watermark —
-    the streaming twin of the batch q_stream_window query."""
-    keys = [F.window(F.col(ts_col), window).alias("win")]
-    if extra_key:
-        keys.append(F.col(extra_key))
+    """Event-time tumbling-window counts and value totals per
+    ``event_type`` over ``ts``, with a late-data watermark — the streaming
+    twin of the batch q_stream_window query."""
     return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(*keys)
+        events_stream.withWatermark("ts", watermark)
+        .groupBy(
+            F.window(F.col("ts"), window).alias("win"), F.col("event_type")
+        )
         .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 4).alias("total_value"))
     )
 
@@ -101,7 +86,6 @@ def available_now_to_parquet(
     stream_df: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    timeout_sec: int = 300,
 ) -> None:
     """One AvailableNow pass into a parquet sink with a persistent
     checkpoint — the durable form of the reference's re-scan semantics
@@ -123,16 +107,13 @@ def available_now_to_parquet(
         stream_df.writeStream.format("parquet").outputMode("append"),
         stream_df.sparkSession,
         "available_now_to_parquet",
-        timeout_sec,
         checkpoint=checkpoint_path,
         sink_path=out_path,
     )
 
 
 def available_now_to_memory(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    timeout_sec: int = 300,
+    stream_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Run a streaming DataFrame to completion with Trigger.AvailableNow
     into an in-memory table and return the batch result — the one-shot
@@ -164,7 +145,6 @@ def available_now_to_memory(
         stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
         spark,
         "available_now_to_memory",
-        timeout_sec,
         cap_state_partitions=True,
     )
     out = spark.table(name)
@@ -220,7 +200,6 @@ def _run_available_now(
     writer: DataStreamWriter,
     spark: SparkSession,
     runner: str,
-    timeout_sec: int,
     checkpoint: str | None = None,
     sink_path: str | None = None,
     cap_state_partitions: bool = False,
@@ -252,8 +231,8 @@ def _run_available_now(
       other. On HDFS and object stores the default manager, with its
       atomic rename, is kept.
 
-    A query that does not finish within ``timeout_sec`` is stopped and
-    ``TimeoutError`` raised: returning would hand the caller a partial
+    A query that does not finish within ``STREAM_TIMEOUT_SEC`` is stopped
+    and ``TimeoutError`` raised: returning would hand the caller a partial
     result while the unstopped query keeps writing behind their back."""
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -271,9 +250,11 @@ def _run_available_now(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(STREAM_TIMEOUT_SEC):
         q.stop()
-        raise TimeoutError(f"{runner} did not finish within {timeout_sec}s")
+        raise TimeoutError(
+            f"{runner} did not finish within {STREAM_TIMEOUT_SEC}s"
+        )
 
 
 # --- streaming upsert into a versioned parquet store -------------------------
@@ -324,15 +305,14 @@ def read_versioned_as_of(spark, table_dir: str, version: int) -> DataFrame:
 def commit_version(
     batch_df: DataFrame,
     table_dir: str,
-    file_col: str = "file_name",
     keep_versions: int | None = None,
 ) -> int:
-    """ONE versioned-store commit from a batch DataFrame: upsert against
-    the CURRENT snapshot, write ``v{n+1}`` to a fresh path, flip the
-    pointer atomically, apply retention. The streaming upsert's
-    foreachBatch delegates here, so batch writers, the stream, and the
-    as-of-version read all share a single commit protocol. Returns the
-    committed version number."""
+    """ONE versioned-store commit from a batch DataFrame: upsert its
+    ``file_name``s against the CURRENT snapshot, write ``v{n+1}`` to a
+    fresh path, flip the pointer atomically, apply retention. The
+    streaming upsert's foreachBatch delegates here, so batch writers, the
+    stream, and the as-of-version read all share a single commit
+    protocol. Returns the committed version number."""
     import os
     import shutil
 
@@ -353,11 +333,7 @@ def commit_version(
         if cur_v < 0
         else spark.read.parquet(os.path.join(table_dir, f"v{cur_v}"))
     )
-    merged = (
-        batch_df
-        if cur is None
-        else upsert_files(cur, batch_df, file_col=file_col)
-    )
+    merged = batch_df if cur is None else upsert_files(cur, batch_df)
     v = cur_v + 1
     merged.write.mode("overwrite").parquet(os.path.join(table_dir, f"v{v}"))
     tmp = os.path.join(table_dir, "CURRENT.tmp")
@@ -376,8 +352,6 @@ def stream_upsert_to_versioned(
     stream_df: DataFrame,
     table_dir: str,
     checkpoint_path: str,
-    file_col: str = "file_name",
-    timeout_sec: int = 300,
     keep_versions: int | None = None,
 ) -> None:
     """Streaming form of R12 upsert (``app_callapi.py:140-142`` under the
@@ -418,15 +392,11 @@ def stream_upsert_to_versioned(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        commit_version(
-            batch_df, table_dir, file_col=file_col,
-            keep_versions=keep_versions,
-        )
+        commit_version(batch_df, table_dir, keep_versions=keep_versions)
 
     _run_available_now(
         stream_df.writeStream.foreachBatch(apply_batch),
         stream_df.sparkSession,
         "stream_upsert_to_versioned",
-        timeout_sec,
         checkpoint=checkpoint_path,
     )

@@ -35,24 +35,21 @@ from .ingest_stream import _run_available_now
 
 def running_counts_stateful(
     stream_df: DataFrame,
-    key_col: str = "event_type",
     ts_col: str = "ts",
     ts_type=None,
-    key_type=None,
 ) -> DataFrame:
-    """Cumulative per-key event counts that survive across micro-batches
-    AND across separate runs (the count state is in the checkpoint, so a
-    second AvailableNow run continues from the first's totals — the
-    stateful twin of the incremental file pickup).
+    """Cumulative per-``event_type`` event counts that survive across
+    micro-batches AND across separate runs (the count state is in the
+    checkpoint, so a second AvailableNow run continues from the first's
+    totals — the stateful twin of the incremental file pickup).
 
-    Emits one row per key per batch: (key, n_events_total, last_ts).
-    ``ts_type`` is the ``ts_col`` data type (default TimestampType; pass
-    LongType for integer-microsecond columns); ``key_type`` likewise for
-    non-string grouping keys (default StringType).
+    Emits one row per string ``event_type`` per batch: (event_type,
+    n_events, last_ts). ``ts_type`` is the ``ts_col`` data type (default
+    TimestampType; pass LongType for integer-microsecond columns).
     """
     out_schema = StructType(
         [
-            StructField(key_col, key_type or StringType()),
+            StructField("event_type", StringType()),
             StructField("n_events", LongType()),
             StructField("last_ts", ts_type or TimestampType()),
         ]
@@ -75,10 +72,10 @@ def running_counts_stateful(
         total += batch_n
         state.update((total,))
         yield pd.DataFrame(
-            {key_col: [key[0]], "n_events": [total], "last_ts": [last_ts]}
+            {"event_type": [key[0]], "n_events": [total], "last_ts": [last_ts]}
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
+    return stream_df.groupBy("event_type").applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -91,7 +88,6 @@ def run_update_to_parquet(
     stream_df: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    timeout_sec: int = 300,
 ) -> None:
     """One AvailableNow pass of an update-mode stateful stream into parquet
     via foreachBatch (the parquet sink itself is append-only; foreachBatch
@@ -117,6 +113,5 @@ def run_update_to_parquet(
         ).outputMode("update"),
         stream_df.sparkSession,
         "run_update_to_parquet",
-        timeout_sec,
         checkpoint=checkpoint_path,
     )

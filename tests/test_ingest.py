@@ -111,7 +111,7 @@ def test_reference_corpus_scan_and_lockfile_skip(spark):
 
         pytest.skip("reference fixture corpus not present")
 
-    scanned = B.read_binary_folder(spark, REF_DOCS, glob="*.docx")
+    scanned = B.read_binary_folder(spark, REF_DOCS)
     names = sorted(r["file_name"] for r in scanned.select("file_name").collect())
     assert "~$eport9.docx" in names and len(names) == 11
 

@@ -12,9 +12,7 @@ def test_asof_backward_with_ties(spark):
         [(1, 40, 400), (1, 100, 1000), (1, 120, 1200), (2, 20, 2000)],
         "user: long, rts: long, payload: long",
     )
-    out = J.asof_join(
-        left, right, ["user"], "ts", "rts", ["payload"], tiebreak=None
-    )
+    out = J.asof_join(left, right, ["user"], "ts", "rts", ["payload"])
     got = {r["name"]: r["asof_payload"] for r in out.collect()}
     assert got["p0"] == 400     # latest right at-or-before 50 is ts=40
     assert got["p1"] == 1000    # right at EXACTLY 100 matches (<= semantics)

@@ -1,14 +1,10 @@
 """Regression pins for the round-2 operator-review fixes: NULL payloads
-through as-of joins, NULL distances in kNN ranking, literal split
-delimiters, short-document signature enrichment, IVF re-assignment, and
-as-of tiebreak validation."""
-
-import pytest
+through as-of joins, ties among as-of right rows, NULL distances in kNN
+ranking, literal split delimiters, and PQ training over offset ids."""
 
 from pyspark.sql import functions as F
 
 from create_proposals_using_vector_db_public_spark.operators import (
-    dedup as D,
     ingest as I,
     joins as J,
     knn as K,
@@ -42,20 +38,18 @@ def test_asof_join_before_first_right_row_is_null(spark):
     assert out[0]["asof_payload"] is None
 
 
-def test_asof_join_tiebreak_must_be_payload_column(spark):
+def test_asof_join_tied_right_rows_take_greatest_payload(spark):
+    """Right rows that share (key, ts) are ordered by their payload tuple,
+    so the greatest one wins on every run and partitioning."""
     left = spark.createDataFrame([(1, 30)], "k: long, lts: long")
     right = spark.createDataFrame(
-        [(1, 10, "x", 7)], "k: long, rts: long, payload: string, seq: long"
-    )
-    with pytest.raises(ValueError, match="right_payload"):
-        J.asof_join(
-            left, right, ["k"], "lts", "rts", ["payload"], tiebreak="seq"
-        )
-    # a payload column IS a valid tiebreak and orders tied right rows
+        [(1, 10, "x", 7), (1, 10, "y", 3), (1, 10, "x", 9)],
+        "k: long, rts: long, payload: string, seq: long",
+    ).repartition(3)
     out = J.asof_join(
-        left, right, ["k"], "lts", "rts", ["payload", "seq"], tiebreak="seq"
+        left, right, ["k"], "lts", "rts", ["payload", "seq"]
     ).collect()
-    assert out[0]["asof_payload"] == "x" and out[0]["asof_seq"] == 7
+    assert (out[0]["asof_payload"], out[0]["asof_seq"]) == ("y", 3)
 
 
 def test_knn_null_distance_ranks_last_not_first(spark):

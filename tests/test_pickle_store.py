@@ -198,45 +198,3 @@ def test_stream_incremental_pickup_two_batches(spark, tmp_path):
         assert got == [("a.docx", 0), ("a.docx", 1), ("b.docx", 7)]
     finally:
         q.stop()
-
-
-def test_stream_reader_max_shards_per_batch(tmp_path):
-    """Capped reader consumes at most n shards per read() so a catch-up
-    backlog drains across batches instead of one driver-buffered batch."""
-    d = str(tmp_path / "stores")
-    for i in range(3):
-        _store(os.path.join(d, f"shard_{i:03d}.pkl"), [(f"f{i}.docx", i)])
-    r = pickle_store.RefPickleStreamReader(
-        {"path": d, "maxShardsPerBatch": "1"}
-    )
-    off = r.initialOffset()
-    seen = []
-    for _ in range(3):
-        rows, off = r.read(off)
-        batch = [x[2] for x in rows]
-        assert len(batch) == 1
-        seen += batch
-    assert seen == [0, 1, 2]
-    rows, off_same = r.read(off)
-    assert list(rows) == [] and off_same == off
-
-
-def test_stream_reader_capped_read_warns_on_leftover(tmp_path, caplog):
-    """A capped read() that leaves backlog behind must log a warning —
-    under Trigger.AvailableNow the remainder would silently never drain
-    (ADVICE r2). An uncapped or fully-consumed read stays quiet."""
-    import logging
-
-    d = str(tmp_path / "stores")
-    for i in range(3):
-        _store(os.path.join(d, f"shard_{i:03d}.pkl"), [(f"f{i}.docx", i)])
-    r = pickle_store.RefPickleStreamReader(
-        {"path": d, "maxShardsPerBatch": "2"}
-    )
-    with caplog.at_level(logging.WARNING):
-        _, off = r.read(r.initialOffset())
-    assert any("unconsumed" in m for m in caplog.messages)
-    caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        r.read(off)  # 1 shard left, cap 2 — fully consumed, no warning
-    assert not any("unconsumed" in m for m in caplog.messages)

@@ -77,7 +77,7 @@ def test_model_embed_batch_masked_mean_fake_bundle():
             return self._Out(h)
 
     texts = pd.Series(["one two three", "", None, "single"])
-    out = _model_embed_batch((FakeTok(), FakeModel()), texts, DIM, 512)
+    out = _model_embed_batch((FakeTok(), FakeModel()), texts, DIM)
 
     # R8: empty and None rows are exact zero vectors, never model output
     assert out[1] == [0.0] * DIM and out[2] == [0.0] * DIM
@@ -93,7 +93,7 @@ def test_model_embed_batch_masked_mean_fake_bundle():
 
     # dim-mismatch guard fails loudly rather than emitting ragged vectors
     with pytest.raises(ValueError, match="dim mismatch"):
-        _model_embed_batch((FakeTok(), FakeModel()), texts, DIM + 1, 512)
+        _model_embed_batch((FakeTok(), FakeModel()), texts, DIM + 1)
 
 
 @pytest.mark.skipif(

@@ -39,6 +39,11 @@ def _write_file(spark, d, name, rows):
     df.write.mode("append").parquet(f"{d}/{name}")
 
 
+def _keyed(stream):
+    """``stream`` with its file name as the ``event_type`` key."""
+    return stream.withColumn("event_type", F.col("file_name"))
+
+
 def test_available_now_chunking_pipeline(spark, watch_dir):
     import datetime as dt
 
@@ -50,7 +55,7 @@ def test_available_now_chunking_pipeline(spark, watch_dir):
         [("f1.docx", "hello\n\nworld", t0), ("f2.docx", "solo", t0)],
     )
     stream = S.stream_parquet(spark, f"{watch_dir}/batch1", SCHEMA)
-    chunks = S.stream_chunks(stream, text_col="text")
+    chunks = S.stream_chunks(stream)
     out = S.available_now_to_memory(chunks, output_mode="append")
     rows = {(r["file_name"], r["paragraph_idx"]): r["paragraph"] for r in out.collect()}
     assert rows == {
@@ -130,7 +135,7 @@ def test_windowed_event_counts(spark, watch_dir):
     stream = (
         spark.readStream.format("parquet").schema(df.schema).load(d)
     )
-    win = S.windowed_event_counts(stream, ts_col="ts", window="6 hours")
+    win = S.windowed_event_counts(stream, window="6 hours")
     out = S.available_now_to_memory(win, output_mode="complete")
     counts = sorted(r["cnt"] for r in out.collect())
     assert counts == [1, 2]  # two tumbling windows: 2 early + 1 late event
@@ -153,20 +158,20 @@ def test_stateful_counts_survive_across_runs(spark, watch_dir, tmp_path):
         [("a", "x", t0), ("a", "y", t0), ("a", "z", t0), ("b", "w", t0)],
     )
     stream = S.stream_parquet(spark, f"{watch_dir}/*.parquet", SCHEMA)
-    counts = S.running_counts_stateful(stream, key_col="file_name", ts_col="ts")
+    counts = S.running_counts_stateful(_keyed(stream))
     S.run_update_to_parquet(counts, out, ckpt)
-    r1 = {r["file_name"]: r["n_events"] for r in spark.read.parquet(out).collect()}
+    r1 = {r["event_type"]: r["n_events"] for r in spark.read.parquet(out).collect()}
     assert r1 == {"a": 3, "b": 1}
 
     t1 = t0 + dt.timedelta(hours=1)
     _write_file(spark, watch_dir, "b.parquet", [("a", "q", t1), ("a", "r", t1)])
     stream2 = S.stream_parquet(spark, f"{watch_dir}/*.parquet", SCHEMA)
-    counts2 = S.running_counts_stateful(stream2, key_col="file_name", ts_col="ts")
+    counts2 = S.running_counts_stateful(_keyed(stream2))
     S.run_update_to_parquet(counts2, out, ckpt)
     rows = spark.read.parquet(out).collect()
     # batch 2 emitted only key 'a', with the CUMULATIVE total 3+2=5
-    assert max(r["n_events"] for r in rows if r["file_name"] == "a") == 5
-    assert max(r["n_events"] for r in rows if r["file_name"] == "b") == 1
+    assert max(r["n_events"] for r in rows if r["event_type"] == "a") == 5
+    assert max(r["n_events"] for r in rows if r["event_type"] == "b") == 1
 
 
 def test_watermark_drops_late_event_across_runs(spark, watch_dir, tmp_path):
@@ -190,7 +195,7 @@ def test_watermark_drops_late_event_across_runs(spark, watch_dir, tmp_path):
             "event_type", F.lit("e")
         )
         win = S.windowed_event_counts(
-            stream, ts_col="ts", window="30 minutes", watermark="10 minutes"
+            stream, window="30 minutes", watermark="10 minutes"
         )
         flat = win.select(
             F.col("win.start").alias("w_start"), "event_type", "cnt"
@@ -464,7 +469,7 @@ def test_memory_run_caps_state_partitions_at_parallelism(
     spark, watch_dir, partitions, started
 ):
     stream = _events_stream_of(spark, f"{watch_dir}/events")
-    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    win = S.windowed_event_counts(stream, window="1 hour")
     out = S.available_now_to_memory(win, output_mode="complete")
     assert sum(r["cnt"] for r in out.collect()) == 12
     (q,) = started
@@ -496,7 +501,7 @@ def test_parquet_run_keeps_session_partitions(
     """The persistent checkpoint fixes the state partition count for every
     later run, so the parquet runner takes the session value uncapped."""
     stream = _events_stream_of(spark, f"{watch_dir}/events")
-    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    win = S.windowed_event_counts(stream, window="1 hour")
     flat = win.select(F.col("win.start").alias("w_start"), "event_type", "cnt")
     S.available_now_to_parquet(
         flat, str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -511,7 +516,7 @@ def test_memory_run_leaves_no_temp_view(spark, watch_dir):
 
     before = temp_views()
     stream = _events_stream_of(spark, f"{watch_dir}/events")
-    win = S.windowed_event_counts(stream, ts_col="ts", window="1 hour")
+    win = S.windowed_event_counts(stream, window="1 hour")
     out = S.available_now_to_memory(win, output_mode="complete")
     assert temp_views() == before
     # the frame still reads the sink's rows after the view is gone
@@ -567,7 +572,7 @@ RUNNERS = {
     "versioned": lambda stream, d: S.stream_upsert_to_versioned(
         stream, str(d / "table"), str(d / "ckpt")),
     "stateful": lambda stream, d: S.run_update_to_parquet(
-        S.running_counts_stateful(stream, key_col="file_name", ts_col="ts"),
+        S.running_counts_stateful(_keyed(stream)),
         str(d / "out"), str(d / "ckpt")),
 }
 
