@@ -1,30 +1,30 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families (north-star mandate, beyond the reference's exact key dedup
-R9 at ``app.py:98-99``):
+The reference deduplicates by exact key only (R9, ``app.py:98-99``). This
+module adds the near-dup detectors of an LLM data pipeline:
 
-- **exact**: hash group-by / keep-first-by-key,
-- **MinHash + LSH**: word-shingle MinHash signatures, banded into buckets;
-  candidate pairs only form inside a bucket — the O(n²) pair space never
-  materializes. Signatures use the exploded word-hash form (one narrow
-  shuffle of (id, pos, word-hash) longs — see
-  :func:`minhash_signatures` for why it beats the row-local array form);
-  the other shuffle is the band-bucket self-join.
-- **SimHash**: 64-bit shingle-set fingerprint (two 32-bit words, three
-  independent 31-bit affine draws — width is what keeps precision usable
-  past ~10^5 docs); near-dups = small Hamming distance. Banded by 4
-  16-bit slices (pigeonhole: Hamming ≤ 3 ⇒ at least one equal band), so
-  again no full cross join — the Manku et al. WWW'07 layout.
-- **embedding cosine**: near-dup by vector similarity, blocked on a
-  partition key (label / LSH bucket) to bound the pair space.
+- **exact**: keep the first row per key (:func:`keep_first`).
+- **MinHash + LSH**: word-shingle MinHash signatures (the exploded
+  word-hash form, see :func:`minhash_signatures`) banded into buckets;
+  the score is the share of agreeing hashes.
+- **SimHash**: a 64-bit shingle-set fingerprint in two 32-bit words,
+  banded by four 16-bit slices; near-dups are pairs within a small
+  Hamming distance (the Manku et al. WWW'07 layout).
+- **embedding cosine**: hashed-hyperplane LSH buckets inside a label
+  block; the score is one dot product of normalized vectors.
+- **winnowing**: shared winnowed word k-gram fingerprints (MOSS).
+- **n-gram Jaccard**: exact char n-gram Jaccard inside a prefix block.
+- **SemDeDup**: the within-cluster keep step (:func:`semdedup_keep`).
 
-All hashing is md5-derived (functions.hashing) so results are reproducible
-in any engine — and deterministically checkable against the DuckDB oracle.
+Every pair detector forms its candidates in :func:`_bucket_pairs`, one
+self-join of rows on a bucket key that yields each pair once as
+``id_a < id_b``, so the O(n²) pair space never materializes. The banded
+detectors (MinHash, SimHash, embedding) share one pipeline,
+:func:`_banded_pairs`: one ``(band_idx, bucket)`` row per band, the
+bucket self-join, score, threshold, one row per pair.
 
-Scale: every family is (narrow per-row signature) → (self-join on a
-low-cardinality bucket key) → (verify inside bucket). At 100 TB the bucket
-join is the only shuffle; skewed buckets (stop-shingle buckets) are handled
-by AQE skew-join splitting, and the signature pass is one narrow map.
+All hashing is md5-derived (functions.hashing), so signatures and
+buckets are bit-identical in Spark and in the DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -170,57 +170,66 @@ def band_key(sig_cols: list[str], band: int, bands: int = MINHASH_BANDS) -> Colu
     return F.md5(F.concat_ws(":", *[F.col(c).cast("string") for c in parts]))
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
+def _bucket_pairs(
+    rows: DataFrame, id_col: str, keys: list[str], carry: list[str]
 ) -> DataFrame:
-    """Self-join within band buckets → distinct (id_a < id_b) candidate
-    pairs with the signature-agreement estimate of Jaccard similarity.
+    """The self-join of ``rows`` on their bucket ``keys``: one row per
+    pair of rows that share every key value, ``id_col`` renamed to
+    ``id_a``/``id_b`` and each ``carry`` column to ``<c>_a``/``<c>_b``,
+    kept once as ``id_a < id_b``. It is the only pair join of the dedup
+    detectors; the pair space is bounded by the bucket sizes.
 
-    The band explode multiplies rows by `bands` (small constant); the join
-    key (band_idx, band_hash) has ~n*bands/bucket_size cardinality, so the
-    shuffle is on a high-cardinality key — well-distributed at scale.
-    """
-    sig_names = [f"mh{j}" for j in range(num_hashes)]
-    banded = sigs.select(
-        "doc_id",
-        *sig_names,
-        F.posexplode(
-            F.array(*[band_key(sig_names, b, bands) for b in range(bands)])
-        ).alias("band_idx", "band_hash"),
-    ).filter(F.col(sig_names[0]).isNotNull())
+    The merge hint keeps both sides shuffle stages over one shared
+    signature subtree. Without it AQE broadcasts one side, which
+    re-runs the whole signature subtree as a broadcast (measured 2.5x
+    slower at sf0.1), and a signature table is far too large to
+    broadcast at 100 TB. Sort-merge join with AQE skew splitting spills
+    a pathological bucket instead of running out of memory."""
 
-    a = banded.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in sig_names],
-        "band_idx",
-        "band_hash",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in sig_names],
-        "band_idx",
-        "band_hash",
-    )
-    agree_sql = " + ".join(
-        f"(CASE WHEN {c}_a = {c}_b THEN 1 ELSE 0 END)" for c in sig_names
-    )
-    # merge hint: AQE otherwise broadcasts one side, which re-materializes
-    # the ENTIRE signature pipeline as a broadcast subtree (measured 2.5x
-    # slower at sf0.1) — and broadcasting a banded signature table is
-    # impossible at 100 TB anyway. With both sides as shuffle stages the
-    # signature computation is shared, and SMJ + AQE skew-split handles
-    # pathological buckets by spilling, not OOM.
-    return (
-        a.join(b.hint("merge"), on=["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.expr(agree_sql) / F.lit(float(len(sig_names))), 6)
-            .alias("est_jaccard"),
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *keys,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
         )
+
+    return (
+        side("a")
+        .join(side("b").hint("merge"), on=keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _banded_pairs(
+    rows: DataFrame,
+    id_col: str,
+    block: list[str],
+    bands: list[Column],
+    carry: list[str],
+    score: Column,
+    keep: Column,
+) -> DataFrame:
+    """The banded detectors' pipeline: each row posexplodes into one
+    ``(band_idx, bucket)`` row per band value in ``bands``; rows sharing
+    ``block`` and a bucket pair up (:func:`_bucket_pairs`); each pair gets
+    ``score`` (over the ``carry`` columns' ``_a``/``_b`` copies) and is
+    kept when ``keep`` holds. A pair that collides in several bands comes
+    out once.
+
+    The threshold runs before the pair-dedup exchange: chance bucket
+    collisions dominate the candidates, so filtering first shrinks that
+    shuffle to the near pairs. The result is the same, since the score
+    is a function of the pair."""
+    banded = rows.select(
+        id_col,
+        *block,
+        *carry,
+        F.posexplode(F.array(*bands)).alias("band_idx", "bucket"),
+    )
+    return (
+        _bucket_pairs(banded, id_col, [*block, "band_idx", "bucket"], carry)
+        .select("id_a", "id_b", score)
+        .filter(keep)
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -231,15 +240,30 @@ def minhash_dedup_pairs(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline over a ``(doc_id, text)`` frame:
-    signature → banded candidates → threshold on estimated Jaccard.
-    Defaults (8 hashes / 2 bands) fit the oracle fixture; production
-    recall at 100 TB wants num_hashes=128, bands=16 — the match
+    """MinHash-LSH near-dup pairs ``(id_a, id_b, est_jaccard)`` of a
+    ``(doc_id, text)`` frame: signatures, one md5 bucket per band of
+    ``num_hashes // bands`` signature values, and the estimated Jaccard
+    (share of agreeing hashes, rounded to 6 places) of every pair sharing
+    a bucket, kept at ``>= threshold``.
+
+    The defaults (8 hashes / 2 bands) fit the oracle fixture. Production
+    recall at 100 TB wants num_hashes=128, bands=16: the match
     probability is 1-(1-j^(n/b))^b, and 8/2 misses too many 0.5-Jaccard
     pairs for a real pipeline."""
-    sigs = minhash_signatures(df, num_hashes=num_hashes)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=num_hashes, bands=bands)
-    return pairs.filter(F.col("est_jaccard") >= threshold)
+    sig_names = [f"mh{j}" for j in range(num_hashes)]
+    agree_sql = " + ".join(
+        f"(CASE WHEN {c}_a = {c}_b THEN 1 ELSE 0 END)" for c in sig_names
+    )
+    est = F.round(F.expr(agree_sql) / F.lit(float(num_hashes)), 6)
+    return _banded_pairs(
+        minhash_signatures(df, num_hashes=num_hashes),
+        "doc_id",
+        [],
+        [band_key(sig_names, b, bands) for b in range(bands)],
+        sig_names,
+        est.alias("est_jaccard"),
+        F.col("est_jaccard") >= threshold,
+    )
 
 
 def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
@@ -276,7 +300,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4) -> DataFrame
     # preserves length so the predicates are identical, but a size(__w)
     # filter re-inlines the per-word md5 chain into the predicate and
     # pushdown then runs it serialized inside the scan stage (same failure
-    # as ngram_jaccard_pairs above).
+    # as in ngram_jaccard_pairs).
     coded = df.filter(F.size(T.tokens(F.col("text"))) >= k).select(
         F.col("doc_id"), whash.alias("__w")
     )
@@ -323,12 +347,8 @@ def winnow_dup_pairs(
         .filter(F.col("__df") <= max_df)
         .select("fp")
     )
-    capped = fps.join(rare, on="fp")
-    a = capped.select(F.col("doc_id").alias("id_a"), "fp")
-    b = capped.select(F.col("doc_id").alias("id_b"), "fp")
     return (
-        a.join(b.hint("merge"), on="fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(fps.join(rare, on="fp"), "doc_id", ["fp"], [])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
@@ -411,18 +431,10 @@ def ngram_jaccard_pairs(
         F.md5(F.substring("text", 1, block_chars)).alias("block"),
         grams.alias("grams"),
     )
-    a = base.select(
-        F.col("doc_id").alias("id_a"), "block", F.col("grams").alias("grams_a")
-    )
-    b = base.select(
-        F.col("doc_id").alias("id_b"), "block", F.col("grams").alias("grams_b")
-    )
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
-    # merge hint: see lsh_candidate_pairs — never broadcast the gram table
     return (
-        a.join(b.hint("merge"), on="block")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(base, "doc_id", ["block"], ["grams"])
         .select(
             "id_a",
             "id_b",
@@ -515,49 +527,26 @@ def simhash_dedup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     64 bits / 4 bands / hamming 3 is exactly the Manku et al. (WWW'07)
     web-scale configuration; above hamming 3 the blocking becomes
     approximate (documented, not silent)."""
-    base = simhash_signatures(df)
     sig_cols = [f"sh{w}" for w in range(SIMHASH_WORDS)]
+    hamming = F.expr(
+        " + ".join(f"bit_count({c}_a ^ {c}_b)" for c in sig_cols)
+    ).cast("int")
     # band i is the 16-bit half (i mod 2) of word i div 2
-    band_vals = [
+    bands = [
         F.expr(
             f"CAST({sig_cols[i // 2]} / {1 << (16 * (i % 2))} AS BIGINT) "
             f"% {1 << 16}"
         )
         for i in range(4)
     ]
-    banded = base.select(
+    return _banded_pairs(
+        simhash_signatures(df),
         "doc_id",
-        *sig_cols,
-        F.posexplode(F.array(*band_vals)).alias("band_idx", "band_val"),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in sig_cols],
-        "band_idx",
-        "band_val",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in sig_cols],
-        "band_idx",
-        "band_val",
-    )
-    hamming = F.expr(
-        " + ".join(f"bit_count({c}_a ^ {c}_b)" for c in sig_cols)
-    )
-    # merge hint: see lsh_candidate_pairs — lets the signature shuffle be
-    # shared between the two sides instead of re-computed for a broadcast
-    return (
-        a.join(b.hint("merge"), on=["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        # Hamming BEFORE the pair-dedup shuffle: bands collide by chance
-        # at ~1/2^16 per band, so the candidate set is dominated by far
-        # pairs — filtering first shrinks the dropDuplicates exchange
-        # from every chance collision down to the true near-dups. Result
-        # is identical (hamming is a function of the dedup key).
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+        [],
+        bands,
+        sig_cols,
+        hamming.alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -569,69 +558,41 @@ EMBED_LSH_PLANES = 6  # sign bits per band: 64 buckets per label block
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Near-dup pairs of a ``(vec_id, label, embedding)`` frame by cosine
-    similarity, banded-LSH-blocked so the pair space stays bounded as the
-    corpus grows.
+    similarity (``(id_a, id_b, cosine)``, cosine rounded to 6 places and
+    kept at ``>= threshold``), banded-LSH-blocked so the pair space stays
+    bounded as the corpus grows.
 
     The coarse ``label`` block alone does NOT scale: fixed-cardinality
     blocks grow linearly with the corpus, so within-block pairs grow
     QUADRATICALLY (measured 13s → 132s for x10 data at sf1 with 10 label
     blocks). Each block is therefore sub-divided by EMBED_LSH_BANDS
     hashed-hyperplane sign buckets of EMBED_LSH_PLANES bits
-    (hashed_hyperplane_bucket); candidates = pairs sharing a bucket in ANY
-    band. This is MinHash-LSH banding transplanted to the embedding space:
+    (hashed_hyperplane_bucket); candidates are the pairs sharing a label
+    and a bucket in ANY band, and one join covers all bands. This is MinHash-LSH banding transplanted to the embedding space:
     identical vectors collide in every band (recall 1.0 on exact copies),
     genuinely-near pairs collide with the standard banded probability
     1-(1-s^r)^b, and the bucket count 2^EMBED_LSH_PLANES is what keeps
     per-bucket pair work flat as n grows.
 
     Cost per candidate is ONE dot product: both sides are L2-normalized
-    once before the joins (the measured q_semdedup optimization; an
+    once before the join (the measured q_semdedup optimization; an
     oracle must mirror dot(normalize(a), normalize(b)) exactly)."""
     from ..functions import vectors as V
 
     base = df.select(
-        F.col("vec_id"),
-        F.col("label").alias("__blk"),
+        "vec_id",
+        "label",
         V.normalize(V.s_as_double_array("embedding")).alias("__v"),
     )
-    parts = []
-    for band in range(EMBED_LSH_BANDS):
-        banded = base.select(
-            "vec_id",
-            "__blk",
-            "__v",
-            hashed_hyperplane_bucket("__v", band).alias("__bkt"),
-        )
-        a = banded.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("__v").alias("va"),
-            "__blk",
-            "__bkt",
-        )
-        b = banded.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("__v").alias("vb"),
-            "__blk",
-            "__bkt",
-        )
-        # merge hint: see lsh_candidate_pairs — never broadcast the
-        # vector table
-        parts.append(
-            a.join(b.hint("merge"), on=["__blk", "__bkt"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                F.round(V.dot("va", "vb"), 6).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # a pair colliding in several bands appears once per band with the
-    # SAME deterministic rounded cosine — distinct collapses it
-    return out.distinct()
+    return _banded_pairs(
+        base,
+        "vec_id",
+        ["label"],
+        [hashed_hyperplane_bucket("__v", b) for b in range(EMBED_LSH_BANDS)],
+        ["__v"],
+        F.round(V.dot("__v_a", "__v_b"), 6).alias("cosine"),
+        F.col("cosine") >= threshold,
+    )
 
 
 def _sign_bits(vec: str, predicates: Iterable[str]) -> Column:
@@ -731,22 +692,13 @@ def semdedup_keep(assigned: DataFrame, threshold: float = 0.3) -> DataFrame:
         F.col("centroid_id").alias("__cl"),
         V.normalize(V.s_as_double_array("embedding")).alias("__v"),
     ).repartition(shuffle_n, "__cl")
-    # No checkpoint here (round 13): the three references to ``base``
-    # below (both pair-join sides + the anti-join's kept side) all sit
-    # on top of the SAME explicit repartition exchange, and Spark's
-    # exchange reuse collapses them to ONE shuffle at runtime — the
-    # n x k assignment is computed once, not three times (proven by
-    # timing at sf1: the whole keep step runs in ~2x the isolated
-    # assignment cost, where a triple recompute alone would exceed it).
-    # The old lazy localCheckpoint that used to guard the recompute was
-    # measured as pure overhead once the explicit repartition landed:
-    # fresh-process A/B at sf1 (20k vectors), order-reversed, read
-    # 33.0/30.2/42.8 s checkpointed vs 17.1/14.9/18.7-23.0 s without —
-    # the checkpoint serializes plan-build (AQE materializes every
-    # upstream stage before the first action), writes n vectors to
-    # block storage, and hides the assignment subtree's statistics from
-    # the planner. At sf0.1 the same A/B reads 2.9 -> 2.2 s. Results
-    # hash-identical at sf0.01/sf0.1/sf1.
+    # No checkpoint: the three references to ``base`` below (both
+    # pair-join sides and the anti-join's kept side) sit on one explicit
+    # repartition exchange, which exchange reuse runs once, so the n x k
+    # assignment is computed once. A checkpoint would add a job per call,
+    # write n vectors to block storage and hide the assignment subtree's
+    # statistics from the planner (measured at sf1, 20k vectors: about
+    # 2x slower with a lazy localCheckpoint, results hash-identical).
     right = base.select(
         F.col("__id").alias("__id_b"),
         F.col("__cl").alias("__cl_b"),

@@ -302,10 +302,13 @@ vcorpus AS (
 )
 """
 
-# mirrors operators.dedup.embedding_near_dup_pairs exactly: L2-normalize
-# once, bucket per band by hashed-hyperplane sign bits, one dot per
-# candidate pair, UNION (distinct) across bands — see that docstring for
-# why banding (not the label block alone) is what bounds pair growth
+# mirrors operators.dedup.embedding_near_dup_pairs: L2-normalize once,
+# bucket per band by hashed-hyperplane sign bits, one dot per candidate
+# pair. Spark explodes the bands into (band_idx, bucket) rows, joins them
+# once and keeps one row per pair; this oracle joins each band on its own
+# and UNIONs them, which yields the same set, since a pair's rounded
+# cosine is the same in every band it collides in. That docstring says
+# why banding, not the label block alone, bounds pair growth.
 _EMB_DEDUP_ORACLE = f"""
 WITH {_EMB_CORPUS_SQL.strip()},
 base AS (

@@ -262,3 +262,73 @@ def test_minhash_full_production_config_128_16(spark):
     }
     assert pairs[(1, 2)] == 1.0
     assert (1, 4) not in pairs and (2, 4) not in pairs
+
+
+def test_pair_self_join_is_built_only_in_bucket_pairs():
+    """Candidate pairs are built one way: among operators/*.py, the merge
+    hint and the ``id_a < id_b`` pair filter occur once each, inside
+    dedup._bucket_pairs. Read from the source, so no Spark session is
+    needed."""
+    import ast
+    import glob
+    import os
+
+    def col_name(node):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "col"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            return node.args[0].value
+        return None
+
+    def is_merge_hint(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "hint"
+            and any(
+                isinstance(a, ast.Constant) and a.value == "merge"
+                for a in node.args
+            )
+        )
+
+    def is_pair_filter(node):
+        # a SQL string counts too; docstrings are prose
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return "id_a < id_b" in node.value and id(node) not in docs
+        return (
+            isinstance(node, ast.Compare)
+            and len(node.ops) == 1
+            and isinstance(node.ops[0], ast.Lt)
+            and col_name(node.left) == "id_a"
+            and col_name(node.comparators[0]) == "id_b"
+        )
+
+    found = {"hint": [], "filter": []}
+    operators = os.path.dirname(D.__file__)
+    for path in sorted(glob.glob(os.path.join(operators, "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        module = os.path.basename(path)[: -len(".py")]
+        for top in tree.body:
+            owner = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if is_merge_hint(node):
+                    found["hint"].append((module, owner))
+                if is_pair_filter(node):
+                    found["filter"].append((module, owner))
+    assert found == {
+        "hint": [("dedup", "_bucket_pairs")],
+        "filter": [("dedup", "_bucket_pairs")],
+    }

@@ -149,3 +149,44 @@ def test_reference_corpus_hashes_and_paragraphs(spark):
     assert all(r["n_paragraphs"] > 0 for r in per_file)
     assert len({r["sha"] for r in per_file}) == 10  # all distinct content
     assert all(r["min_idx"] >= 0 for r in per_file)
+
+
+def test_binary_folder_ingest_on_a_built_folder(spark, tmp_path):
+    """The folder source end to end on a folder the test writes: the
+    INGEST_GLOB scan lists .txt/.docx and skips .md, the ingest drops the
+    ``~$`` lock file, every kept file gets its own sha256, and the .docx
+    (UTF-8 bytes, no Word structure) falls back to a UTF-8 decode."""
+    import hashlib
+
+    from create_proposals_using_vector_db_public_spark.sources import binaryfile as B
+
+    files = {
+        "a.txt": "first paragraph\n\n  second paragraph  \n",
+        "b.txt": "one line only",
+        "report.docx": "docx heading\nbody text 가나다",
+        "~$lock.docx": "owner lock",
+        "notes.md": "# not ingested",
+    }
+    for name, text in files.items():
+        (tmp_path / name).write_bytes(text.encode("utf-8"))
+
+    scanned = B.read_binary_folder(spark, str(tmp_path))
+    assert sorted(r["file_name"] for r in scanned.collect()) == [
+        "a.txt", "b.txt", "report.docx", "~$lock.docx",
+    ]
+
+    rows = B.ingest_folder(spark, str(tmp_path)).collect()
+    got = {(r["file_name"], r["paragraph_idx"]): r["paragraph"] for r in rows}
+    assert got == {
+        ("a.txt", 0): "first paragraph",
+        ("a.txt", 2): "second paragraph",
+        ("b.txt", 0): "one line only",
+        ("report.docx", 0): "docx heading",
+        ("report.docx", 1): "body text 가나다",
+    }
+    sha = {r["file_name"]: r["file_sha256"] for r in rows}
+    assert sha == {
+        name: hashlib.sha256(files[name].encode("utf-8")).hexdigest()
+        for name in ("a.txt", "b.txt", "report.docx")
+    }
+    assert len(set(sha.values())) == 3

@@ -202,8 +202,10 @@ def test_plan_signatures_unchanged(spark):
 def test_every_pinned_cross_join_is_allowlisted():
     """Every query whose pinned signature holds a BroadcastNestedLoopJoin
     or CartesianProduct node has a tools/plan_audit.py ALLOW entry for
-    that flag, with a reason. test_plan_signatures_unchanged pins the
-    signatures to the live plans, so this check needs no Spark session."""
+    that flag, with a reason, and every ALLOW flag names a pinned
+    signature that holds that node. test_plan_signatures_unchanged pins
+    the signatures to the live plans, so this check needs no Spark
+    session."""
     import json
     import sys
 
@@ -212,13 +214,16 @@ def test_every_pinned_cross_join_is_allowlisted():
     from plan_audit import ALLOW, FLAGS
 
     pinned = json.load(open(SIG_PATH))["signatures"]
-    missing = sorted(
+    held = {
         (name, flag)
         for name, nodes in pinned.items()
         for flag, rx in FLAGS.items()
-        if any(rx.search(n) for n in nodes) and not ALLOW.get(name, {}).get(flag)
-    )
-    assert not missing, f"cross joins without an ALLOW reason: {missing}"
+        if any(rx.search(n) for n in nodes)
+    }
+    allowed = {(name, flag) for name, flags in ALLOW.items() for flag in flags}
+    assert sorted(held - allowed) == [], "cross joins without an ALLOW entry"
+    assert sorted(allowed - held) == [], "ALLOW entries with no such node"
+    assert all(all(flags.values()) for flags in ALLOW.values())
 
 
 def test_every_committed_unpartitioned_window_is_allowlisted():

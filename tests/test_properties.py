@@ -883,3 +883,112 @@ def test_top_k_helpers_match_sorted_reference(spark, rows, k):
         for pos, r in enumerate([r for r in ranked if r[1] == g][:n], 1)
     }
     assert got == want
+
+
+# --- whole pair detectors vs Python references ---------------------------------
+
+# (label, nonzero 3-d int vector, add an exact copy): small integer vectors
+# make hyperplane-bucket collisions, near pairs and ties common
+_LABELED_VECS = st.lists(
+    st.tuples(
+        st.integers(0, 1),
+        st.lists(st.integers(-3, 3), min_size=3, max_size=3).filter(any),
+        st.booleans(),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+def _check_pairs(rows, score, want):
+    """Detector output rows against the reference ``{(id_a, id_b): score}``:
+    each pair once, ordered id_a < id_b, the same pair set, scores within
+    1e-6."""
+    got = [(r["id_a"], r["id_b"], r[score]) for r in rows]
+    assert len({(a, b) for a, b, _ in got}) == len(got), got
+    assert all(a < b for a, b, _ in got), got
+    assert {(a, b) for a, b, _ in got} == set(want), (got, want)
+    for a, b, s in got:
+        assert abs(s - want[(a, b)]) <= 1e-6, (a, b, s, want[(a, b)])
+
+
+@settings(max_examples=10, deadline=None)
+@given(_LABELED_VECS)
+def test_embedding_near_dup_pairs_match_python_reference(spark, rows):
+    """embedding_near_dup_pairs against the brute-force rule: a pair is a
+    candidate when it shares a label and the hashed-hyperplane bucket of
+    its normalized vectors in either band, and it is kept when the rounded
+    cosine is >= 0.9. Row 0 always has an exact copy, so every example has
+    a pair that collides in both bands, and it must come out once."""
+    tau = 0.9
+    data = []
+    for i, (label, vec, copy) in enumerate(rows):
+        v = [float(x) for x in vec]
+        data.append((i, label, v))
+        if copy or i == 0:
+            data.append((100 + i, label, v))
+    nv = {i: _nrm(v) for i, _, v in data}
+    buckets = {
+        i: [_py_hyperplane_bucket(v, b) for b in range(D.EMBED_LSH_BANDS)]
+        for i, v in nv.items()
+    }
+    want = {}
+    for i, li, _ in data:
+        for j, lj, _ in data:
+            if i < j and li == lj and any(
+                x == y for x, y in zip(buckets[i], buckets[j])
+            ):
+                cos = _r6(_dot(nv[i], nv[j]))
+                if cos >= tau:
+                    want[(i, j)] = cos
+    assert (0, 100) in want
+    df = spark.createDataFrame(
+        data, "vec_id: long, label: int, embedding: array<double>"
+    )
+    _check_pairs(
+        D.embedding_near_dup_pairs(df, threshold=tau).collect(), "cosine", want
+    )
+
+
+# documents over a 4-word vocabulary share most of their 3-word shingles
+_SMALL_CORPUS = st.lists(
+    st.tuples(
+        st.lists(st.sampled_from(["red", "green", "blue", "gray"]), max_size=8),
+        st.booleans(),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_SMALL_CORPUS)
+def test_minhash_dedup_pairs_match_python_reference(spark, docs):
+    """minhash_dedup_pairs against Python signatures (_py_minhash_sig): a
+    pair is a candidate when one of the bands of num_hashes // bands
+    signature values is equal, its score is the share of equal hashes,
+    and it is kept at >= 0.5. Docs with fewer than 3 words have no
+    signature and pair with nothing; exact copies agree in every band
+    and come out once."""
+    data = []
+    for i, (words, copy) in enumerate(docs):
+        data.append((i, " ".join(words)))
+        if copy:
+            data.append((100 + i, " ".join(words)))
+    sigs = {i: _py_minhash_sig(t) for i, t in data}
+    sigs = {i: s for i, s in sigs.items() if s is not None}
+    n, r = D.MINHASH_NUM_HASHES, D.MINHASH_NUM_HASHES // D.MINHASH_BANDS
+    want = {}
+    for i, si in sigs.items():
+        for j, sj in sigs.items():
+            if i < j and any(
+                si[b * r : (b + 1) * r] == sj[b * r : (b + 1) * r]
+                for b in range(D.MINHASH_BANDS)
+            ):
+                est = _r6(sum(x == y for x, y in zip(si, sj)) / n)
+                if est >= 0.5:
+                    want[(i, j)] = est
+    df = spark.createDataFrame(data, "doc_id: long, text: string")
+    _check_pairs(
+        D.minhash_dedup_pairs(df, threshold=0.5).collect(), "est_jaccard", want
+    )
