@@ -27,6 +27,8 @@ from ..functions import vectors as V
 BM25_K1 = 1.2
 BM25_B = 0.75
 RRF_K = 60
+# the most candidates mmr_select gathers into its one row
+MMR_MAX_CANDIDATES = 1000
 
 
 def bm25_weight() -> Column:
@@ -142,8 +144,10 @@ def mmr_select(cand: DataFrame, k: int, lam: float = 0.5) -> DataFrame:
     per-step greedy chain with one ``MAX(round(cosine, 6))`` per step,
     which is what the DuckDB oracle runs.
 
-    Scale: the single gathered row holds the top-k candidates (k ≤ tens),
-    bounded by construction — never corpus data."""
+    Scale: the single gathered row holds the top-k candidates (k ≤ tens).
+    The gather reads at most ``MMR_MAX_CANDIDATES`` + 1 rows and the query
+    fails (``raise_error``) when it holds more than ``MMR_MAX_CANDIDATES``,
+    so an unbounded candidate set cannot grow one task's memory."""
     if k < 1:
         raise ValueError(f"mmr_select needs k >= 1, got {k}")
     i, v, r = "doc_id", "emb", "rel"
@@ -194,8 +198,12 @@ def mmr_select(cand: DataFrame, k: int, lam: float = 0.5) -> DataFrame:
         else f"aggregate(sequence(2, {int(k)}), {pick1}, "
         f"(acc, st) -> concat(acc, {best}))"
     )
-    gathered = cand.select(i, v, r).agg(
-        F.collect_list(F.struct(i, v, r)).alias("cs")
+    cs = F.collect_list(F.struct(i, v, r))
+    over = f"mmr_select gathers at most {MMR_MAX_CANDIDATES} candidates"
+    gathered = cand.select(i, v, r).limit(MMR_MAX_CANDIDATES + 1).agg(
+        F.when(F.size(cs) > MMR_MAX_CANDIDATES, F.raise_error(F.lit(over)))
+        .otherwise(cs)
+        .alias("cs")
     )
     return gathered.select(
         F.posexplode(F.expr(sel)).alias("__pos", "__s")

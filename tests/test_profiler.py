@@ -67,3 +67,35 @@ def test_child_cpu_counts_reaped_subprocess_time():
         check=True,
     )
     assert child_cpu_s(os.getpid()) - before >= 0.2
+
+
+def test_peak_memory_is_charged_to_its_execution(tmp_path):
+    """Stages submitted under an execution's job group, and stream
+    micro-batch stages (their own group) submitted inside its time window,
+    count toward its peak memory; others do not."""
+    from tools.profiler import peak_memory, task_peak_memory
+
+    def stage(sid, group, t0_ms):
+        return {"Event": "SparkListenerStageSubmitted",
+                "Stage Info": {"Stage ID": sid, "Submission Time": t0_ms},
+                "Properties": {"spark.jobGroup.id": group} if group else {}}
+
+    def task(sid, peak):
+        return {"Event": "SparkListenerTaskEnd", "Stage ID": sid,
+                "Task Metrics": {"Peak Execution Memory": peak}}
+
+    mb = 10**6
+    events = [
+        stage(0, "", 500), task(0, 64 * mb),  # warm-up, before the window
+        stage(1, "pb2", 1500), task(1, 3 * mb), task(1, 1 * mb),
+        stage(2, "stream-run", 2500), task(2, 2 * mb),  # micro-batch
+        stage(3, "pb3", 2600), task(3, 8 * mb),  # another execution
+        stage(4, "stream-run", 9000), task(4, 5 * mb),  # after the window
+    ]
+    log = tmp_path / "app"
+    log.write_text("".join(json.dumps(e) + "\n" for e in events))
+    spans = [[0, None, "plans", "build", "q", 2, 1.0, 2.0],
+             [1, 0, "streaming", "ingest_stream", "run", 2, 1.1, 1.9],
+             [2, None, "exec", "count", "q", 2, 2.1, 3.0]]
+    assert peak_memory(spans, 2, task_peak_memory(str(log))) == {
+        "exec.peak_mem_mb": 6.0, "exec.peak_task_mem_mb": 3.0}

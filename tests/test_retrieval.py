@@ -152,6 +152,24 @@ def test_mmr_lambda_one_is_pure_relevance(spark):
     assert out == {1: 1, 2: 2, 3: 3}
 
 
+def test_mmr_gather_is_capped(spark):
+    """mmr_select gathers its candidates into one row: up to
+    MMR_MAX_CANDIDATES it selects, one more fails the query instead of
+    growing that row."""
+    def cand(n):
+        return spark.range(n).select(
+            F.col("id").alias("doc_id"),
+            F.array(F.lit(1.0), F.col("id").cast("double")).alias("emb"),
+            (F.col("id") / n).alias("rel"),
+        )
+
+    cap = R.MMR_MAX_CANDIDATES
+    (top,) = R.mmr_select(cand(cap), k=1).collect()
+    assert (top["doc_id"], top["mmr_rank"]) == (cap - 1, 1)
+    with pytest.raises(Exception, match=f"gathers at most {cap} candidates"):
+        R.mmr_select(cand(cap + 1), k=1).collect()
+
+
 @needs_fixture
 def test_mmr_actually_reorders_on_fixture(spark):
     """If greedy MMR never deviated from relevance order on the fixture,
