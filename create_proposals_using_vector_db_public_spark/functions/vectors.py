@@ -16,24 +16,29 @@ All helpers cast elements to double first: the source columns are
 rounding that diverges from any double-based oracle.
 
 Each expression is built one way: an ``s_*`` function returns its SQL
-fragment text, and the Column helper of the same name is
+fragment text, and a Column helper of the same name is
 ``F.expr(s_*(...))`` — one parse instead of a py4j round-trip per lambda
 node. Inputs are ``str``: a column name or another fragment, so fragments
-compose (``l2_dist(s_as_double_array("embedding"), s_vec_lit(q))``).
-The DuckDB oracles in ``plans.duck`` mirror these fragments operation for
-operation (same order, sequential reduction), so float results match.
+compose (``l2_dist(s_as_double_array("embedding"), "__q")``). A reported
+score is :func:`s_score` of a distance fragment, built by the scoring
+operators (``operators.knn.score_side``, ``operators.dedup``'s pairs).
+The DuckDB oracles in ``plans.duck`` mirror these fragments operation
+for operation (same order, sequential reduction), so float results
+match.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def s_as_double_array(a: str) -> str:
-    return f"transform({a}, x -> CAST(x AS DOUBLE))"
+    """``a`` as array<double>: one compiled element cast, and no work at
+    all on an array that already holds doubles."""
+    return f"CAST({a} AS ARRAY<DOUBLE>)"
 
 
 def s_dot(a: str, b: str) -> str:
@@ -59,6 +64,9 @@ def s_l2_dist(a: str, b: str) -> str:
 
 
 def s_cosine_sim(a: str, b: str) -> str:
+    """Cosine similarity; NULL when either norm is zero (the reference's
+    zero-vector rows for empty text, ``app_callapi.py:112``, would otherwise
+    divide by zero)."""
     denom = f"({s_l2_norm(a)} * {s_l2_norm(b)})"
     return f"CASE WHEN {denom} != 0D THEN ({s_dot(a, b)} / {denom}) END"
 
@@ -68,15 +76,18 @@ def s_normalize(a: str) -> str:
     return f"CASE WHEN {n} != 0D THEN transform({a}, x -> x / {n}) ELSE {a} END"
 
 
-def s_vec_lit(values: Sequence[float]) -> str:
-    """A literal vector as a SQL array<double> fragment. Elements go
-    through CAST('<repr>' AS DOUBLE): Python float repr round-trips
-    exactly, and the cast parses the same decimal string both engines
-    print — bit-identical to ``F.lit(float(v))``."""
+def s_score(dist: Callable[[str, str], str], a: str, b: str) -> str:
+    """``dist(a, b)`` as a score: rounded to 6 decimals (both engines
+    round the decimal value HALF_UP), with IEEE ``-0.0`` folded into
+    ``+0.0`` by ``+ 0D`` (the engines disagree on which zero ``round``
+    emits, and an exact value hash tells them apart). Vectors of
+    different lengths fail the query: ``zip_with`` would pad the shorter
+    one with NULL, and every score would silently be NULL. A NULL vector
+    still scores NULL."""
     return (
-        "array("
-        + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in values)
-        + ")"
+        f"CASE WHEN array_size({a}) != array_size({b}) "
+        f"THEN raise_error('vector dimensions differ') "
+        f"ELSE round({dist(a, b)}, 6) + 0D END"
     )
 
 
@@ -84,27 +95,12 @@ def as_double_array(a: str) -> Column:
     return F.expr(s_as_double_array(a))
 
 
-def dot(a: str, b: str) -> Column:
-    return F.expr(s_dot(a, b))
-
-
 def l2_norm(a: str) -> Column:
     return F.expr(s_l2_norm(a))
 
 
-def l2_dist_sq(a: str, b: str) -> Column:
-    return F.expr(s_l2_dist_sq(a, b))
-
-
 def l2_dist(a: str, b: str) -> Column:
     return F.expr(s_l2_dist(a, b))
-
-
-def cosine_sim(a: str, b: str) -> Column:
-    """Cosine similarity; NULL when either norm is zero (the reference's
-    zero-vector rows for empty text, ``app_callapi.py:112``, would otherwise
-    divide by zero)."""
-    return F.expr(s_cosine_sim(a, b))
 
 
 def normalize(a: str) -> Column:

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing as H
 from ..functions import text as T
+from ..functions import vectors as V
 from . import selection as S
 
 MINHASH_NUM_HASHES = 8
@@ -198,6 +199,14 @@ def _bucket_pairs(
         .join(side("b").hint("merge"), on=keys)
         .filter(F.col("id_a") < F.col("id_b"))
     )
+
+
+def _pair_cosine() -> Column:
+    """The vector pairs' one score: the cosine of a pair's L2-normalized
+    ``__v_a`` and ``__v_b`` (``_bucket_pairs`` copies of ``__v``) as one
+    dot product, built by ``V.s_score`` (6dp, ``-0.0`` folded, failing
+    on a dimension mismatch)."""
+    return F.expr(V.s_score(V.s_dot, "__v_a", "__v_b"))
 
 
 def _banded_pairs(
@@ -577,8 +586,6 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFram
     Cost per candidate is ONE dot product: both sides are L2-normalized
     once before the join (the measured q_semdedup optimization; an
     oracle must mirror dot(normalize(a), normalize(b)) exactly)."""
-    from ..functions import vectors as V
-
     base = df.select(
         "vec_id",
         "label",
@@ -590,7 +597,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFram
         ["label"],
         [hashed_hyperplane_bucket("__v", b) for b in range(EMBED_LSH_BANDS)],
         ["__v"],
-        F.round(V.dot("__v_a", "__v_b"), 6).alias("cosine"),
+        _pair_cosine().alias("cosine"),
         F.col("cosine") >= threshold,
     )
 
@@ -669,9 +676,10 @@ def semdedup_keep(assigned: DataFrame, threshold: float = 0.3) -> DataFrame:
     pair costs a single 1-pass dot product instead of three (measured 2x
     on the sf0.1 pair stage; an oracle must mirror this exact algebra).
 
-    Scale: the self-join is ON the cluster key, so pair work is
-    O(sum c_i^2) over cluster sizes — bounded by choosing n_clusters
-    proportional to corpus size (the paper's 11k clusters for 5B rows).
+    Scale: the pairs are :func:`_bucket_pairs` on the cluster key, so
+    pair work is O(sum c_i^2) over cluster sizes — bounded by choosing
+    n_clusters proportional to corpus size (the paper's 11k clusters for
+    5B rows).
     Vectors cross the shuffle once per side; ids are the only distinct-ed
     column. The sides are repartitioned on the cluster key with an
     EXPLICIT partition count (user repartitions are exempt from AQE
@@ -682,16 +690,14 @@ def semdedup_keep(assigned: DataFrame, threshold: float = 0.3) -> DataFrame:
     array dots that spread back to seconds once pinned at the session's
     shuffle parallelism.
     """
-    from ..functions import vectors as V
-
     shuffle_n = int(
         assigned.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     base = assigned.select(
-        F.col("vec_id").alias("__id"),
-        F.col("centroid_id").alias("__cl"),
+        "vec_id",
+        "centroid_id",
         V.normalize(V.s_as_double_array("embedding")).alias("__v"),
-    ).repartition(shuffle_n, "__cl")
+    ).repartition(shuffle_n, "centroid_id")
     # No checkpoint: the three references to ``base`` below (both
     # pair-join sides and the anti-join's kept side) sit on one explicit
     # repartition exchange, which exchange reuse runs once, so the n x k
@@ -699,24 +705,12 @@ def semdedup_keep(assigned: DataFrame, threshold: float = 0.3) -> DataFrame:
     # write n vectors to block storage and hide the assignment subtree's
     # statistics from the planner (measured at sf1, 20k vectors: about
     # 2x slower with a lazy localCheckpoint, results hash-identical).
-    right = base.select(
-        F.col("__id").alias("__id_b"),
-        F.col("__cl").alias("__cl_b"),
-        F.col("__v").alias("__vb"),
-    )
     dropped = (
-        base.join(
-            right,
-            (F.col("__cl") == F.col("__cl_b"))
-            & (F.col("__id") < F.col("__id_b")),
-        )
-        .filter(
-            F.round(V.dot("__v", "__vb"), 6) > threshold
-        )
-        .select(F.col("__id_b").alias("__id"))
+        _bucket_pairs(base, "vec_id", ["centroid_id"], ["__v"])
+        .filter(_pair_cosine() > threshold)
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
-    return (
-        base.join(dropped, "__id", "left_anti")
-        .select(F.col("__id").alias("vec_id"), F.col("__cl").alias("centroid_id"))
+    return base.join(dropped, "vec_id", "left_anti").select(
+        "vec_id", "centroid_id"
     )

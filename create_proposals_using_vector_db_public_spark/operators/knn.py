@@ -19,13 +19,17 @@ Scale notes (100 TB):
   side), and for sub-linear search :func:`ivf_search` / the LSH bucketing in
   ``operators.dedup`` — both prune the scanned fraction instead of scanning
   everything.
+
+Every score here is built by :func:`score_side`. A query vector enters
+a plan as a frame whose one row holds it, never as a literal fetched
+while the plan is built.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -90,9 +94,75 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     return df
 
 
+QUERY_ABSENT = "score_side: no query vector (query row absent or NULL)"
+
+
+def score_side(
+    corpus: DataFrame,
+    vec: str,
+    side: DataFrame,
+    side_vec: str,
+    on: list[str],
+    how: str,
+    scores: dict[str, Callable[[str, str], str]],
+) -> DataFrame:
+    """Score every ``corpus`` row against the broadcast ``side`` rows it
+    meets — one query, a query batch, the IVF centroids or a PQ codebook.
+
+    The corpus's ``vec`` becomes the array<double> ``__v``, the side's
+    ``side_vec`` becomes ``__q``; the side joins on the ``on`` keys
+    (``[]``: every side row). Each ``scores`` entry is an output column
+    and its distance fragment (``{"dist": V.s_l2_dist}``), built by
+    ``V.s_score`` over ``__v`` and ``__q``. ``how="left"`` is for the
+    query, which every corpus row must meet: an absent query row fails
+    the plan when it runs (``QUERY_ABSENT``) instead of ranking nothing.
+    ``how="inner"`` keeps the pairs that meet. Call
+    :func:`ensure_parallelism` on the corpus first, so its partition
+    probe sees the corpus plan alone."""
+    v = corpus.withColumn("__v", V.as_double_array(vec))
+    q = side.withColumn("__q", V.as_double_array(side_vec)).drop(side_vec)
+    joined = v.join(F.broadcast(q), on=on or None, how=how)
+    if how == "left":
+        joined = joined.withColumn(
+            "__q", F.coalesce("__q", F.raise_error(F.lit(QUERY_ABSENT)))
+        )
+    return joined.withColumns(
+        {c: F.expr(V.s_score(d, "__v", "__q")) for c, d in scores.items()}
+    )
+
+
+def score_query(
+    corpus: DataFrame,
+    query: DataFrame,
+    vec: str,
+    scores: dict[str, Callable[[str, str], str]],
+) -> DataFrame:
+    """:func:`score_side` for one query: every ``corpus`` row scored
+    against the one row of ``query``, both vectors in column ``vec``."""
+    return score_side(corpus, vec, query.select(vec), vec, [], "left", scores)
+
+
+def nearest_first(score: str, id_col: str) -> list[Column]:
+    """The order of every nearest-neighbour cut: ``score`` ascending with
+    NULL scores (a NULL vector) last, ties broken by ``id_col``, so the
+    cut is the same on every run and partitioning."""
+    return [F.col(score).asc_nulls_last(), F.col(id_col).asc()]
+
+
+_KNN_SCORES = {"dist": V.s_l2_dist, "cosine": V.s_cosine_sim}
+
+
+def _nearest(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The top-k of a :func:`score_side` output by ``dist``, without the
+    vectors."""
+    return S.top_k(scored, nearest_first("dist", id_col), k).drop(
+        "embedding", "__v", "__q"
+    )
+
+
 def knn(
     df: DataFrame,
-    query_vec: Sequence[float] | str,
+    query: DataFrame,
     k: int,
     id_col: str = "vec_id",
     ensure: bool = True,
@@ -100,11 +170,12 @@ def knn(
     """Exact top-k by L2 distance over ``embedding``, with cosine reported
     (not ranked by).
 
+    ``query`` is a frame whose one row holds the query vector in
+    ``embedding`` (a stored row: ``emb.filter(F.col("vec_id") == 0)``).
     Returns the input columns (minus the raw vector) plus ``dist``,
     ``cosine`` and 1-based ``rank``. Ties broken by ``id_col`` so results
     are deterministic for the oracle; ``dist`` and ``cosine`` are rounded
-    to 6 decimals. ``query_vec`` is a list of floats or a SQL fragment of
-    the query vector. The corpus goes through :func:`ensure_parallelism` —
+    to 6 decimals. The corpus goes through :func:`ensure_parallelism` —
     the per-row distance expressions are interpreted array work that must
     not serialize onto one scan split. Pass ``ensure=False`` when the
     input is known-small (a rerank candidate set) and the repartition
@@ -114,17 +185,7 @@ def knn(
     """
     if ensure:
         df = ensure_parallelism(df)
-    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
-    emb = V.s_as_double_array("embedding")
-    dist = F.round(V.l2_dist(emb, q), 6)
-    # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero) into
-    # +0.0 — the engines disagree on which zero round() emits, and an
-    # exact value-hash distinguishes their reprs
-    cos = F.round(V.cosine_sim(emb, q), 6) + 0.0
-    out = df.withColumn("dist", dist).withColumn("cosine", cos)
-    return S.top_k(
-        out, [F.col("dist").asc_nulls_last(), F.col(id_col).asc()], k
-    ).drop("embedding")
+    return _nearest(score_query(df, query, "embedding", _KNN_SCORES), id_col, k)
 
 
 def knn_join(queries_df: DataFrame, corpus_df: DataFrame, k: int) -> DataFrame:
@@ -137,22 +198,14 @@ def knn_join(queries_df: DataFrame, corpus_df: DataFrame, k: int) -> DataFrame:
     shuffle is on ``query_id`` for the per-query top-k, with k rows per
     (partition, query) surviving the map side.
     """
-    q = F.broadcast(
-        queries_df.select(
-            F.col("query_id"),
-            V.as_double_array("query_vec").alias("__qv"),
-        )
+    corpus = ensure_parallelism(corpus_df.select("vec_id", "embedding"))
+    scored = score_side(
+        corpus, "embedding", queries_df, "query_vec", [], "inner",
+        {"dist": V.s_l2_dist},
     )
-    c = ensure_parallelism(corpus_df.select("vec_id", "embedding")).select(
-        F.col("vec_id"), V.as_double_array("embedding").alias("__cv")
-    )
-    joined = c.crossJoin(q).withColumn(
-        "dist", F.round(V.l2_dist("__cv", "__qv"), 6)
-    )
-    order = [F.col("dist").asc_nulls_last(), F.col("vec_id").asc()]
-    return S.top_k_per(joined, ["query_id"], order, k).select(
-        "query_id", "vec_id", "dist", "rank"
-    )
+    return S.top_k_per(
+        scored, ["query_id"], nearest_first("dist", "vec_id"), k
+    ).select("query_id", "vec_id", "dist", "rank")
 
 
 def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
@@ -178,18 +231,10 @@ def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
     # guard's exchange doubles as the aggregate's distribution — one
     # shuffle of the corpus instead of round-robin + groupBy(id)
     corpus_df = ensure_parallelism(corpus_df, key="vec_id")
-    cents = F.broadcast(
-        centroids_df.select(
-            F.col("centroid_id"),
-            V.as_double_array("centroid_vec").alias("__cent"),
-        )
-    )
-    emb = V.as_double_array("embedding")
     rest = [c for c in corpus_df.columns if c != "vec_id"]
-    scored = (
-        corpus_df.withColumn("__v", emb)
-        .crossJoin(cents)
-        .withColumn("__cdist", F.round(V.l2_dist("__v", "__cent"), 6))
+    scored = score_side(
+        corpus_df, "embedding", centroids_df.select("centroid_id", "centroid_vec"),
+        "centroid_vec", [], "inner", {"__cdist": V.s_l2_dist},
     )
     best = scored.groupBy("vec_id").agg(
         F.min_by(
@@ -207,7 +252,7 @@ def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
 
 def lsh_search(
     corpus_df: DataFrame,
-    query_vec: Sequence[float] | str,
+    query: DataFrame,
     k: int,
     n_planes: int = 4,
 ) -> DataFrame:
@@ -219,20 +264,22 @@ def lsh_search(
 
     The other scale path next to :func:`ivf_search`: no codebook to train,
     2^n_planes buckets, and with the corpus partitioned by block the scan
-    prunes to ~1/2^n_planes of the data. Candidates from the bucket go
-    through :func:`knn`, so ranking semantics (L2 order, cosine reported,
-    1-based rank) are identical to the exact path.
+    prunes to ~1/2^n_planes of the data. Candidates from the bucket
+    are scored and ranked as :func:`knn` does (L2 order, cosine
+    reported, 1-based rank). ``query`` is a frame whose one row holds the
+    query vector in ``embedding``; each row compares its block with the
+    query's, and only the query's bucket is scored.
     """
     from . import dedup as D
 
-    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
-    blocked = corpus_df.withColumn(
-        "__blk",
-        D.random_hyperplane_block(V.s_as_double_array("embedding"), n_planes),
+    scored = score_query(
+        ensure_parallelism(corpus_df), query, "embedding", _KNN_SCORES
     )
-    qblk = D.random_hyperplane_block(q, n_planes)
-    cell = blocked.filter(F.col("__blk") == qblk).drop("__blk")
-    return knn(cell, q, k)
+    cell = scored.filter(
+        D.random_hyperplane_block("__v", n_planes)
+        == D.random_hyperplane_block("__q", n_planes)
+    )
+    return _nearest(cell, "vec_id", k)
 
 
 def ivf_search_join(
@@ -253,34 +300,24 @@ def ivf_search_join(
     plan: per-query work is ``n_probe / n_centroids`` of the data, and the
     only shuffle is the per-query top-k on ``query_id``.
     """
-    q = queries_df.select(
-        F.col("query_id"), V.as_double_array("query_vec").alias("__qv")
-    )
-    cents = centroids_df.select(
-        F.col("centroid_id"),
-        V.as_double_array("centroid_vec").alias("__cent"),
-    )
-    # probe set: n_probe nearest centroids per query (both sides tiny)
-    qc = q.crossJoin(F.broadcast(cents)).withColumn(
-        "__qd", V.l2_dist("__qv", "__cent")
-    )
+    # probe set: n_probe nearest centroids per query (both sides tiny),
+    # ordered by the unrounded distance, as the oracle's probe is
+    qc = score_side(
+        queries_df.select("query_id", "query_vec"), "query_vec",
+        centroids_df.select("centroid_id", "centroid_vec"), "centroid_vec",
+        [], "inner", {},
+    ).withColumn("__qd", V.l2_dist("__v", "__q"))
     probes = S.top_k_per(
-        qc,
-        ["query_id"],
-        [F.col("__qd").asc_nulls_last(), F.col("centroid_id").asc()],
-        n_probe,
-        "__pn",
-    ).select("query_id", "centroid_id", "__qv")
+        qc, ["query_id"], nearest_first("__qd", "centroid_id"), n_probe, "__pn"
+    ).select("query_id", "centroid_id", F.col("__v").alias("__qv"))
     assigned = ivf_assign(corpus_df.select("vec_id", "embedding"), centroids_df)
-    cell = assigned.join(F.broadcast(probes), on="centroid_id", how="inner")
-    scored = cell.withColumn(
-        "dist",
-        F.round(V.l2_dist(V.s_as_double_array("embedding"), "__qv"), 6),
+    scored = score_side(
+        assigned, "embedding", probes, "__qv", ["centroid_id"], "inner",
+        {"dist": V.s_l2_dist},
     )
-    order = [F.col("dist").asc_nulls_last(), F.col("vec_id").asc()]
-    return S.top_k_per(scored, ["query_id"], order, k).select(
-        "query_id", "vec_id", "dist", "rank"
-    )
+    return S.top_k_per(
+        scored, ["query_id"], nearest_first("dist", "vec_id"), k
+    ).select("query_id", "vec_id", "dist", "rank")
 
 
 def kmeans_update(assigned_df: DataFrame) -> DataFrame:
@@ -320,20 +357,23 @@ def kmeans_update(assigned_df: DataFrame) -> DataFrame:
     )
 
 
-def probe_cells(centroids_df: DataFrame, q: str, n_probe: int) -> DataFrame:
+def probe_cells(
+    centroids_df: DataFrame, query: DataFrame, n_probe: int
+) -> DataFrame:
     """The ``n_probe`` centroid ids nearest a single query vector — the
     probe-selection step every single-query IVF variant shares (plain IVF
     and IVFPQ use this helper; the batch form in :func:`ivf_search_join`
-    is the per-query-window generalization). ``q`` is the query vector's
-    SQL fragment. Deterministic tie-break on centroid id; NULL distances
-    (malformed centroid vectors) sort last."""
-    qd = V.l2_dist(V.s_as_double_array("centroid_vec"), q)
+    is the per-query-window generalization). ``query`` is a frame whose
+    one row holds the query vector in ``embedding``. The order is the
+    unrounded distance, as the oracles' probes order; ties break by
+    centroid id, and NULL distances (malformed centroid vectors) sort
+    last."""
+    qd = score_side(
+        centroids_df.select("centroid_id", "centroid_vec"), "centroid_vec",
+        query.select("embedding"), "embedding", [], "left", {},
+    ).select("centroid_id", V.l2_dist("__v", "__q").alias("__qd"))
     return (
-        centroids_df.select(
-            F.col("centroid_id"),
-            qd.alias("__qd"),
-        )
-        .orderBy(F.col("__qd").asc_nulls_last(), F.col("centroid_id").asc())
+        qd.orderBy(*nearest_first("__qd", "centroid_id"))
         .limit(n_probe)
         .select("centroid_id")
     )
@@ -342,23 +382,23 @@ def probe_cells(centroids_df: DataFrame, q: str, n_probe: int) -> DataFrame:
 def ivf_search(
     corpus_df: DataFrame,
     centroids_df: DataFrame,
-    query_vec: Sequence[float] | str,
+    query: DataFrame,
     k: int,
     n_probe: int = 1,
 ) -> DataFrame:
     """IVF-style ANN: probe only the ``n_probe`` centroids nearest the query,
-    brute-force search within their cells. At 100 TB with the corpus
+    brute-force search within their cells. ``query`` is a frame whose one
+    row holds the query vector in ``embedding``. At 100 TB with the corpus
     pre-assigned and partitioned by ``centroid_id`` (see :func:`ivf_assign`),
     partition pruning makes this scan ``n_probe / n_centroids`` of the data.
     """
-    q = query_vec if isinstance(query_vec, str) else V.s_vec_lit(query_vec)
     assigned = ivf_assign(corpus_df, centroids_df)
-    probe = probe_cells(centroids_df, q, n_probe)
+    probe = probe_cells(centroids_df, query, n_probe)
     cell = assigned.join(F.broadcast(probe), on="centroid_id", how="inner")
     # ensure=False: the probed cell holds the assignment's exchange, which
     # already spreads it, and ensure_parallelism's partition-count probe
     # would run every stage upstream of that exchange at build time.
-    return knn(cell, q, k, ensure=False)
+    return knn(cell, query, k, ensure=False)
 
 
 # --- product quantization ----------------------------------------------------
@@ -385,17 +425,21 @@ def pq_subvectors(
         # aggregate by id — hash(id) satisfies both, so the whole encode+
         # score pipeline reuses this one exchange (guide §2.4)
         df = ensure_parallelism(df, key="vec_id")
-    v = V.as_double_array("embedding")
-    subs = F.transform(
-        F.sequence(F.lit(0), F.lit(n_sub - 1)),
-        lambda s: F.struct(
-            s.cast("int").alias("s"),
-            F.slice(F.col("__v"), s * sub_dim + 1, sub_dim).alias("sv"),
-        ),
+    return df.withColumn("__v", V.as_double_array("embedding")).select(
+        F.col("vec_id"), _subspaces(n_sub, sub_dim)
     )
-    return (
-        df.withColumn("__v", v)
-        .select(F.col("vec_id"), F.inline(subs))
+
+
+def _subspaces(n_sub: int, sub_dim: int) -> Column:
+    """``__v`` as ``n_sub`` ``(s, sv)`` rows of ``sub_dim`` elements."""
+    return F.inline(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_sub - 1)),
+            lambda s: F.struct(
+                s.cast("int").alias("s"),
+                F.slice(F.col("__v"), s * sub_dim + 1, sub_dim).alias("sv"),
+            ),
+        )
     )
 
 
@@ -409,11 +453,9 @@ def pq_assign(
     the subspace key, and argmin via ``min_by`` with the same rounded-L2 +
     centroid-id tie-break discipline as :func:`ivf_assign` — one partial+
     final aggregate, only one row per (vector, subspace) crosses the wire."""
-    cents = F.broadcast(
-        codebook_df.select("s", "centroid_id", F.col("cv").alias("__cent"))
-    )
-    scored = subs_df.join(cents, "s").withColumn(
-        "__cdist", F.round(V.l2_dist("sv", "__cent"), 6)
+    scored = score_side(
+        subs_df, "sv", codebook_df.select("s", "centroid_id", "cv"), "cv",
+        ["s"], "inner", {"__cdist": V.s_l2_dist},
     )
     carried = [F.col("sv").alias("sv")] if keep_sv else []
     best = scored.groupBy("vec_id", "s").agg(
@@ -477,7 +519,7 @@ def pq_train(
 def pq_adc_search(
     corpus_df: DataFrame,
     codebook_df: DataFrame,
-    query_vec: Sequence[float],
+    query: DataFrame,
     n_sub: int,
     sub_dim: int,
     k: int,
@@ -488,7 +530,9 @@ def pq_adc_search(
     distance lookup table (n_sub × k rows — broadcast), and score each
     vector as sqrt(Σ_s table[s][code_s]). Distance-table entries are
     rounded then summed as DECIMAL so the Σ is order-independent; top-k
-    by (adist, id) is a TakeOrderedAndProject heap merge.
+    by (adist, id) is a TakeOrderedAndProject heap merge. ``query`` is a
+    frame whose one row holds the query vector in ``embedding``; its
+    ``n_sub`` slices meet the codewords of their subspace.
 
     This is the memory story FAISS IVFPQ tells at 100 TB: after encoding,
     search touches n_sub bytes per vector (codes) + a table the size of
@@ -497,37 +541,28 @@ def pq_adc_search(
     the code columns once and scans only those thereafter."""
     subs = pq_subvectors(corpus_df, n_sub, sub_dim, ensure)
     codes = pq_assign(subs, codebook_df)
-
-    q_s = V.s_vec_lit(list(query_vec))
+    q_subs = query.select(V.as_double_array("embedding").alias("__v")).select(
+        _subspaces(n_sub, sub_dim)
+    )
     dt = F.broadcast(
-        codebook_df.select(
-            "s", "centroid_id",
-            F.round(
-                V.l2_dist_sq(
-                    "cv",
-                    f"slice({q_s}, s * {int(sub_dim)} + 1, {int(sub_dim)})",
-                ),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("d2"),
-        )
+        score_side(
+            codebook_df.select("s", "centroid_id", "cv"), "cv", q_subs, "sv",
+            ["s"], "left", {"d2": V.s_l2_dist_sq},
+        ).select("s", "centroid_id", F.col("d2").cast("decimal(18,6)"))
     )
     adist = (
         codes.join(dt, (codes.s == dt.s) & (codes.code == dt.centroid_id))
         .groupBy("vec_id")
         .agg(F.round(F.sqrt(F.sum("d2").cast("double")), 6).alias("adist"))
     )
-    return S.top_k(
-        adist, [F.col("adist").asc_nulls_last(), F.col("vec_id").asc()], k
-    )
+    return S.top_k(adist, nearest_first("adist", "vec_id"), k)
 
 
 def ivfpq_search(
     corpus_df: DataFrame,
     centroids_df: DataFrame,
     codebook_df: DataFrame,
-    query_vec: Sequence[float],
+    query: DataFrame,
     n_sub: int,
     sub_dim: int,
     k: int,
@@ -541,9 +576,8 @@ def ivfpq_search(
     exactly FAISS's IVFPQ layout. Simplification vs FAISS: codes here
     quantize raw vectors, not cell residuals; residual encoding is the
     same pipeline with (vector − centroid) fed to pq_train/pq_assign."""
-    q = V.s_vec_lit(list(query_vec))
     assigned = ivf_assign(corpus_df, centroids_df)
-    probe = probe_cells(centroids_df, q, n_probe)
+    probe = probe_cells(centroids_df, query, n_probe)
     cell = assigned.join(F.broadcast(probe), "centroid_id").select(
         "vec_id", "embedding"
     )
@@ -551,5 +585,5 @@ def ivfpq_search(
     # already spreads it, and ensure_parallelism's partition-count probe
     # would run every stage upstream of that exchange at build time.
     return pq_adc_search(
-        cell, codebook_df, query_vec, n_sub, sub_dim, k, ensure=False
+        cell, codebook_df, query, n_sub, sub_dim, k, ensure=False
     )

@@ -129,8 +129,9 @@ def mmr_select(cand: DataFrame, k: int, lam: float = 0.5) -> DataFrame:
     whole greedy loop fits in ONE expression: gather the candidates into
     a single array row, then fold ``sequence(2, k)`` with nested
     higher-order functions — each step scores the remaining candidates
-    against the selected prefix (max of 6dp-rounded cosines, NULL sims
-    skipped exactly like the aggregate MAX they replace) and appends the
+    against the selected prefix (max of the cosines as ``V.s_score``
+    builds every score — 6dp, ``-0.0`` folded — with NULL sims skipped
+    exactly like the aggregate MAX they replace) and appends the
     argmax (ties on the rounded score break by id; a candidate whose
     score is NULL — zero-norm vector against every selected item, or a
     NULL relevance — is skipped). The selection array's position IS the
@@ -158,7 +159,7 @@ def mmr_select(cand: DataFrame, k: int, lam: float = 0.5) -> DataFrame:
         cosine, skipping NULLs — MAX's NULL semantics (NULL only when
         every sim is NULL). NULL rel or NULL maxsim make the score NULL,
         so the candidate is skipped."""
-        sim = f"round({V.s_cosine_sim(f'{ref}.{v}', f's.{v}')}, 6)"
+        sim = V.s_score(V.s_cosine_sim, f"{ref}.{v}", f"s.{v}")
         ms = (
             f"aggregate(acc, CAST(NULL AS DOUBLE), (m, s) -> "
             f"CASE WHEN {sim} IS NULL THEN m "

@@ -25,7 +25,6 @@ from .dedup_queries import _CORPUS_SQL, _corpus
 from .plant import PLANT_PII_OFFSET, assert_plantable
 from .duck import d_cosine, d_l2, dd, d_words
 from .registry import query
-from .vector_queries import _query_vec
 
 # --- PII scrub ---------------------------------------------------------------
 
@@ -400,7 +399,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.select("vec_id", "label", "embedding")
     out = K.lsh_search(
-        corpus, _query_vec(spark, sf_dir, 11), k=10, n_planes=4
+        corpus, emb.filter(F.col("vec_id") == 11), k=10, n_planes=4
     )
     return out.select("vec_id", "label", "dist", "cosine", "rank")
 
@@ -580,7 +579,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign0 = K.ivf_assign(corpus.select("vec_id", "embedding"), seeds)
     cents1 = K.kmeans_update(assign0)
     out = K.ivf_search(
-        corpus, cents1, _query_vec(spark, sf_dir, 11), k=10, n_probe=2
+        corpus, cents1, emb.filter(F.col("vec_id") == 11), k=10, n_probe=2
     )
     return out.select("vec_id", "label", "dist", "cosine", "rank")
 

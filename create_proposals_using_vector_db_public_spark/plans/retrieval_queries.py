@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..operators import knn as K
 from ..operators import retrieval as R
 from ..operators import selection as S
 from ..sources import load_table
@@ -143,14 +144,11 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         scores, [F.col("s").desc(), F.col("doc_id").asc()], _RRF_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
     emb = T.stub_embeddings_df(d)
-    qv = F.broadcast(
-        emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
-    )
-    dists = emb.crossJoin(qv).select(
-        "doc_id", F.round(V.l2_dist("emb", "qv"), 6).alias("dist")
-    )
+    dists = K.score_query(
+        emb, emb.filter(F.col("doc_id") == 0), "emb", {"dist": V.s_l2_dist}
+    ).select("doc_id", "dist")
     vec = S.top_k(
-        dists, [F.col("dist").asc(), F.col("doc_id").asc()], _RRF_TOPK, "rank_vec"
+        dists, K.nearest_first("dist", "doc_id"), _RRF_TOPK, "rank_vec"
     ).select("doc_id", "rank_vec")
     return R.rrf_fuse(lex, vec).limit(10)
 
@@ -228,17 +226,12 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing collected to the driver."""
     d = load_table(spark, sf_dir, "documents")
     emb = T.stub_embeddings_df(d)
-    qv = F.broadcast(
-        emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
-    )
     cand = (
-        emb.crossJoin(qv)
-        .select(
-            "doc_id",
-            "emb",
-            (F.round(V.cosine_sim("emb", "qv"), 6) + 0.0)
-            .alias("rel"),
+        K.score_query(
+            emb, emb.filter(F.col("doc_id") == 0), "emb",
+            {"rel": V.s_cosine_sim},
         )
+        .select("doc_id", "emb", "rel")
         .orderBy(F.col("rel").desc_nulls_last(), F.col("doc_id").asc())
         .limit(_MMR_CAND)
     )
@@ -587,16 +580,12 @@ def q_e2e_rag(spark: SparkSession, sf_dir: str) -> DataFrame:
         scores, [F.col("s").desc(), F.col("doc_id").asc()], _E2E_TOPK, "rank_lex"
     ).select("doc_id", "rank_lex")
     emb = T.stub_embeddings_df(kept)
-    qv = F.broadcast(
-        T.stub_embeddings_df(d.filter(F.col("doc_id") == 0)).select(
-            F.col("emb").alias("qv")
-        )
-    )
-    dists = emb.crossJoin(qv).select(
-        "doc_id", F.round(V.l2_dist("emb", "qv"), 6).alias("dist")
+    query = T.stub_embeddings_df(d.filter(F.col("doc_id") == 0))
+    dists = K.score_query(emb, query, "emb", {"dist": V.s_l2_dist}).select(
+        "doc_id", "dist"
     )
     vec = S.top_k(
-        dists, [F.col("dist").asc(), F.col("doc_id").asc()], _E2E_TOPK, "rank_vec"
+        dists, K.nearest_first("dist", "doc_id"), _E2E_TOPK, "rank_vec"
     ).select("doc_id", "rank_vec")
     top = R.rrf_fuse(lex, vec).limit(_E2E_FUSED).select("doc_id", "rrf")
     cand = top.join(emb, "doc_id").select(

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from ..functions import text as T
 from ..functions import vectors as V
 from ..operators import dedup as D
+from ..operators import knn as K
 from ..operators import selection as S
 from ..sources import load_table
 from .duck import d_words
@@ -95,12 +96,10 @@ def q_stub_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency."""
     d = load_table(spark, sf_dir, "documents")
     emb = T.stub_embeddings_df(d)
-    qv = emb.filter(F.col("doc_id") == 0).select(F.col("emb").alias("qv"))
-    scored = emb.crossJoin(F.broadcast(qv)).select(
-        "doc_id",
-        F.round(V.l2_dist("emb", "qv"), 6).alias("dist"),
-    )
-    return S.top_k(scored, [F.col("dist").asc(), F.col("doc_id").asc()], 10)
+    scored = K.score_query(
+        emb, emb.filter(F.col("doc_id") == 0), "emb", {"dist": V.s_l2_dist}
+    ).select("doc_id", "dist")
+    return S.top_k(scored, K.nearest_first("dist", "doc_id"), 10)
 
 
 # --- keyword ops (R15 fallback, R16) ----------------------------------------

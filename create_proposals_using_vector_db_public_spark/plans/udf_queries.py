@@ -105,17 +105,13 @@ def q_udf_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas importability probe before heterogeneous deployment.
     model_possible = ml.model_path_possible()
     dim = ml.EMBED_DIM if model_possible else 64
-    # embed ONLY the query row to extract the vector — embedding the whole
-    # table here would run the 200-doc UDF twice (once for this head(),
-    # once inside knn)
-    qrow = ml.with_embeddings(
+    # the query embeds ONLY its own row: it is a second, one-row UDF
+    # input that knn broadcasts, and an absent doc_id=0 fails the query
+    query = ml.with_embeddings(
         d.filter(F.col("doc_id") == 0).select("doc_id", "text"), dim=dim
-    ).select("embedding").head()
-    if qrow is None:
-        raise ValueError("q_udf_embed_knn: query document doc_id=0 absent")
-    qv = [float(x) for x in qrow[0]]
+    )
     emb = ml.with_embeddings(d.select("doc_id", "text"), dim=dim)
-    res = K.knn(emb.drop("text"), qv, k=5, id_col="doc_id")
+    res = K.knn(emb.drop("text"), query, k=5, id_col="doc_id")
     w = Window.orderBy("rank")  # 5 rows — single partition is fine
     return (
         res.withColumn("_prev", F.lag("dist").over(w))

@@ -5,6 +5,10 @@ Reference parity: R17 (exact brute-force L2 top-k, ``app.py:178-180``),
 R18 (cosine reported but L2 order kept, ``app.py:184``), R19 (1-based rank,
 ``app.py:183,189``). The ANN variants are the mandated scale path beyond the
 reference's flat index.
+
+A query vector is a stored row, ``emb.filter(F.col("vec_id") == i)``: a
+plan input the scoring operator (``operators.knn.score_side``) broadcasts,
+so building a query runs no Spark job.
 """
 
 from __future__ import annotations
@@ -19,18 +23,6 @@ from ..operators import selection as S
 from ..sources import load_table
 from .duck import d_cosine, d_dot, d_l2, d_l2sq, d_norm, dd
 from .registry import query
-
-
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
-    """Fetch one stored vector to use as the search query (a query parameter
-    — one driver-side row, independent of corpus scale)."""
-    row = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == vec_id)
-        .select("embedding")
-        .head()
-    )
-    return [float(x) for x in row[0]]
 
 
 # The oracle mirrors knn(): dist/cosine computed in double with sequential
@@ -55,7 +47,7 @@ LIMIT 5
 @query("q_knn", oracle=_KNN_ORACLE)
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn(emb, _query_vec(spark, sf_dir, 0), k=5)
+    return K.knn(emb, emb.filter(F.col("vec_id") == 0), k=5)
 
 
 _KNN_COS_ORACLE = f"""
@@ -81,7 +73,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     unnormalized vectors, so cosine order differs from L2 order, and the
     engine must keep L2 order (reference ``app.py:183-184``)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn(emb, _query_vec(spark, sf_dir, 7), k=10)
+    return K.knn(emb, emb.filter(F.col("vec_id") == 7), k=10)
 
 
 _RANK_L2_ORACLE = f"""
@@ -105,11 +97,9 @@ def q_rank_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank() (gap semantics, ties share a rank) over L2 distance — R19
     generalized to a real window function."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 3))
-    scored = emb.select(
-        "vec_id",
-        F.round(V.l2_dist(V.s_as_double_array("embedding"), qv), 6).alias("dist"),
-    )
+    scored = K.score_query(
+        emb, emb.filter(F.col("vec_id") == 3), "embedding", {"dist": V.s_l2_dist}
+    ).select("vec_id", "dist")
     # TakeOrdered top-20 FIRST (per-partition heaps, no global sort), then
     # rank within the 20 survivors — identical to ranking globally because
     # rank() only depends on rows with smaller dist, all of which survive.
@@ -138,13 +128,9 @@ def q_vec_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     CodegenFallback expressions, so each vector is evaluated interpreted
     inside the compiled stage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 0))
-    e = V.s_as_double_array("embedding")
-    return emb.select(
-        "vec_id",
-        F.round(V.l2_norm(e), 6).alias("l2_norm"),
-        (F.round(V.dot(e, qv), 6) + 0.0).alias("dot_q"),
-    )
+    return K.score_query(
+        emb, emb.filter(F.col("vec_id") == 0), "embedding", {"dot_q": V.s_dot}
+    ).select("vec_id", F.round(V.l2_norm("__v"), 6).alias("l2_norm"), "dot_q")
 
 
 _KNN_JOIN_ORACLE = f"""
@@ -241,13 +227,10 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject shape: per-partition heaps on descending cosine,
     no global sort, no vector shuffle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 42))
-    scored = emb.select(
-        "vec_id",
-        "label",
-        (F.round(V.cosine_sim(V.s_as_double_array("embedding"), qv), 6) + 0.0)
-        .alias("cosine"),
-    )
+    scored = K.score_query(
+        emb, emb.filter(F.col("vec_id") == 42), "embedding",
+        {"cosine": V.s_cosine_sim},
+    ).select("vec_id", "label", "cosine")
     return S.top_k(scored, [F.col("cosine").desc(), F.col("vec_id").asc()], 10)
 
 
@@ -363,7 +346,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.select("vec_id", "label", "embedding")
     out = K.ivf_search(
-        corpus, cents, _query_vec(spark, sf_dir, 11), k=10, n_probe=2
+        corpus, cents, emb.filter(F.col("vec_id") == 11), k=10, n_probe=2
     )
     return out.select("vec_id", "label", "dist", "cosine", "rank")
 
@@ -453,7 +436,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = K.pq_adc_search(
         emb.select("vec_id", "embedding"), codebook,
-        _query_vec(spark, sf_dir, 11), _PQ_NSUB, _PQ_SUBDIM, k=10,
+        emb.filter(F.col("vec_id") == 11), _PQ_NSUB, _PQ_SUBDIM, k=10,
     )
     return hits.join(
         F.broadcast(emb.select("vec_id", "label")), "vec_id"
@@ -491,7 +474,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall itself are hash-exact, so a codebook regression breaks the
     oracle, not just a vibe."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir, 11)
+    qv = emb.filter(F.col("vec_id") == 11)
     codebook = K.pq_train(
         emb.select("vec_id", "embedding"), _PQ_NSUB, _PQ_SUBDIM, _PQ_NCENT
     )
@@ -557,7 +540,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors); only the candidate set shrinks, so the oracle derives the
     cell from the coarse assignment and filters the same ADC scores."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir, 11)
+    qv = emb.filter(F.col("vec_id") == 11)
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid_vec"),
@@ -694,7 +677,7 @@ def q_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select(F.col("vec_id").alias("sq_vec_id"))
     )
-    exact_top = K.knn(emb, _query_vec(spark, sf_dir, 11), k=10).select(
+    exact_top = K.knn(emb, emb.filter(F.col("vec_id") == 11), k=10).select(
         "vec_id"
     )
     hit = exact_top.join(
@@ -789,7 +772,7 @@ def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return K.knn(
         emb.join(F.broadcast(cand), "vec_id"),
-        _query_vec(spark, sf_dir, _RERANK_QID),
+        emb.filter(F.col("vec_id") == _RERANK_QID),
         k=10,
         ensure=False,
     )

@@ -275,10 +275,6 @@ def test_pair_self_join_is_built_only_in_bucket_pairs():
     import os
     import re
 
-    # semdedup_keep still self-joins each cluster on ``__id < __id_b``;
-    # moving it onto _bucket_pairs is its own change (the vector-scoring
-    # refactor), which then empties this set
-    exempt = {("dedup", "semdedup_keep")}
     pair_sql = re.compile(r"\b(\w*id\w*?)(_a)?\s*<\s*\1_b\b")
 
     def is_pair(left, right):
@@ -344,4 +340,4 @@ def test_pair_self_join_is_built_only_in_bucket_pairs():
                 if is_pair_filter(node):
                     found["filter"].append((module, owner))
     assert found["hint"] == [("dedup", "_bucket_pairs")]
-    assert sorted(found["filter"]) == sorted({("dedup", "_bucket_pairs")} | exempt)
+    assert found["filter"] == [("dedup", "_bucket_pairs")]

@@ -1,7 +1,14 @@
 """kNN semantics — including the reference's trap cases (SURVEY §7):
 L2 order != cosine order, k clamp, 1-based rank."""
 
+import pytest
+
 from create_proposals_using_vector_db_public_spark.operators import knn as K
+
+
+def _query(spark, vec):
+    """A query frame: one row holding ``vec`` in ``embedding``."""
+    return spark.createDataFrame([(vec,)], "embedding: array<double>")
 
 
 def _corpus(spark):
@@ -17,7 +24,7 @@ def _corpus(spark):
 
 
 def test_knn_ranks_by_l2_not_cosine(spark):
-    rows = K.knn(_corpus(spark), [1.0, 0.0], k=3).collect()
+    rows = K.knn(_corpus(spark), _query(spark, [1.0, 0.0]), k=3).collect()
     # reference semantics (app.py:183-184): order by L2 ascending; cosine is
     # reported but NEVER reorders. Cosine-ranked order would be [1,2,3].
     assert [r["vec_id"] for r in rows] == [1, 3, 2]
@@ -26,8 +33,38 @@ def test_knn_ranks_by_l2_not_cosine(spark):
 
 
 def test_knn_clamps_k(spark):
-    rows = K.knn(_corpus(spark), [1.0, 0.0], k=99).collect()
+    rows = K.knn(_corpus(spark), _query(spark, [1.0, 0.0]), k=99).collect()
     assert len(rows) == 3  # k = min(top_k, n), app.py:179
+
+
+def test_knn_fails_on_a_query_of_another_dimension(spark):
+    """A 3-dim query against 2-dim vectors fails the query: without the
+    dimension check zip_with pads with NULL, every distance is NULL, and
+    knn returns k arbitrary rows ranked by id."""
+    out = K.knn(_corpus(spark), _query(spark, [1.0, 0.0, 0.0]), k=2)
+    with pytest.raises(Exception, match="vector dimensions differ"):
+        out.collect()
+
+
+def test_absent_query_row_fails_on_collect(spark):
+    """A query whose query row is absent builds (no job runs while the
+    plan is built) and fails when it runs, for the single-query kNN and
+    the IVF and PQ paths alike."""
+    corpus = _corpus(spark)
+    absent = corpus.filter("vec_id = 99")
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "centroid_id: long, centroid_vec: array<double>"
+    )
+    codebook = spark.createDataFrame(
+        [(0, 0, [0.0]), (1, 0, [0.0])], "s: int, centroid_id: long, cv: array<double>"
+    )
+    for out in (
+        K.knn(corpus, absent, k=2),
+        K.ivf_search(corpus, cents, absent, k=2),
+        K.pq_adc_search(corpus, codebook, absent, 2, 1, k=2),
+    ):
+        with pytest.raises(Exception, match="query row absent"):
+            out.collect()
 
 
 def test_knn_join_per_query_topk(spark):
@@ -51,7 +88,8 @@ def test_ivf_search_prunes_to_probed_cells(spark):
         "centroid_id: long, centroid_vec: array<double>",
     )
     # probe only the cell nearest the query (around 9.0)
-    rows = K.ivf_search(corpus, cents, [9.0, 0.0], k=3, n_probe=1).collect()
+    query = _query(spark, [9.0, 0.0])
+    rows = K.ivf_search(corpus, cents, query, k=3, n_probe=1).collect()
     assert [r["vec_id"] for r in rows] == [9, 8, 7]
     # vectors in the unprobed cell are never candidates
     assert all(r["vec_id"] >= 5 for r in rows)
@@ -146,3 +184,79 @@ def test_ensure_parallelism_guard_decisions(spark):
     for df in (wide, spark.range(0, 100000, 1, 2).toDF("id")):
         plan_n = int(df._jdf.queryExecution().toRdd().getNumPartitions())
         assert plan_n == df.rdd.getNumPartitions()
+
+
+def test_distances_are_scored_only_by_the_scoring_operators():
+    """Every score is built by ``functions.vectors.s_score`` (6dp round,
+    ``-0.0`` fold, dimension check), and only inside the scoring sites:
+    ``knn.score_side`` (the corpus against a broadcast side),
+    ``dedup._pair_cosine`` (pairs that share a bucket) and
+    ``retrieval.mmr_select`` (candidate pairs inside its one-row fold,
+    which joins nothing). So among ``operators/`` and ``plans/``, a
+    distance fragment (``l2_dist``, ``l2_dist_sq``, ``cosine_sim``,
+    ``dot`` or an ``s_*`` form) is never rounded by hand (``round`` call
+    or a ``round(`` SQL string around it), and a function that cross
+    joins (``crossJoin``, or ``join`` without keys) never names one.
+    Distances an operator only orders by, unrounded, stay legal. The
+    DuckDB oracles use ``plans.duck``'s ``d_*`` forms and are not read.
+    Read from the source, so no Spark session is needed."""
+    import ast
+    import glob
+    import os
+
+    fragments = {"l2_dist", "l2_dist_sq", "cosine_sim", "dot"}
+    fragments |= {f"s_{f}" for f in fragments}
+    scorers = {
+        ("knn", "score_side"), ("dedup", "_pair_cosine"),
+        ("retrieval", "mmr_select"),
+    }
+
+    def name(node):
+        if isinstance(node, ast.Attribute):
+            return node.attr
+        return node.id if isinstance(node, ast.Name) else None
+
+    def call_name(node):
+        return name(node.func) if isinstance(node, ast.Call) else None
+
+    def rounds(node):
+        """A call of round or s_score, or a SQL f-string with round(."""
+        if isinstance(node, ast.JoinedStr):
+            return any(
+                isinstance(v, ast.Constant) and "round(" in v.value
+                for v in node.values
+            )
+        return call_name(node) in ("round", "s_score")
+
+    def cross_joins(node):
+        if call_name(node) == "crossJoin":
+            return True
+        return (
+            call_name(node) == "join"
+            and len(node.args) < 2
+            and not any(k.arg == "on" for k in node.keywords)
+        )
+
+    pkg = os.path.dirname(os.path.dirname(K.__file__))
+    found = {"rounded": [], "cross-joined": [], "scored": []}
+    for layer in ("operators", "plans"):
+        for path in sorted(glob.glob(os.path.join(pkg, layer, "*.py"))):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            module = os.path.basename(path)[: -len(".py")]
+            for top in tree.body:
+                site = (module, getattr(top, "name", None))
+                if site in scorers:
+                    continue
+                nodes = list(ast.walk(top))
+                named = [n for n in nodes if name(n) in fragments]
+                inside = {
+                    id(d) for r in nodes if rounds(r) for d in ast.walk(r)
+                }
+                if any(id(n) in inside for n in named):
+                    found["rounded"].append(site)
+                if named and any(cross_joins(n) for n in nodes):
+                    found["cross-joined"].append(site)
+                if any(call_name(n) == "s_score" for n in nodes):
+                    found["scored"].append(site)
+    assert found == {"rounded": [], "cross-joined": [], "scored": []}

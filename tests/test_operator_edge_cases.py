@@ -63,7 +63,8 @@ def test_knn_null_distance_ranks_last_not_first(spark):
     corpus = spark.createDataFrame(
         rows, "vec_id: long, embedding: array<float>"
     )
-    out = K.knn(corpus, [0.0, 0.0], k=2).collect()
+    query = spark.createDataFrame([([0.0, 0.0],)], "embedding: array<float>")
+    out = K.knn(corpus, query, k=2).collect()
     ids = [r["vec_id"] for r in out]
     assert ids == [0, 1]  # the NULL row is not in the top-2
 

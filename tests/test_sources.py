@@ -91,9 +91,9 @@ def test_new_session_does_not_reuse_parent_entries(spark):
     assert tables._SCHEMAS[other] is not tables._SCHEMAS[spark]
 
 
-# Building these DataFrames runs no Spark job once the tables are open;
-# q_knn and q_vec_math run exactly one, the head() that fetches their
-# query vector.
+# Building these DataFrames runs no Spark job once the tables are open.
+# The vector queries take their query vector as a broadcast one-row frame,
+# so none of them fetches it while the plan is built.
 BUILD_JOBS = {
     "q_join_broadcast": 0,
     "q_bm25": 0,
@@ -107,8 +107,14 @@ BUILD_JOBS = {
     "q_json_props": 0,
     "q_tfidf": 0,
     "q_knn_join": 0,
-    "q_knn": 1,
-    "q_vec_math": 1,
+    "q_knn": 0,
+    "q_vec_math": 0,
+    "q_knn_cosine": 0,
+    "q_rank_l2": 0,
+    "q_cosine_topk": 0,
+    "q_ann_lsh": 0,
+    "q_ann_rerank": 0,
+    "q_udf_embed_knn": 0,
 }
 
 

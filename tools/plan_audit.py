@@ -23,11 +23,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from create_proposals_using_vector_db_public_spark.plans import QUERIES
 from create_proposals_using_vector_db_public_spark.session import get_spark
 
+# A query vector enters its plan as a one-row broadcast frame, attached to
+# the corpus by operators.knn.score_side's left join (which fails the plan
+# when the row is absent): a nested loop over one build row.
+_QUERY_ROW = {"nested_loop": "1-row query vector broadcast (score_side)"}
+
 # query -> {flag: reason} for intentional uses of a flagged operator.
 # Each entry names a query whose pinned plan signature
 # (tools/plans/SIGNATURES.json) holds the flagged node;
 # tests/test_plans.py checks both directions.
 ALLOW: dict[str, dict[str, str]] = {
+    "q_knn": _QUERY_ROW,
+    "q_knn_cosine": _QUERY_ROW,
+    "q_rank_l2": _QUERY_ROW,
+    "q_vec_math": _QUERY_ROW,
+    "q_cosine_topk": _QUERY_ROW,
+    "q_pq_recall": _QUERY_ROW,
+    "q_ann_lsh": _QUERY_ROW,
+    "q_udf_embed_knn": _QUERY_ROW,
     # brute-force batch kNN IS a broadcast cross product of the tiny
     # query set by design; IVF/LSH/PQ are the plans that avoid it
     "q_knn_join": {"nested_loop": "broadcast query-set cross product"},
@@ -35,7 +48,10 @@ ALLOW: dict[str, dict[str, str]] = {
     "q_stub_knn": {"nested_loop": "single query vector vs corpus"},
     # 1-row broadcast parameter / stats tables crossJoined on purpose
     # (threshold, grid, codebook, global totals) — bounded by construction
-    "q_ann_ivf": {"nested_loop": "1-row query parameter cross join"},
+    "q_ann_ivf": {
+        "nested_loop": "broadcast centroid assignment (ivf_assign) + 1-row "
+        "query vector"
+    },
     "q_semdedup": {
         "nested_loop": "broadcast centroid-assignment cross join "
         "(ivf_assign, ncent = max(32, n//625) scales with the corpus); "
@@ -53,7 +69,10 @@ ALLOW: dict[str, dict[str, str]] = {
         "nested_loop": "broadcast centroid-assignment cross join "
         "(ivf_assign; same plan body as q_semdedup, sqrt ncent)"
     },
-    "q_ann_ivf_kmeans": {"nested_loop": "1-row query parameter"},
+    "q_ann_ivf_kmeans": {
+        "nested_loop": "broadcast centroid assignment (ivf_assign) + 1-row "
+        "query vector"
+    },
     "q_rrf_fusion": {
         "nested_loop": "1-row stub query vector + 1-row corpus stats "
         "broadcast cross joins"
@@ -62,10 +81,7 @@ ALLOW: dict[str, dict[str, str]] = {
         "nested_loop": "1-row BM25 corpus stats (avgdl, n_docs) + 1-row "
         "stub query vector broadcast cross joins"
     },
-    "q_mmr_rerank": {
-        "nested_loop": "1-row query vector; per-step joins against the "
-        "<=5-row selected set (greedy MMR unroll)"
-    },
+    "q_mmr_rerank": {"nested_loop": "1-row query vector"},
     "q_query_expansion": {
         "nested_loop": "1-row corpus-stats broadcast cross joins in both "
         "BM25 passes"
@@ -74,7 +90,8 @@ ALLOW: dict[str, dict[str, str]] = {
         "nested_loop": "1-row pivoted merge-table broadcast cross join"
     },
     "q_ann_rerank": {
-        "nested_loop": "1-row SQ grid + query-codes broadcast cross joins"
+        "nested_loop": "1-row SQ grid, query-codes and query vector "
+        "broadcasts"
     },
     "q_minhash_eval": {
         "nested_loop": "two 1-row metric aggregates cross joined"
