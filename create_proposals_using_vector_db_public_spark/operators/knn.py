@@ -208,6 +208,16 @@ def knn_join(queries_df: DataFrame, corpus_df: DataFrame, k: int) -> DataFrame:
     ).select("query_id", "vec_id", "dist", "rank")
 
 
+def _nearest_centroid() -> Column:
+    """The ``min_by`` key of a centroid argmin, in :func:`nearest_first`'s
+    order: a NULL ``__cdist`` (a NULL vector on either side) last, ties
+    broken by ``centroid_id``. A struct whose first field is NULL sorts
+    before every non-NULL one, hence the leading ``IS NULL`` flag."""
+    return F.struct(
+        F.col("__cdist").isNull(), F.col("__cdist"), F.col("centroid_id")
+    )
+
+
 def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
     """IVF coarse quantization: assign every ``(vec_id, embedding, ...)``
     corpus vector to its nearest ``(centroid_id, centroid_vec)`` centroid.
@@ -239,7 +249,7 @@ def ivf_assign(corpus_df: DataFrame, centroids_df: DataFrame) -> DataFrame:
     best = scored.groupBy("vec_id").agg(
         F.min_by(
             F.struct(F.col("__cdist"), F.col("centroid_id"), *rest),
-            F.struct(F.col("__cdist"), F.col("centroid_id")),
+            _nearest_centroid(),
         ).alias("__best")
     )
     return best.select(
@@ -460,8 +470,7 @@ def pq_assign(
     carried = [F.col("sv").alias("sv")] if keep_sv else []
     best = scored.groupBy("vec_id", "s").agg(
         F.min_by(
-            F.struct(F.col("centroid_id"), *carried),
-            F.struct(F.col("__cdist"), F.col("centroid_id")),
+            F.struct(F.col("centroid_id"), *carried), _nearest_centroid()
         ).alias("__best")
     )
     cols = [F.col("vec_id"), F.col("s"), F.col("__best.centroid_id").alias("code")]

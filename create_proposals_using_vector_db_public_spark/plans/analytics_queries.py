@@ -17,7 +17,7 @@ from ..functions import text as T
 from ..functions.hashing import d_h64, h64
 from ..sources import load_table
 from .duck import d_words
-from ..functions.money import money_double
+from ..functions.money import money_sum, s_units
 from ..operators import retrieval as R
 from ..operators import selection as S
 from .registry import query
@@ -402,7 +402,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("cnt"),
-        money_double(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("total"),
+        money_sum(s_units("o_totalprice", 14, 2), 2).alias("total"),
     )
 
 
@@ -483,7 +483,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = bo.join(bc.hint("merge"), bo.o_custkey == bc.c_custkey)
     return joined.groupBy("c_nationkey").agg(
         F.count("*").alias("order_cnt"),
-        money_double(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("total"),
+        money_sum(s_units("o_totalprice", 14, 2), 2).alias("total"),
     )
 
 

@@ -19,9 +19,11 @@ that exist:
 - q_disjunct_filter  (Q19) OR-of-conjunctions predicate join
 - q_waiting_supplier (Q21) EXISTS + NOT-EXISTS dual correlation
 
-Float discipline (SURVEY §7 trap 5): money accumulates in DECIMAL; the
-only doubles are single per-row products (IEEE-identical on both engines)
-and final divides/rounds performed with identical algebra in the oracle.
+Float discipline (SURVEY §7 trap 5): money sums are exact
+(``functions/money.py``: BIGINT units of the DECIMAL the oracle casts to;
+the ranked or compared sums stay DECIMAL); the only doubles are single
+per-row products (IEEE-identical on both engines) and final
+divides/rounds performed with identical algebra in the oracle.
 """
 
 from __future__ import annotations
@@ -29,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import money_double, revenue_decimal as _rev
+from ..functions.money import (
+    REVENUE_UNITS, money_sum, revenue_decimal as _rev, s_units,
+)
 from ..sources import load_table
 from .registry import query
 
@@ -121,7 +125,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: at 100 TB the scan IS the query. The discount bounds compare
     double-to-double (fixture discounts are exact hundredth doubles;
     oracle casts its literals to DOUBLE so neither engine compares in
-    decimal); the sum accumulates in DECIMAL."""
+    decimal); the sum is exact (``money_sum`` over DECIMAL(18,6) units)."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -133,11 +137,9 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_lines"),
-            money_double(F.sum(
-                    (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                        "decimal(18,6)"
-                    )
-                )).alias("revenue_delta"),
+            money_sum(
+                s_units("l_extendedprice * l_discount", 18, 6), 6
+            ).alias("revenue_delta"),
         )
     )
 
@@ -209,7 +211,7 @@ def q_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.date_format("l_shipdate", "yyyy").alias("l_year"),
         )
-        .agg(money_double(F.sum(_rev())).alias("revenue"))
+        .agg(money_sum(REVENUE_UNITS, 6).alias("revenue"))
     )
 
 
@@ -244,10 +246,10 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is proxied as 10% of retail price × quantity — the *shape* survives:
     a LIKE-filtered part dimension broadcast against the fact table
     (filtering ~13% of parts before the join), profit as a per-row
-    difference of two exact decimals, one orderkey shuffle. Both profit
-    terms are single per-row double products cast to DECIMAL before the
-    order-sensitive sum, with the identical left-associative algebra
-    spelled in the oracle."""
+    difference of two exact DECIMAL(18,6) unit values, one orderkey
+    shuffle. Both profit terms are single per-row double products, taken
+    to DECIMAL(18,6) units before the exact sum, with the identical
+    left-associative algebra spelled in the oracle."""
     li = load_table(spark, sf_dir, "lineitem")
     p = (
         load_table(spark, sf_dir, "part")
@@ -259,9 +261,7 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("nation")
     )
-    cost = (
-        F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
-    ).cast("decimal(18,6)")
+    cost = s_units("0.1D * p_retailprice * l_quantity", 18, 6)
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -271,7 +271,7 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nation", F.date_format("o_orderdate", "yyyy").alias("o_year")
         )
         .agg(
-            money_double(F.sum(_rev() - cost)).alias("sum_profit")
+            money_sum(f"{REVENUE_UNITS} - {cost}", 6).alias("sum_profit")
         )
     )
 
@@ -533,7 +533,7 @@ def q_disjunct_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(branch)
         .agg(
             F.count("*").alias("n_lines"),
-            money_double(F.sum(_rev())).alias("revenue"),
+            money_sum(REVENUE_UNITS, 6).alias("revenue"),
         )
     )
 

@@ -19,7 +19,7 @@ training, each with an exact DuckDB oracle:
                      min/max pruning work on two columns at once
 
 Float-determinism discipline (SURVEY §7 trap 5 + round-2 lessons): every
-aggregate here is a sum of exact integers or decimals; doubles appear
+aggregate here is an exact sum of integers or money units; doubles appear
 only in a final deterministic division + round(+0.0) applied identically
 on both sides.
 """
@@ -33,7 +33,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..sources import load_table
 from .duck import d_words
-from ..functions.money import money_double
+from ..functions.money import money_sum, s_units
 from .registry import query
 
 _WORDS = d_words()
@@ -270,8 +270,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptively; at 100 TB you pre-salt keys you *know* are hot (null
     keys, default accounts) rather than waiting for runtime detection.
 
-    Money sums accumulate in DECIMAL so the result is order-independent
-    across the salted (re-ordered) reduce."""
+    The money sum is exact (``money_sum``), so the result is
+    order-independent across the salted (re-ordered) reduce."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     c_rep = c.select(
         "c_custkey",
@@ -290,7 +290,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("c_nationkey").agg(
         F.count("*").alias("n_orders"),
-        money_double(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("total_price"),
+        money_sum(s_units("o_totalprice", 14, 2), 2).alias("total_price"),
     )
 
 

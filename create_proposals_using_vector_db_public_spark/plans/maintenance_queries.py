@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import money_double, revenue_decimal
+from ..functions.money import REVENUE_UNITS, money_sum, s_units
 from ..sources import load_table
 from .registry import query
 
@@ -140,8 +140,8 @@ def q_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the stats table is |zones| rows (one aggregate), the kept
     list broadcasts into the main scan as a semi-join — the engine-level
-    equivalent of dynamic file pruning. Revenue uses the decimal money-sum
-    discipline so the value hash holds at any scale. The required
+    equivalent of dynamic file pruning. Revenue is an exact money sum
+    (``money_sum``) so the value hash holds at any scale. The required
     clustering itself is q_zorder_layout / repartitionByRange — stats
     over a random layout provably skip nothing (tests/test_maintenance.py
     pins both behaviors)."""
@@ -162,7 +162,7 @@ def q_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= _ZONE_LO) & (F.col("l_shipdate") <= _ZONE_HI)
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        money_double(F.sum(revenue_decimal())).alias("revenue"),
+        money_sum(REVENUE_UNITS, 6).alias("revenue"),
     )
     counts = z.agg(F.count(F.lit(1)).alias("n_zones")).crossJoin(
         kept.agg(F.count(F.lit(1)).alias("n_zones_scanned"))
@@ -348,7 +348,7 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     then combines with q_incremental_agg's partial-merge pattern."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
-        F.col("o_totalprice").cast("decimal(14,2)").alias("p"),
+        F.expr(s_units("o_totalprice", 14, 2)).alias("p"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o_old = o.filter(F.col("o_orderkey") % 101 != 0)
@@ -366,7 +366,7 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         view = view.unionByName(t)
     return view.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        money_double(F.sum("p")).alias("total_price"),
+        money_sum("p", 2).alias("total_price"),
     )
 
 

@@ -14,10 +14,12 @@ of a general engine expects, each chosen for a distinct plan pattern:
 - q_priority_mix  (Q12) join then conditional counts
 - q_market_share  (Q8)  multiway star join + share-of-total ratio
 
-Float discipline (SURVEY §7 trap 5): every money aggregate accumulates in
-DECIMAL so comparisons/equality can never flip on summation order; the only
-doubles are single per-row products (IEEE-identical on both engines) and
-one final divide/round performed with identical algebra in the oracle.
+Float discipline (SURVEY §7 trap 5): every money aggregate is exact, so
+comparisons/equality can never flip on summation order: a compared or
+windowed sum stays DECIMAL, a reported one is ``functions/money.py``'s
+BIGINT-unit sum. The only doubles are single per-row products
+(IEEE-identical on both engines) and one final divide/round performed with
+identical algebra in the oracle.
 """
 
 from __future__ import annotations
@@ -25,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import money_double, revenue_decimal as _rev
+from ..functions.money import (
+    REVENUE_UNITS, money_double, money_sum, revenue_decimal as _rev, s_units,
+)
 from ..operators import selection as S
 from ..sources import load_table
 from .registry import query
@@ -200,7 +204,7 @@ def q_cust_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the literal "never ordered" form is vacuous at small SF — a recency
     window keeps the anti-join non-trivial at every SF: 5/55/646 rows),
     grouped by segment. The scalar-average subquery becomes a 1-row
-    broadcast cross join (avg derived from exact decimal sum / count with
+    broadcast cross join (avg derived from an exact money sum / count with
     one double divide, identical algebra in the oracle); the NOT EXISTS
     becomes a left-anti join on custkey. At scale: the anti-join is the
     only shuffle — the threshold filter runs before it, so only wealthy
@@ -209,8 +213,7 @@ def q_cust_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     thr = c.filter(F.col("c_acctbal") > 0.0).agg(
         (
-            money_double(F.sum(F.col("c_acctbal").cast("decimal(14,2)")))
-            / F.count("*")
+            money_sum(s_units("c_acctbal", 14, 2), 2) / F.count("*")
         ).alias("avg_bal")
     )
     o_keys = (
@@ -228,7 +231,7 @@ def q_cust_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_cust"),
-            money_double(F.sum(F.col("c_acctbal").cast("decimal(14,2)"))).alias("total_bal"),
+            money_sum(s_units("c_acctbal", 14, 2), 2).alias("total_bal"),
         )
     )
 
@@ -261,8 +264,8 @@ GROUP BY ship_month
 def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: percent of revenue from PROMO parts, per ship
     month. Conditional aggregation — one scan, one broadcast join against
-    part, both the numerator and denominator accumulate as exact decimals
-    in the same groupBy, and the percentage is one double divide per group
+    part, both the numerator and denominator are exact money sums in the
+    same groupBy, and the percentage is one double divide per group
     (12 groups). date_format on a TIMESTAMP_NTZ column is timezone-free on
     both engines (SURVEY §7.1 environment lesson)."""
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -270,17 +273,13 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < "1997-01-01")
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    zero = F.lit(0).cast("decimal(18,6)")
+    promo = f"CASE WHEN p_type = 'PROMO' THEN {REVENUE_UNITS} ELSE 0 END"
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
         .agg(
             F.round(
-                100.0
-                * money_double(F.sum(
-                    F.when(F.col("p_type") == "PROMO", _rev()).otherwise(zero)
-                ))
-                / money_double(F.sum(_rev())),
+                100.0 * money_sum(promo, 6) / money_sum(REVENUE_UNITS, 6),
                 6,
             ).alias("promo_share")
         )
@@ -374,7 +373,6 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    zero = F.lit(0).cast("decimal(18,6)")
     joined = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
@@ -387,17 +385,15 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.select(
             F.date_format("o_orderdate", "yyyy").alias("order_year"),
             F.col("supp_nation"),
-            _rev().alias("rev"),
+            F.expr(REVENUE_UNITS).alias("rev"),
         )
         .groupBy("order_year")
         .agg(
             F.round(
-                money_double(F.sum(
-                    F.when(
-                        F.col("supp_nation") == "NATION_1", F.col("rev")
-                    ).otherwise(zero)
-                ))
-                / money_double(F.sum("rev")),
+                money_sum(
+                    "CASE WHEN supp_nation = 'NATION_1' THEN rev ELSE 0 END", 6
+                )
+                / money_sum("rev", 6),
                 6,
             ).alias("mkt_share")
         )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.money import money_double, revenue_decimal
+from ..functions.money import REVENUE, REVENUE_UNITS, money_sum, s_units
 from ..operators import selection as S
 from ..sources import load_table
 from .registry import query
@@ -177,9 +177,7 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").alias("order_cnt"),
-            money_double(
-                F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            ).alias("total_spend"),
+            money_sum(s_units("o_totalprice", 14, 2), 2).alias("total_spend"),
         )
     )
 
@@ -310,33 +308,24 @@ GROUP BY l_returnflag, l_linestatus
 def q_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: the canonical wide-scan aggregation. Partial aggregation
     (map-side combine) means only |groups| x |partitions| rows shuffle —
-    the plan that survives 100x scale unchanged. Money sums accumulate in
-    exact decimals so results are order-independent (see oracle comment)."""
+    the plan that survives 100x scale unchanged. Money sums are exact
+    (``money_sum`` over DECIMAL units, two BIGINT accumulators each), so
+    results are order-independent and equal the oracle's decimal sums."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= "1998-09-02"
     )
-    dqty = F.col("l_quantity").cast("decimal(14,2)")
-    dprice = F.col("l_extendedprice").cast("decimal(14,2)")
-    ddisc = F.col("l_discount").cast("decimal(14,2)")
-    disc_price = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).cast("decimal(18,6)")
-    charge = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
-    ).cast("decimal(18,6)")
+    sum_qty = money_sum(s_units("l_quantity", 14, 2), 2)
+    sum_price = money_sum(s_units("l_extendedprice", 14, 2), 2)
+    sum_disc = money_sum(s_units("l_discount", 14, 2), 2)
+    charge = s_units(f"{REVENUE} * (1 + l_tax)", 18, 6)
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        money_double(F.sum(dqty)).alias("sum_qty"),
-        money_double(F.sum(dprice)).alias("sum_base_price"),
-        money_double(F.sum(disc_price)).alias("sum_disc_price"),
-        money_double(F.sum(charge)).alias("sum_charge"),
-        F.round(money_double(F.sum(dqty)) / F.count("*"), 6).alias("avg_qty"),
-        F.round(money_double(F.sum(dprice)) / F.count("*"), 6).alias(
-            "avg_price"
-        ),
-        F.round(money_double(F.sum(ddisc)) / F.count("*"), 6).alias(
-            "avg_disc"
-        ),
+        sum_qty.alias("sum_qty"),
+        sum_price.alias("sum_base_price"),
+        money_sum(REVENUE_UNITS, 6).alias("sum_disc_price"),
+        money_sum(charge, 6).alias("sum_charge"),
+        F.round(sum_qty / F.count("*"), 6).alias("avg_qty"),
+        F.round(sum_price / F.count("*"), 6).alias("avg_price"),
+        F.round(sum_disc / F.count("*"), 6).alias("avg_disc"),
         F.count("*").alias("count_order"),
     )
 
@@ -576,9 +565,7 @@ def q_date_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("order_cnt"),
-            money_double(
-                F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            ).alias("month_total"),
+            money_sum(s_units("o_totalprice", 14, 2), 2).alias("month_total"),
         )
     )
 
@@ -740,11 +727,9 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same answer."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.groupBy("l_returnflag").agg(
-        money_double(F.sum(F.col("l_quantity").cast("decimal(14,2)"))).alias("sum_qty"),
-        money_double(
-            F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))
-        ).alias("sum_price"),
-        money_double(F.sum(F.col("l_discount").cast("decimal(14,2)"))).alias("sum_disc"),
+        money_sum(s_units("l_quantity", 14, 2), 2).alias("sum_qty"),
+        money_sum(s_units("l_extendedprice", 14, 2), 2).alias("sum_price"),
+        money_sum(s_units("l_discount", 14, 2), 2).alias("sum_disc"),
     )
     return base.unpivot(
         ids=["l_returnflag"],
@@ -849,9 +834,8 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: region/nation/supplier are broadcast (dims); the
     customer⋈orders⋈lineitem chain carries the two real shuffles, with
     the region+date predicates applied before any fact-side join so
-    Catalyst pushes them into the scans. Revenue accumulates in exact
-    decimals (the q_agg_basic discipline) so the hash holds at any
-    scale."""
+    Catalyst pushes them into the scans. Revenue is an exact money sum
+    (the q_agg_basic discipline) so the hash holds at any scale."""
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
@@ -877,7 +861,7 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (facts.c_nationkey == dims.s_nationkey),
     )
     return j.groupBy("n_name").agg(
-        money_double(F.sum(revenue_decimal())).alias("revenue"),
+        money_sum(REVENUE_UNITS, 6).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 

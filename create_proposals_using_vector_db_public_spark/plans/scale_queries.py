@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import d_h64, h64
 from ..functions import vectors as V
-from ..functions.money import money_double
+from ..functions.money import money_double, money_sum, s_units
 from ..operators import selection as S
 from ..sources import load_table
 from .duck import dd
@@ -195,7 +195,7 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
-        money_double(F.sum(F.col("value").cast("decimal(14,2)"))).alias("total_value"),
+        money_sum(s_units("value", 14, 2), 2).alias("total_value"),
     )
 
 

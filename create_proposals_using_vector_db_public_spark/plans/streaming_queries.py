@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import money_double
+from ..functions.money import money_sum, s_units
 from ..sources.tables import _parquet_schema, load_events
 from ..streaming import available_now_to_memory, stream_parquet, watermark_dedup
 from .registry import query
@@ -117,8 +117,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 12h windows every 6h (each event lands in exactly two
     windows) computed by a real streaming query. The oracle replays the
     window assignment arithmetic — window starts are the two 6h-grid
-    points within 12h of the event — and the decimal money-sum discipline
-    keeps the value hash exact at any group size."""
+    points within 12h of the event — and the exact money sum
+    (``money_sum``) keeps the value hash exact at any group size."""
     ev = _events_stream(spark, sf_dir).withColumn(
         "ts_t", F.timestamp_micros(F.col("ts_us"))
     )
@@ -126,7 +126,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts_t", "12 hours", "6 hours"), "event_type"
     ).agg(
         F.count("*").alias("cnt"),
-        money_double(F.sum(F.col("value").cast("decimal(14,2)"))).alias("total_value"),
+        money_sum(s_units("value", 14, 2), 2).alias("total_value"),
     )
     out = available_now_to_memory(agg, output_mode="complete")
     return out.select(
@@ -221,7 +221,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
     agg = joined.groupBy("n_name").agg(
         F.count("*").alias("n_events"),
-        money_double(F.sum(F.col("value").cast("decimal(14,2)"))).alias("total_value"),
+        money_sum(s_units("value", 14, 2), 2).alias("total_value"),
     )
     return available_now_to_memory(agg, output_mode="complete")
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import money_double
+from ..functions.money import money_sum, s_units
 from ..sources import load_table
 from .registry import query
 
@@ -94,7 +94,7 @@ def q_avg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregate joined back on partkey: one partial-agg shuffle over
     (partkey) pairs plus one equi-join — vs. the naive plan's per-row
     re-scan of lineitem. The brand dimension is broadcast. The threshold is
-    computed from exact decimal sums so Spark and DuckDB agree to the last
+    computed from exact money sums so Spark and DuckDB agree to the last
     bit (SURVEY §7 trap 5)."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(
@@ -104,7 +104,7 @@ def q_avg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             0.5
             * (
-                money_double(F.sum(F.col("l_quantity").cast("decimal(14,2)")))
+                money_sum(s_units("l_quantity", 14, 2), 2)
                 / F.count("*")
             )
         ).alias("qty_threshold")
@@ -116,7 +116,7 @@ def q_avg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("p_brand").agg(
         F.round(
-            money_double(F.sum(F.col("l_extendedprice").cast("decimal(14,2)")))
+            money_sum(s_units("l_extendedprice", 14, 2), 2)
             / 7.0,
             6,
         ).alias("avg_yearly")

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import joins as J
-from ..functions.money import money_double
+from ..functions.money import money_sum, s_units
 from ..sources import load_table
 from .registry import query
 
@@ -360,7 +360,7 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotals, and the grand total (TimescaleDB's continuous-aggregate
     hierarchy) via ROLLUP on (year, month). Partial aggregation means the
     shuffle carries |months| × |partitions| rows regardless of table size;
-    revenue accumulates in exact decimals (the q_agg_basic discipline).
+    revenue is an exact money sum (the q_agg_basic discipline).
     At 100 TB the same plan back-fills a materialized rollup table
     incrementally — see q_incremental_agg for the delta-merge half."""
     o = load_table(spark, sf_dir, "orders")
@@ -371,9 +371,7 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rollup("order_year", "order_month")
         .agg(
             F.count("*").alias("order_cnt"),
-            money_double(
-                F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            ).alias("revenue"),
+            money_sum(s_units("o_totalprice", 14, 2), 2).alias("revenue"),
             (
                 F.grouping("order_year") + F.lit(2) * F.grouping("order_month")
             ).cast("bigint").alias("grouping_lvl"),

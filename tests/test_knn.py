@@ -150,6 +150,24 @@ def test_ivf_assign_deterministic_tiebreak(spark):
     assert rows[0]["label"] == "mid"  # carried columns survive the argmin
 
 
+def test_centroid_argmin_puts_null_distances_last(spark):
+    """A NULL centroid vector scores NULL and must lose to every real
+    distance, in both argmins (the oracles order ``cdist`` NULLS LAST)."""
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 0.0])], "vec_id: long, embedding: array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(5, [0.0, 0.0]), (7, None)],
+        "centroid_id: long, centroid_vec: array<double>",
+    )
+    ivf = K.ivf_assign(corpus, cents).collect()
+    assert [(r["centroid_id"], r["centroid_dist"]) for r in ivf] == [(5, 0.0)]
+    subs = corpus.selectExpr("vec_id", "0 AS s", "embedding AS sv")
+    book = cents.selectExpr("0 AS s", "centroid_id", "centroid_vec AS cv")
+    pq = K.pq_assign(subs, book).collect()
+    assert [r["code"] for r in pq] == [5]
+
+
 def test_ensure_parallelism_guard_decisions(spark):
     """The parallelism guard must (a) repartition any under-parallel plan
     up to the session's shuffle parallelism — round 13 removed the old

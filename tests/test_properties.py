@@ -6,12 +6,15 @@ These guard rewrites, not behaviors: if someone "optimizes" one side
 again, the property pins it to the reference formulation.
 """
 
+import math
+
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
 from create_proposals_using_vector_db_public_spark.functions import text as T
 from create_proposals_using_vector_db_public_spark.functions import hashing as H
+from create_proposals_using_vector_db_public_spark.functions import money as M
 from create_proposals_using_vector_db_public_spark.operators import dedup as D
 from create_proposals_using_vector_db_public_spark.operators import selection as S
 
@@ -992,3 +995,70 @@ def test_minhash_dedup_pairs_match_python_reference(spark, docs):
     _check_pairs(
         D.minhash_dedup_pairs(df, threshold=0.5).collect(), "est_jaccard", want
     )
+
+
+def _money_values(p: int, s: int):
+    """Doubles for a DECIMAL(p,s) money column: cents-style exact values,
+    half-unit ties and their neighbours, the fast path's 2^45 edge, the
+    type's 10^(p-s) limit, signed zeros, NaN, ±inf, NULL, any double."""
+    t = 10**s
+    units = st.integers(-(10**12), 10**12)
+    ties = units.map(lambda k: (k + 0.5) / t)
+    edges = [M.FAST_UNITS_LIMIT / t, 10 ** (p - s), 10 ** (p - s) - 1 / t, 10 ** (p - s) - 0.5 / t]
+    edges = [float(v) for e in edges for v in (e, -e)]
+    return st.one_of(
+        units.map(lambda k: k / t),
+        ties,
+        st.tuples(ties, st.sampled_from([-math.inf, math.inf])).map(
+            lambda a: math.nextafter(*a)
+        ),
+        st.tuples(st.sampled_from(edges), st.sampled_from([-math.inf, 0, math.inf]))
+        .map(lambda a: math.nextafter(*a) if a[1] else a[0]),
+        st.sampled_from([0.0, -0.0, math.nan, math.inf, -math.inf, None]),
+        st.floats(),
+    )
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.sampled_from([(14, 2), (18, 6)]).flatmap(
+    lambda ps: st.tuples(
+        st.just(ps),
+        st.lists(st.tuples(st.integers(0, 3), _money_values(*ps)), max_size=40),
+        st.booleans(),
+    )
+))
+def test_money_units_and_sums_equal_the_decimal_cast(spark, case):
+    """``s_units`` is the unscaled value of ``CAST(x AS DECIMAL(p,s))``
+    and ``money_sum`` is ``money_double(F.sum(CAST(x AS DECIMAL(p,s))))``,
+    per group (mixed signs; group 9 all NULL) and over the whole input
+    (empty included). Under ANSI on, values the cast rejects are left
+    out: they fail both forms alike."""
+    (p, s), rows, ansi = case
+    limit = 10 ** (p - s) - 10**-s
+    if ansi:
+        rows = [
+            r for r in rows
+            if r[1] is None or not math.isfinite(r[1]) or abs(r[1]) < limit
+        ]
+    rows += [(9, None), (9, None)] if rows else []
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        df = spark.createDataFrame(rows, "g: int, x: double")
+        dec = f"CAST(x AS DECIMAL({p},{s}))"
+        u = M.s_units("x", p, s)
+        bad = df.select(
+            "x", F.expr(u).alias("u"),
+            F.expr(f"CAST({dec} * {10**s} AS BIGINT)").alias("ref"),
+        ).filter("NOT (u <=> ref)").collect()
+        assert bad == []
+        new = M.money_sum(u, s).alias("new")
+        ref = M.money_double(F.sum(F.expr(dec))).alias("ref")
+        sums = df.groupBy("g").agg(new, ref).unionByName(
+            df.agg(F.lit(-1).alias("g"), new, ref)
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert len(sums) == len({r[0] for r in rows}) + 1
+    for r in sums:
+        assert repr(r["new"]) == repr(r["ref"]), (r["g"], r["new"], r["ref"])
